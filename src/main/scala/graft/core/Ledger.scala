@@ -82,7 +82,8 @@ final class Ledger(path: Path) {
     e
   }
 
-  private def nextSeq(): Long = entries().lastOption.map(_.seq + 1).getOrElse(0L)
+  private def nextSeq(all: Seq[Entry] = entries()): Long =
+    all.lastOption.map(_.seq + 1).getOrElse(0L)
 
   def propose(resource: String, scope: String, packageHash: String,
       position: Option[Position]): Entry = synchronized {
@@ -94,14 +95,16 @@ final class Ledger(path: Path) {
     * (cdf VISION.md:854-856). Idempotent on package hash. */
   def commit(resource: String, scope: String, packageHash: String,
       receiptJson: String): Entry = synchronized {
-    val es = entries().filter(e => e.resource == resource && e.scope == scope)
+    // one parse of the ledger serves both the scope scan and the next seq
+    val all = entries()
+    val es = all.filter(e => e.resource == resource && e.scope == scope)
     if (es.exists(e => e.state == "committed" && e.packageHash == packageHash)) {
       // replay identity: duplicate commit acknowledged, not re-recorded
       es.reverse.find(e => e.state == "committed" && e.packageHash == packageHash).get
     } else {
       require(es.exists(e => e.state == "proposed" && e.packageHash == packageHash),
         s"commit without proposal: $resource/$scope/$packageHash")
-      append(Entry(nextSeq(), resource, scope, "committed", packageHash,
+      append(Entry(nextSeq(all), resource, scope, "committed", packageHash,
         es.reverse.collectFirst {
           case e if e.packageHash == packageHash && e.position.isDefined => e.position.get
         }, Some(receiptJson)))
@@ -117,10 +120,11 @@ final class Ledger(path: Path) {
     * therefore the resume position — becomes the rewound-to entry.
     * Rewinding to a hash never committed in this scope is a State error. */
   def rewind(resource: String, scope: String, toPackageHash: String): Entry = synchronized {
-    val target = entries().find(e => e.resource == resource && e.scope == scope &&
+    val all = entries()
+    val target = all.find(e => e.resource == resource && e.scope == scope &&
       e.state == "committed" && e.packageHash == toPackageHash)
     require(target.isDefined, s"rewind target never committed: $resource/$scope/$toPackageHash")
-    append(Entry(nextSeq(), resource, scope, "rewound", toPackageHash,
+    append(Entry(nextSeq(all), resource, scope, "rewound", toPackageHash,
       target.get.position, target.get.receipt))
   }
 

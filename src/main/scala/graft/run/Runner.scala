@@ -13,12 +13,20 @@ import graft.pkg.PackageWriter
   * SchemaFingerprint → Contract → Normalize → Profile → PackageSink;
   * settle path VISION.md:854-856).
   *
-  * One Spark job per run: scan → validate (split accept/quarantine) →
-  * normalize → dedup (disposition precondition) → package write
-  * (data + quarantine + stats + manifest) → destination write →
-  * receipt verify → ledger commit. Steps 1–3 are narrow map stages;
-  * the only shuffle is the dedup/merge key when the disposition needs
-  * one. Planning does no data I/O (cdf VISION.md:439).
+  * Stages: scan → validate (split accept/quarantine) → normalize →
+  * dedup (disposition precondition) → package write (data + quarantine
+  * + stats + manifest) → destination write → receipt verify → ledger
+  * commit. Steps 1–3 are narrow map stages; the only shuffle is the
+  * dedup/merge key when the disposition needs one. Planning does no
+  * data I/O (cdf VISION.md:439).
+  *
+  * SQL executions of an Append or Replace run: the package data write
+  * (observing count, content hash, stats and the cursor max), the
+  * quarantine write (observing its count), the one-row stats write,
+  * the destination write (the run's only read of the package), and the
+  * receipt probe of the destination. Merge and CdcApply add the
+  * touched-bucket lookup over the package and read it again in the
+  * bucketed apply.
   */
 object Runner {
 
@@ -26,6 +34,9 @@ object Runner {
     * layout. Readers of the logical table drop it (the receipt probe
     * does); it exists so merges prune to touched buckets. */
   val MergeBucketCol = "__mbucket"
+
+  /** Name of the cursor-max aggregate observed by the package write. */
+  private val CursorMax = "__cursor_max"
 
   /** Test-only chaos kill-points (cdf: crates/cdf-conformance/src/
     * runtime_chaos/ injects faults between pipeline stages). The spec
@@ -192,10 +203,24 @@ object Runner {
     //    derived from the byte/row targets alone, so planning needs NO
     //    pre-count (a second full source scan) and NO repartition
     //    shuffle; the recording is written AFTER the write from actual
-    //    counters (outside identity — jobs invariance).
+    //    counters (outside identity — jobs invariance). The write also
+    //    observes the cursor max for step 5, typed by the cursor
+    //    column's domain: timestamps/dates become epoch micros (lag in
+    //    ms → µs); numeric cursors stay in their own units with the lag
+    //    subtracted raw (non-timestamp watermark domains, SURVEY §7.4.3).
+    val cursorAgg = cfg.descriptor.cursor.filter(_ => cfg.positionOverride.isEmpty).map { c =>
+      import org.apache.spark.sql.types._
+      val (maxExpr, lagUnits) = deduped.schema(c.field).dataType match {
+        case TimestampType | TimestampNTZType | DateType =>
+          (unix_micros(max(col(c.field)).cast(TimestampType)), c.lagMs * 1000L)
+        case _ => (max(col(c.field)).cast(LongType), c.lagMs)
+      }
+      (c.field, maxExpr.as(CursorMax), lagUnits)
+    }
     val mrpf = graft.core.Segmentation.maxRecordsPerFile(cfg.approxRowBytes)
     val pkg = PackageWriter.write(deduped, Some(quarantined), pkgDir,
-      cfg.descriptor.id, planHash = fingerprint, maxRecordsPerFile = mrpf)
+      cfg.descriptor.id, planHash = fingerprint, maxRecordsPerFile = mrpf,
+      extraAggs = cursorAgg.map(_._2).toSeq)
     val segRecording = graft.core.Segmentation.Recording(
       pkg.segments, pkg.rows, pkg.rows * cfg.approxRowBytes,
       graft.core.Segmentation.Targets())
@@ -212,34 +237,22 @@ object Runner {
         e.state == "committed" && e.packageHash == pkg.packageHash)
     priorCommit.foreach { prior =>
       return RunResult(pkg.packageHash, pkg.rows, pkg.quarantined,
-        PackageWriter.Receipt("parquet:" + destDir, pkg.rows, PackageWriter.contentHash(
-          spark.read.parquet(s"$pkgDir/data"))),
+        PackageWriter.Receipt("parquet:" + destDir, pkg.rows, pkg.contentHash),
         committed = true, duplicate = true,
         prior.position.map(Position.fromJson),
         schemaFingerprint = fingerprint, segments = segRecording.segments)
     }
 
-    // 5. cursor position: window-close = max(observed) − lag. Typed by
-    //    the cursor column's domain: timestamps/dates become epoch
-    //    micros (lag in ms → µs); numeric cursors stay in their own
-    //    units with the lag subtracted raw (non-timestamp watermark
-    //    domains, SURVEY §7.4.3).
-    val packaged = spark.read.parquet(s"$pkgDir/data")
-    val position = cfg.positionOverride.orElse(cfg.descriptor.cursor.flatMap { c =>
-      import org.apache.spark.sql.types._
-      val (maxExpr, lagUnits) = packaged.schema(c.field).dataType match {
-        case TimestampType | TimestampNTZType =>
-          (unix_micros(max(col(c.field)).cast(TimestampType)), c.lagMs * 1000L)
-        case DateType =>
-          (unix_micros(max(col(c.field)).cast(TimestampType)), c.lagMs * 1000L)
-        case _ => (max(col(c.field)).cast(LongType), c.lagMs)
-      }
-      val row = packaged.agg(maxExpr).head()
-      if (row.isNullAt(0)) None
-      else Some(Position.Cursor(c.field, row.getLong(0) - lagUnits): Position)
+    // 5. cursor position: window-close = max(observed) − lag.
+    val position = cfg.positionOverride.orElse(cursorAgg.flatMap { case (field, _, lagUnits) =>
+      Option(pkg.observed(CursorMax)).map(m =>
+        Position.Cursor(field, m.asInstanceOf[Long] - lagUnits): Position)
     })
 
     ledger.propose(cfg.descriptor.id, scope, pkg.packageHash, position)
+
+    // the run's one read of the package: the destination write's input
+    val packaged = PackageWriter.readData(spark, pkg)
 
     // 6. destination write per disposition. Replace goes through the
     //    atomic swap — never delete-then-insert (cdf VISION.md:927).
@@ -383,13 +396,9 @@ object Runner {
         val marked = probeData.join(
           broadcast(del.withColumn("__gdel", lit(1L))), keys, "left")
         val r = marked
-          .select(xxhash64(dataCols.map(col): _*)
-              .cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("__h"),
-            coalesce(col("__gdel"), lit(0L)).as("__d"))
-          .agg(count(lit(1)), sum(col("__h")), sum(col("__d"))).head()
-        (r.getLong(0),
-          if (r.isNullAt(1)) "0" else r.getDecimal(1).toBigInteger.toString,
-          if (r.isNullAt(2)) 0L else r.getLong(2))
+          .agg(count(lit(1)), sum(PackageWriter.rowHash(dataCols)),
+            sum(coalesce(col("__gdel"), lit(0L)))).head()
+        (r.getLong(0), PackageWriter.hashAt(r, 1), if (r.isNullAt(2)) 0L else r.getLong(2))
       case None =>
         val (c, h) = PackageWriter.countAndHash(probeData)
         (c, h, 0L)

@@ -114,14 +114,9 @@ object CdcLogRunner {
         val pkgDir = s"$outDir/unit_${u.unitId}"
         val pkg = PackageWriter.write(slice, None, pkgDir, resource,
           planHash = s"cdc-unit-${u.unitId}:${u.fromTx}-${u.toTx}")
-        val written = spark.read.parquet(s"$pkgDir/data")
-        ledger.propose(resource, scope(resource), pkg.packageHash,
-          Some(Position.Cursor(txCol, u.toTx)))
-        val receipt = PackageWriter.Receipt(s"parquet:$pkgDir/data", pkg.rows,
-          pkg.contentHash)
-        require(PackageWriter.verifyReceipt(written, receipt),
-          s"cdc unit ${u.unitId} receipt verify failed")
-        ledger.commit(resource, scope(resource), pkg.packageHash, receipt.toJsonString)
+        DrainEpoch.settle(ledger, resource, scope(resource), pkg,
+          PackageWriter.readBack(spark, pkg),
+          Some(Position.Cursor(txCol, u.toTx)), s"cdc unit ${u.unitId}")
         results += UnitResult(u.unitId, u.fromTx, u.toTx, pkg.rows, pkg.packageHash)
         delivered += 1
       }
@@ -176,10 +171,9 @@ object CdcLogRunner {
       val statAggs =
         if (withStats) graft.operators.StatsOps.statsAggs(dataCols) else Seq.empty
       val agg = written
-        .select(col("*"), xxhash64(dataCols.map(col): _*)
-          .cast(org.apache.spark.sql.types.DecimalType(38, 0)).as("__h"))
         .groupBy("__unit")
-        .agg(count(lit(1)).as("__rows"), (sum(col("__h")).as("__hash_sum") +: statAggs): _*)
+        .agg(count(lit(1)).as("__rows"),
+          (sum(PackageWriter.rowHash(dataCols)).as("__hash_sum") +: statAggs): _*)
       (agg, dataCols)
     }
     val (fused, dataCols) = groupedCountHashStats(withStats = true)

@@ -67,6 +67,16 @@ object DrainEpoch {
       lagMs: Long,
       maxEpochs: Int)
 
+  /** Settle a written package: propose it at `position`, require its
+    * read-back to match the receipt the write observed, then commit. */
+  private[streaming] def settle(ledger: Ledger, resource: String, scope: String,
+      pkg: PackageWriter.PackageResult, rb: PackageWriter.ReadBack,
+      position: Option[Position], what: String): Unit = {
+    ledger.propose(resource, scope, pkg.packageHash, position)
+    require(rb.matches, s"$what receipt verify failed")
+    ledger.commit(resource, scope, pkg.packageHash, rb.receipt.toJsonString)
+  }
+
   /** Drain `batches` (one DataFrame per arrival window, simulating the
     * source's delivery order) through epochs with watermark advance. */
   def drain(spark: SparkSession, cfg: Config, batches: Seq[DataFrame],
@@ -96,25 +106,20 @@ object DrainEpoch {
           cfg.resource, planHash = s"epoch-$epoch")
 
         // safe frontier: committed position only from ADMITTED data,
-        // window-close = max(event_time) − lag
-        val admitted = spark.read.parquet(s"$pkgDir/data")
-        val maxRow = admitted.agg(max(col(cfg.eventTimeCol)).cast("timestamp")).head()
+        // window-close = max(event_time) − lag; the max comes from the
+        // same scan of the written package that checks its receipt
+        val rb = PackageWriter.readBack(spark, pkg,
+          Seq(max(col(cfg.eventTimeCol)).cast("timestamp")))
         val newFrontier =
-          if (maxRow.isNullAt(0)) frontier
+          if (rb.extras.isNullAt(0)) frontier
           else {
-            val closeUs = maxRow.getTimestamp(0).getTime * 1000L - cfg.lagMs * 1000L
+            val closeUs = rb.extras.getTimestamp(0).getTime * 1000L - cfg.lagMs * 1000L
             // monotone: the frontier never regresses
             Some(frontier.fold(closeUs)(math.max(_, closeUs)))
           }
 
-        val scope = s"stream:${cfg.resource}/epoch:$epoch"
-        ledger.propose(cfg.resource, scope, pkg.packageHash,
-          newFrontier.map(Position.Cursor(cfg.eventTimeCol, _)))
-        val receipt = PackageWriter.Receipt(s"parquet:$pkgDir/data", pkg.rows,
-          pkg.contentHash)
-        require(PackageWriter.verifyReceipt(admitted, receipt),
-          s"epoch $epoch receipt verify failed")
-        ledger.commit(cfg.resource, scope, pkg.packageHash, receipt.toJsonString)
+        settle(ledger, cfg.resource, s"stream:${cfg.resource}/epoch:$epoch", pkg, rb,
+          newFrontier.map(Position.Cursor(cfg.eventTimeCol, _)), s"epoch $epoch")
         frontier = newFrontier
 
         val rec = recapture.persist()
@@ -136,15 +141,9 @@ object DrainEpoch {
       val pkgDir = s"$outDir/epoch_$epoch"
       val pkg = PackageWriter.write(rest, None, pkgDir, cfg.resource,
         planHash = s"epoch-$epoch-carryover-flush")
-      val admitted = spark.read.parquet(s"$pkgDir/data")
-      val scope = s"stream:${cfg.resource}/epoch:$epoch"
-      ledger.propose(cfg.resource, scope, pkg.packageHash,
-        frontier.map(Position.Cursor(cfg.eventTimeCol, _)))
-      val receipt = PackageWriter.Receipt(s"parquet:$pkgDir/data", pkg.rows,
-        pkg.contentHash)
-      require(PackageWriter.verifyReceipt(admitted, receipt),
-        s"carryover flush receipt verify failed")
-      ledger.commit(cfg.resource, scope, pkg.packageHash, receipt.toJsonString)
+      settle(ledger, cfg.resource, s"stream:${cfg.resource}/epoch:$epoch", pkg,
+        PackageWriter.readBack(spark, pkg),
+        frontier.map(Position.Cursor(cfg.eventTimeCol, _)), "carryover flush")
       rest.unpersist()
       results += EpochResult(epoch, lastWm, pkg.rows, 0, 0, pkg.packageHash, frontier)
     }

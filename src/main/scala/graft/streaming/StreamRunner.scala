@@ -65,20 +65,15 @@ object StreamRunner {
             val pkgDir = s"$outDir/epoch_$epochId"
             val pkg = PackageWriter.write(admit, Some(quarantine), pkgDir,
               resource, planHash = s"stream-epoch-$epochId")
-            val admitted = spark.read.parquet(s"$pkgDir/data")
-            val maxRow = admitted.agg(max(col(eventTimeCol)).cast("timestamp")).head()
-            if (!maxRow.isNullAt(0)) {
-              val closeUs = maxRow.getTimestamp(0).getTime * 1000L - lagMs * 1000L
+            // one scan of the written package: receipt check + frontier max
+            val rb = PackageWriter.readBack(spark, pkg,
+              Seq(max(col(eventTimeCol)).cast("timestamp")))
+            if (!rb.extras.isNullAt(0)) {
+              val closeUs = rb.extras.getTimestamp(0).getTime * 1000L - lagMs * 1000L
               frontier = Some(frontier.fold(closeUs)(math.max(_, closeUs)))
             }
-            val scope = s"stream:$resource/epoch:$epochId"
-            ledger.propose(resource, scope, pkg.packageHash,
-              frontier.map(graft.core.Position.Cursor(eventTimeCol, _)))
-            val receipt = PackageWriter.Receipt(s"parquet:$pkgDir/data",
-              pkg.rows, pkg.contentHash)
-            require(PackageWriter.verifyReceipt(admitted, receipt),
-              s"epoch $epochId receipt verify failed")
-            ledger.commit(resource, scope, pkg.packageHash, receipt.toJsonString)
+            DrainEpoch.settle(ledger, resource, s"stream:$resource/epoch:$epochId", pkg, rb,
+              frontier.map(graft.core.Position.Cursor(eventTimeCol, _)), s"epoch $epochId")
             val rec = recapture.persist()
             val n = rec.count()
             carryover.foreach(_.unpersist()) // consumed into this epoch
@@ -99,15 +94,9 @@ object StreamRunner {
       val pkgDir = s"$outDir/epoch_${epoch}_flush"
       val pkg = PackageWriter.write(rest, None, pkgDir, resource,
         planHash = s"stream-epoch-$epoch-carryover-flush")
-      val admitted = spark.read.parquet(s"$pkgDir/data")
-      val scope = s"stream:$resource/epoch:$epoch"
-      ledger.propose(resource, scope, pkg.packageHash,
-        frontier.map(graft.core.Position.Cursor(eventTimeCol, _)))
-      val receipt = PackageWriter.Receipt(s"parquet:$pkgDir/data", pkg.rows,
-        pkg.contentHash)
-      require(PackageWriter.verifyReceipt(admitted, receipt),
-        "stream carryover flush receipt verify failed")
-      ledger.commit(resource, scope, pkg.packageHash, receipt.toJsonString)
+      DrainEpoch.settle(ledger, resource, s"stream:$resource/epoch:$epoch", pkg,
+        PackageWriter.readBack(spark, pkg),
+        frontier.map(graft.core.Position.Cursor(eventTimeCol, _)), "stream carryover flush")
       rest.unpersist()
       results += DrainEpoch.EpochResult(epoch, lastWm.orNull, pkg.rows, 0, 0,
         pkg.packageHash, frontier)
