@@ -474,14 +474,17 @@ object Bench {
     // verbatim; (b) trailing output after the line ([success], Spark
     // shutdown noise) — the line is printed AFTER spark.stop() with the
     // log level forced off, and build.sbt suppresses sbt's [success]
-    // epilogue, so this is the LAST stdout line of the run.
+    // epilogue, so this is the LAST stdout line of the run. It is
+    // printed in a `finally`, so a throwing stop cannot lose it.
     val line = s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"queries_spread":$qSpread,"derived":$derived,$fpJson,"sf":"$sfDir"}"""
     val full = s"""{"metric":"total","value":${f(total)},"unit":"sec","order":"sweep_then_derived","queries":$qs,"queries_spread":$qSpread,"derived":$derived,"derived_spread":$derivedSpread,"host_load":$loadJson,"kernel_lanes":$laneJson,$fpJson,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.sparkContext.setLogLevel("OFF")
-    spark.stop()
-    println(line)
-    System.out.flush()
+    try spark.stop()
+    finally {
+      println(line)
+      System.out.flush()
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Scan-parallelism spread gate (guide §2.2/§6). The driver-generated
   * testdata ships every table as ONE parquet row group, and a row group
@@ -33,15 +33,28 @@ object Par {
     * once and reused, so they carry whatever properties the thread
     * that first grew the pool had (stale labels, broken cancellation).
     * Here the workers are created at submit time from the calling
-    * (correctly labeled) thread and the pool dies with the call. */
+    * (correctly labeled) thread and the pool dies with the call.
+    *
+    * The pool holds `min(work.size, defaultParallelism)` threads (the
+    * active session's, else the host's core count): more concurrent
+    * driver actions than task slots only queue in the scheduler.
+    *
+    * A failure does not cancel the other jobs. The call waits for
+    * every submitted job to finish, then rethrows the first failure in
+    * submission order, so no job is still running (e.g. still writing
+    * into a directory a retry will overwrite) once the call returns. */
   def awaitAll[T](work: Seq[() => T]): Seq[T] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(work.size, 1))
+    val slots = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(Runtime.getRuntime.availableProcessors)(_.sparkContext.defaultParallelism)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(work.size, slots)))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       val fs = work.map(w => Future(w()))
-      fs.map(Await.result(_, Duration.Inf))
+      fs.foreach(Await.ready(_, Duration.Inf))
+      fs.map(_.value.get.get)
     } finally pool.shutdown()
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.core.CanonicalJson._
-import graft.core.GraftError
+import graft.core.{GraftError, Par}
 import graft.operators.StatsOps
 
 /** Hash-addressed run package: the evidence directory that makes a
@@ -35,9 +35,11 @@ import graft.operators.StatsOps
   * Evidence is observed, not re-read: the data write carries one
   * `Dataset.observe` that yields row count, content hash and the stats
   * profile; the quarantine write observes its own count. The package is
-  * read back at most once, by its consumer: the destination write in
-  * `Runner`, or [[readBack]] (count + hash vs the observed receipt) in
-  * the streaming and CDC runners.
+  * read back at most once, by its consumer: the bucketed Merge/CdcApply
+  * apply in `Runner`, or [[readBack]] (count + hash vs the observed
+  * receipt) in the streaming and CDC runners. An Append or Replace
+  * `Runner` never reads it: it lands the `data/` part files by file and
+  * probes the destination.
   */
 object PackageWriter {
 
@@ -92,9 +94,18 @@ object PackageWriter {
     * `stats/` profile (plus `extraAggs`, returned in `observed`) from
     * the rows as they are written; `stats/` is written from that
     * observed row and the quarantine count is observed on the
-    * quarantine write. Nothing is read back here: the caller's one
-    * read of `data/` (a destination write or [[readBack]]) checks the
-    * written bytes against these observed values.
+    * quarantine write. Nothing is read back here: the caller checks
+    * the written bytes against these observed values, through
+    * [[readBack]] or through the receipt probe of a destination the
+    * `data/` files were landed in.
+    *
+    * After the data write, the one-row `stats/` write and the
+    * quarantine write run concurrently ([[Par.awaitAll]]): the stats
+    * row needs only the data write's observation, and the stats job is
+    * almost all fixed per-job floor that the quarantine job's tasks
+    * hide. The data and quarantine writes stay sequential: both are
+    * CPU-bound scans of the same source, so running them together
+    * only splits the same cores between them.
     *
     * `maxRecordsPerFile = 0` leaves the writer's file sizing alone;
     * a positive value caps rows per written file (segmentation with no
@@ -116,17 +127,20 @@ object PackageWriter {
     (if (maxRecordsPerFile > 0L) w.option("maxRecordsPerFile", maxRecordsPerFile)
      else w).parquet(dataDir)
 
-    val qRows = quarantine.fold(0L) { q =>
+    val r = awaitMetrics(evidence, dir)
+    val statIdx = 0 +: (2 to statAggs.length)
+    val writeStats = () => {
+      spark.createDataFrame(java.util.List.of(Row.fromSeq(statIdx.map(r.get))),
+          StructType(statIdx.map(r.schema(_))))
+        .write.mode("overwrite").parquet(s"$dir/stats")
+      0L
+    }
+    val writeQuarantine = () => quarantine.fold(0L) { q =>
       val qObs = Observation()
       q.observe(qObs, count(lit(1)).as("rows")).write.mode("overwrite").parquet(s"$dir/quarantine")
       awaitMetrics(qObs, s"$dir quarantine").getLong(0)
     }
-
-    val r = awaitMetrics(evidence, dir)
-    val statIdx = 0 +: (2 to statAggs.length)
-    spark.createDataFrame(java.util.List.of(Row.fromSeq(statIdx.map(r.get))),
-        StructType(statIdx.map(r.schema(_))))
-      .write.mode("overwrite").parquet(s"$dir/stats")
+    val Seq(_, qRows) = Par.awaitAll(Seq(writeStats, writeQuarantine))
     val extras = (statAggs.length + 1 until r.length).map(i => r.schema(i).name -> r.get(i)).toMap
 
     val segments = {

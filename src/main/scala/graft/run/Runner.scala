@@ -1,5 +1,6 @@
 package graft.run
 
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,13 +21,16 @@ import graft.pkg.PackageWriter
   * dedup/merge key when the disposition needs one. Planning does no
   * data I/O (cdf VISION.md:439).
   *
-  * SQL executions of an Append or Replace run: the package data write
-  * (observing count, content hash, stats and the cursor max), the
-  * quarantine write (observing its count), the one-row stats write,
-  * the destination write (the run's only read of the package), and the
-  * receipt probe of the destination. Merge and CdcApply add the
-  * touched-bucket lookup over the package and read it again in the
-  * bucketed apply.
+  * SQL executions of an Append or Replace run, four in all: the
+  * package data write (observing count, content hash, stats and the
+  * cursor max); the quarantine write (observing its count) and the
+  * one-row stats write, which run concurrently; and the receipt probe,
+  * which reads the destination with the package's written schema (no
+  * schema-inference job). Landing the package into the destination is
+  * a file-level step, not a SQL execution: the package's `data/` part
+  * files are copied in ([[land]]), so the package is never decoded or
+  * re-encoded. Merge and CdcApply read the package instead: the
+  * touched-bucket lookup over it, then the bucketed apply.
   */
 object Runner {
 
@@ -128,25 +132,44 @@ object Runner {
   def readDest(spark: SparkSession, destDir: String): DataFrame =
     spark.read.parquet(destDir).drop(MergeBucketCol)
 
-  /** Replace-by-swap with no missing-table window: write temp, move
-    * the current dest ASIDE (rename, atomic on HDFS/posix), move temp
-    * into place, then delete the old generation. A crash between the
-    * two renames leaves dest.__old intact for recovery — a reader sees
-    * the old table or the new one, never an absent one
-    * (cdf VISION.md:927 "never delete-then-insert"). */
-  def swapWrite(spark: SparkSession, df: DataFrame, destDir: String): Unit = {
-    val tmp = s"$destDir.__swap"
-    df.write.mode("overwrite").parquet(tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val destPath = new org.apache.hadoop.fs.Path(destDir)
-    val oldPath = new org.apache.hadoop.fs.Path(s"$destDir.__old")
-    fs.delete(oldPath, true) // clear any leftover from a prior crash
+  /** Land a package's rows into `targetDir` by file: each `data/part-*`
+    * file is copied in under a `_landing-<name>` name, which readers
+    * skip like any `_`-prefixed file, then renamed into place. The
+    * destination receives exactly the bytes the package's evidence
+    * describes, with no Spark job, and never shows a partial file. */
+  def land(spark: SparkSession, pkg: PackageWriter.PackageResult, targetDir: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val data = new Path(s"${pkg.dir}/data")
+    val target = new Path(targetDir)
+    val srcFs = data.getFileSystem(conf)
+    val fs = target.getFileSystem(conf)
+    fs.mkdirs(target)
+    srcFs.listStatus(data).map(_.getPath).filter(_.getName.startsWith("part-")).foreach { src =>
+      val tmp = new Path(target, s"_landing-${src.getName}")
+      require(FileUtil.copy(srcFs, src, fs, tmp, false, true, conf), s"landing failed: could not copy $src")
+      require(fs.rename(tmp, new Path(target, src.getName)),
+        s"landing failed: could not move $tmp into place")
+    }
+  }
+
+  /** Replace-by-swap with no missing-table window: land the package in
+    * a temp dir, move the current dest ASIDE (rename, atomic on
+    * HDFS/posix), move temp into place, then delete the old generation.
+    * A crash between the two renames leaves dest.__old intact for
+    * recovery — a reader sees the old table or the new one, never an
+    * absent one (cdf VISION.md:927 "never delete-then-insert"). */
+  def swapLand(spark: SparkSession, pkg: PackageWriter.PackageResult, destDir: String): Unit = {
+    val tmp = new Path(s"$destDir.__swap")
+    val destPath = new Path(destDir)
+    val oldPath = new Path(s"$destDir.__old")
+    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(tmp, true) // clear any leftover from a prior crash
+    land(spark, pkg, tmp.toString)
+    fs.delete(oldPath, true)
     val hadPrior = fs.exists(destPath)
     if (hadPrior) require(fs.rename(destPath, oldPath),
       s"swap failed: could not move $destPath aside")
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), destPath),
-      s"swap failed: could not move $tmp into place")
+    require(fs.rename(tmp, destPath), s"swap failed: could not move $tmp into place")
     if (hadPrior) fs.delete(oldPath, true)
   }
 
@@ -251,11 +274,13 @@ object Runner {
 
     ledger.propose(cfg.descriptor.id, scope, pkg.packageHash, position)
 
-    // the run's one read of the package: the destination write's input
-    val packaged = PackageWriter.readData(spark, pkg)
+    // Merge and CdcApply read the package (with its written schema);
+    // Append and Replace land its files and never read it
+    lazy val packaged = PackageWriter.readData(spark, pkg)
 
-    // 6. destination write per disposition. Replace goes through the
-    //    atomic swap — never delete-then-insert (cdf VISION.md:927).
+    // 6. destination write per disposition. Append and Replace land the
+    //    package's files; Replace lands them through the atomic swap —
+    //    never delete-then-insert (cdf VISION.md:927).
     //    Merge and CdcApply do NOT full-rewrite: their destination is
     //    laid out hash-bucketed by the key (pmod(xxhash64(keys),
     //    mergeBuckets) as a partition column), so an incremental run
@@ -348,9 +373,9 @@ object Runner {
 
     cfg.descriptor.disposition match {
       case Descriptor.Disposition.Append =>
-        packaged.write.mode("append").parquet(destDir)
+        land(spark, pkg, destDir)
       case Descriptor.Disposition.Replace =>
-        swapWrite(spark, packaged, destDir)
+        swapLand(spark, pkg, destDir)
       case Descriptor.Disposition.Merge(keys) =>
         bucketedApply(keys, packaged.select(keys.map(col): _*), packaged)
       case Descriptor.Disposition.CdcApply(keys, opCol) =>
@@ -382,13 +407,17 @@ object Runner {
     //      stage-sized delete set) — must be zero.
     //    (The previous shape scanned the destination twice — countAndHash
     //    then a verifyReceipt re-read recomputing the identical pair.)
+    //    Append and Replace read with the package's written schema: no
+    //    footer-inference job, and a destination file whose columns
+    //    differ reads as nulls (a hash mismatch) or fails the read.
     ChaosHooks.beforeReceiptProbe.foreach(_(destDir))
-    val probeDf = mergeTouched match {
-      case Some(touched) => spark.read.parquet(destDir)
-        .filter(col(MergeBucketCol).isin(touched.map(Int.box): _*))
-      case None => spark.read.parquet(destDir)
+    val probeData = (cfg.descriptor.disposition, mergeTouched) match {
+      case (Descriptor.Disposition.Append | Descriptor.Disposition.Replace, _) =>
+        spark.read.schema(pkg.schema).parquet(destDir)
+      case (_, Some(touched)) => spark.read.parquet(destDir)
+        .filter(col(MergeBucketCol).isin(touched.map(Int.box): _*)).drop(MergeBucketCol)
+      case _ => readDest(spark, destDir)
     }
-    val probeData = probeDf.drop(MergeBucketCol)
     val (destRows, destHash, deletedSurvivors) = cdcDeletedKeys match {
       case Some(del) =>
         val keys = del.columns.toSeq

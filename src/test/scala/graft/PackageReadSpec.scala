@@ -21,21 +21,24 @@ import graft.streaming.{DrainEpoch, StreamRunner}
 
 /** Guards on how often the load path reads its own packages, and on
   * what it leaves cached. The package write observes its evidence, so
-  * each package is read back at most once: by the destination write in
-  * `Runner`, by the receipt read-back in the drain runners. Package
-  * reads pass the written schema, so none launches a Parquet
+  * each package is read back at most once: never by an Append or
+  * Replace `Runner.run`, which lands the package's files by file; once
+  * by the receipt read-back in the drain runners. Package and receipt
+  * probe reads pass the written schema, so none launches a Parquet
   * schema-inference job. */
 class PackageReadSpec extends SparkSpec {
 
-  /** Counts, per package directory under `root`, the SQL executions
-    * whose plan reads its `data/` or `quarantine/`, and counts
+  /** Counts the SQL executions, and per package directory under `root`
+    * the ones whose plan reads its `data/` or `quarantine/`, and counts
     * schema-inference jobs: RDD-API jobs (`parallelize` outside any
     * SQL operator) such as Parquet's footer-merging job. */
   private final class Recorder(root: String) extends SparkListener with QueryExecutionListener {
     val reads = new ConcurrentHashMap[String, Integer]()
+    val executions = new AtomicInteger
     val inferenceJobs = new AtomicInteger
 
-    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
+      executions.incrementAndGet()
       qe.optimizedPlan.collect { case l: LogicalRelation => l.relation }
         .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toUri.getPath) }
         .flatten
@@ -43,8 +46,10 @@ class PackageReadSpec extends SparkSpec {
         .map(p => p.substring(0, p.lastIndexOf('/')))
         .distinct
         .foreach(dir => reads.merge(dir, 1, (a, b) => a + b))
+    }
 
-    override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit = ()
+    override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit =
+      executions.incrementAndGet()
 
     override def onJobStart(e: SparkListenerJobStart): Unit =
       if (e.stageInfos.exists(_.rddInfos.exists(_.scope.exists(s =>
@@ -130,14 +135,22 @@ class PackageReadSpec extends SparkSpec {
     finally s.close()
   }
 
-  test("Runner.run(Append) reads its package once (the destination write), with no schema inference") {
+  test("Runner.run(Append) never reads its package (it lands by file), with no schema inference") {
     val base = tmpDir()
     val (r, rec) = recorded(base)(runAppend(base, cursor = None))
     assert(r.committed && !r.duplicate)
-    assert(rec.readCounts == Map(s"$base/pkg" -> 1))
-    // the one inference job is the receipt probe's read of the
-    // destination, which is not a package
-    assert(rec.inferenceJobs.get == 1)
+    assert(rec.readCounts.isEmpty)
+    // the receipt probe reads the destination with the package's schema
+    assert(rec.inferenceJobs.get == 0)
+  }
+
+  test("Runner.run(Append) runs exactly 4 SQL executions") {
+    val base = tmpDir()
+    val (r, rec) = recorded(base)(runAppend(base, cursor = None))
+    assert(r.committed)
+    // the package data write, the quarantine write, the stats write and
+    // the receipt probe; landing the package is not a SQL execution
+    assert(rec.executions.get == 4)
   }
 
   test("Runner.run with a cursor takes the cursor max from the package write, not a package scan") {
@@ -147,8 +160,8 @@ class PackageReadSpec extends SparkSpec {
     val maxUs = events(500, 1700000000L, 0).filter(col("value") <= 600)
       .agg(max(unix_micros(col("ts")))).head().getLong(0)
     assert(r.position.contains(graft.core.Position.Cursor("ts", maxUs - 1000L * 1000L)))
-    assert(rec.readCounts == Map(s"$base/pkg" -> 1))
-    assert(rec.inferenceJobs.get == 1)
+    assert(rec.readCounts.isEmpty)
+    assert(rec.inferenceJobs.get == 0)
   }
 
   test("StreamRunner reads each epoch package once, with no schema inference") {

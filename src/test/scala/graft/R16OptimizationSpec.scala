@@ -39,6 +39,29 @@ class R16OptimizationSpec extends SparkSpec {
       s"pool threads lost the driver's job label: ${seen.asScala.toSeq}")
   }
 
+  test("Par.awaitAll: a failure is rethrown only after every job ends, on at most defaultParallelism threads") {
+    import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+    val slots = spark.sparkContext.defaultParallelism
+    val running = new AtomicInteger
+    val peak = new AtomicInteger
+    val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    val slowEnded = new AtomicBoolean(false)
+    def tracked(body: => Long): () => Long = () => {
+      threads.add(Thread.currentThread)
+      peak.accumulateAndGet(running.incrementAndGet(), math.max)
+      try body finally running.decrementAndGet()
+    }
+    val work = Seq(
+      tracked(throw new IllegalStateException("planted failure")),
+      tracked { Thread.sleep(500); slowEnded.set(true); 0L }) ++
+      (1 to 3 * slots).map(i => tracked { Thread.sleep(20); i.toLong })
+    val e = intercept[IllegalStateException](graft.core.Par.awaitAll(work))
+    assert(e.getMessage == "planted failure")
+    assert(slowEnded.get, "awaitAll rethrew while the slow job was still running")
+    assert(peak.get <= slots, s"${peak.get} jobs ran at once on $slots slots")
+    assert(threads.size <= slots, s"${threads.size} pool threads for $slots slots")
+  }
+
   test("Scratch: reclaim deletes registered dirs and is re-entrant") {
     val d1 = graft.core.Scratch.dir("graft_spec_reclaim")
     val f = java.nio.file.Paths.get(d1, "x")
