@@ -20,6 +20,33 @@ import java.util.Locale
   * their own in-run stability ratios, so they do not need to go first.
   */
 object Bench {
+  /** Fingerprint of the testdata under `dir`: every regular file in the
+    * tree, as `relative/path:size:mtime`, sorted and MD5-hashed (first
+    * 16 hex digits), with the files' total bytes. A tree with no file
+    * reads `"empty"` and an unreadable one `"error:<exception class>"`,
+    * so neither can pass for the fingerprint of real data. */
+  def testdataFingerprint(dir: String): (String, Long) = {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    try {
+      val root = Paths.get(dir)
+      val st = Files.walk(root)
+      val files: Vector[(String, Path)] =
+        try st.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(p => root.relativize(p).toString -> p).toVector.sortBy(_._1)
+        finally st.close()
+      if (files.isEmpty) ("empty", 0L)
+      else {
+        val desc = files.map { case (rel, p) =>
+          s"$rel:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
+        }.mkString(",")
+        val md = java.security.MessageDigest.getInstance("MD5")
+          .digest(desc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        (md.map("%02x".format(_)).mkString.take(16), files.map(f => Files.size(f._2)).sum)
+      }
+    } catch { case e: Exception => (s"error:${e.getClass.getName}", 0L) }
+  }
+
   def main(args: Array[String]): Unit = {
     // env is the driver contract; args are a local-iteration override
     // (runMain graft.Bench [sfDir] [q_a,q_b] from the sbt shell)
@@ -432,32 +459,10 @@ object Bench {
       "\"" + k + s"""":[${l100(a)},${l100(b)},${l100(c2)},${l100(d)}]"""
     }.mkString("{", ",", "}")
 
-    // testdata fingerprint (per-file name:size:mtime, hashed): lets the
-    // driver flag cross-round totals as comparable or not — the r15
-    // 177.55→248.19 "regression" was regenerated testdata, and nothing
-    // in the artifact said so.
-    val fingerprint = {
-      val dir = java.nio.file.Paths.get(sfDir)
-      val files =
-        try {
-          val st = java.nio.file.Files.list(dir)
-          try {
-            import scala.jdk.CollectionConverters._
-            st.iterator().asScala.filter(p =>
-              java.nio.file.Files.isRegularFile(p)).toVector.sortBy(_.toString)
-          } finally st.close()
-        } catch { case _: Throwable => Vector.empty }
-      val desc = files.map { p =>
-        val sz = try java.nio.file.Files.size(p) catch { case _: Throwable => -1L }
-        val mt = try java.nio.file.Files.getLastModifiedTime(p).toMillis
-                 catch { case _: Throwable => -1L }
-        s"${p.getFileName}:$sz:$mt"
-      }.mkString(",")
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(desc.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      (md.map("%02x".format(_)).mkString.take(16),
-        files.map(p => try java.nio.file.Files.size(p) catch { case _: Throwable => 0L }).sum)
-    }
+    // testdata fingerprint: marks cross-round totals as comparable or
+    // not — the r15 177.55→248.19 "regression" was regenerated
+    // testdata, and nothing in the artifact said so.
+    val fingerprint = testdataFingerprint(sfDir)
     val fpJson = s""""testdata_fingerprint":"${fingerprint._1}","testdata_bytes":${fingerprint._2}"""
 
     // kernel-lane provenance: which fast lanes ran (vector api on, or

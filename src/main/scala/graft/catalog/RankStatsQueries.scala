@@ -606,10 +606,15 @@ object RankStatsQueries {
 
   /** q_spearman's dataflow with each optimization knob explicit, so
     * the shipped configuration is probe-selected (tools/SpearmanProbe)
-    * rather than believed. Every variant computes the same result. */
+    * rather than believed. Every variant computes the same result.
+    *
+    * The one-row result is computed here and returned as a local
+    * frame, so everything the computation persists (the fact
+    * projection, the y histogram, RunningTotals' sorted histograms) is
+    * released before the call returns, also when it throws. */
   private[graft] def spearmanDf(s: SparkSession, d: String,
       spreadFact: Boolean, persistPts: Boolean,
-      hintX: Boolean, yGateRows: Long): DataFrame = {
+      hintX: Boolean, yGateRows: Long): DataFrame = graft.core.CacheScope {
     // spread: the fact pass (two histogram builds + the six-term
     // decimal Pearson aggregate) is CPU-bound and the one-row-group
     // testdata scan would otherwise run it on one core (core/Par)
@@ -617,7 +622,7 @@ object RankStatsQueries {
       (col("l_quantity").cast(DecimalType(12, 2)) * 100).cast("long").as("x"),
       (col("l_extendedprice").cast(DecimalType(12, 2)) * 100).cast("long").as("y"))
     val pts0 = if (spreadFact) graft.core.Par.spread(base) else base
-    val pts = if (persistPts) pts0.persist() else pts0
+    val pts = if (persistPts) graft.core.CacheScope.persist(pts0) else pts0
     def midranks(vCol: String, out: String): DataFrame = {
       val hist = pts.groupBy(vCol).agg(count(lit(1)).as("c"))
       graft.operators.RunningTotals
@@ -634,12 +639,10 @@ object RankStatsQueries {
     // x is hinted unconditionally (bounded domain); y only while its
     // actual cardinality stays under yGateRows — the count runs on the
     // persisted histogram, one tiny extra job.
+    val yh = graft.core.CacheScope.persist(midranks("y", "ry"))
     val xh = midranks("x", "rx")
     val xJ = if (hintX) broadcast(xh) else xh
-    val yJ = {
-      val yh = midranks("y", "ry").persist()
-      if (yh.count() <= yGateRows) broadcast(yh) else yh
-    }
+    val yJ = if (yh.count() <= yGateRows) broadcast(yh) else yh
     val ranked = pts.join(xJ, "x").join(yJ, "y")
     val s6 = ranked.agg(
       count(lit(1)).cast(dec38).as("n"),
@@ -647,11 +650,12 @@ object RankStatsQueries {
       sum(col("rx").cast(dec38) * col("rx").cast(dec38)).as("sxx"),
       sum(col("ry").cast(dec38) * col("ry").cast(dec38)).as("syy"),
       sum(col("rx").cast(dec38) * col("ry").cast(dec38)).as("sxy"))
-    s6.select(
+    val rho = s6.select(
       round((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
         / (sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
           * sqrt((col("n") * col("syy") - col("sy") * col("sy")).cast("double"))), 6)
         .as("spearman_rho"))
+    s.createDataFrame(java.util.List.of(rho.head()), rho.schema)
   }
 
   val topkPerGroup: QueryDef = QueryDef.sqlBacked(

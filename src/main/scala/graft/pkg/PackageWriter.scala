@@ -7,7 +7,12 @@ import java.util.concurrent.TimeoutException
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, StructType}
 
@@ -28,9 +33,10 @@ import graft.operators.StatsOps
   *
   * Identity discipline: Parquet bytes are NOT stable across writers,
   * so the manifest hashes canonical LOGICAL content — a partition-
-  * order-independent content hash (sum of per-row xxhash64 mod 2^63)
-  * plus row/column counts — making package identity invariant to
-  * partitioning ("jobs invariance", cdf docs/performance-envelope.md:103).
+  * order-independent content hash (the exact DECIMAL(38,0) sum of
+  * per-row xxhash64, see [[rowHash]]) plus row/column counts — making
+  * package identity invariant to partitioning ("jobs invariance", cdf
+  * docs/performance-envelope.md:103).
   *
   * Evidence is observed, not re-read: the data write carries one
   * `Dataset.observe` that yields row count, content hash and the stats
@@ -92,20 +98,20 @@ object PackageWriter {
   /** Write the package in ONE pass over `df`. An [[Observation]] on the
     * data write collects the row count, the content hash and the
     * `stats/` profile (plus `extraAggs`, returned in `observed`) from
-    * the rows as they are written; `stats/` is written from that
-    * observed row and the quarantine count is observed on the
-    * quarantine write. Nothing is read back here: the caller checks
-    * the written bytes against these observed values, through
-    * [[readBack]] or through the receipt probe of a destination the
-    * `data/` files were landed in.
+    * the rows as they are written; the quarantine write observes its
+    * own count. Nothing is read back here: the caller checks the
+    * written bytes against these observed values, through [[readBack]]
+    * or through the receipt probe of a destination the `data/` files
+    * were landed in.
     *
-    * After the data write, the one-row `stats/` write and the
-    * quarantine write run concurrently ([[Par.awaitAll]]): the stats
-    * row needs only the data write's observation, and the stats job is
-    * almost all fixed per-job floor that the quarantine job's tasks
-    * hide. The data and quarantine writes stay sequential: both are
-    * CPU-bound scans of the same source, so running them together
-    * only splits the same cores between them.
+    * The data write and the quarantine write are independent scans of
+    * the same source and run concurrently ([[Par.awaitAll]]): each
+    * job is mostly fixed per-job floor, which the other's tasks hide.
+    * Both end before `write` returns or throws. `stats/` is written
+    * after them, on the driver, from the data write's observed row: one
+    * row through Spark's own Parquet writer ([[writeStats]]), with no
+    * Spark job. The manifest is written last, so a failed write leaves
+    * neither `stats/` nor `manifest.json`.
     *
     * `maxRecordsPerFile = 0` leaves the writer's file sizing alone;
     * a positive value caps rows per written file (segmentation with no
@@ -114,25 +120,18 @@ object PackageWriter {
       resource: String, planHash: String,
       maxRecordsPerFile: Long = 0L, extraAggs: Seq[Column] = Nil): PackageResult = {
     val dataDir = s"$dir/data"
-    val spark = df.sparkSession
 
     val statCols = df.schema.fields.filter(f => StatTypes(f.dataType.typeName)).map(_.name).toSeq
     // row_count first, the hash sum second, then the per-column profile
     // and the caller's aggregates
     val statAggs = StatsOps.statsAggs(statCols)
     val evidence = Observation()
-    val w = df.observe(evidence, statAggs.head,
-      (sum(rowHash(df.columns.toSeq)).as("__hash_sum") +: statAggs.tail) ++ extraAggs: _*)
-      .write.mode("overwrite")
-    (if (maxRecordsPerFile > 0L) w.option("maxRecordsPerFile", maxRecordsPerFile)
-     else w).parquet(dataDir)
-
-    val r = awaitMetrics(evidence, dir)
-    val statIdx = 0 +: (2 to statAggs.length)
-    val writeStats = () => {
-      spark.createDataFrame(java.util.List.of(Row.fromSeq(statIdx.map(r.get))),
-          StructType(statIdx.map(r.schema(_))))
-        .write.mode("overwrite").parquet(s"$dir/stats")
+    val writeData = () => {
+      val w = df.observe(evidence, statAggs.head,
+        (sum(rowHash(df.columns.toSeq)).as("__hash_sum") +: statAggs.tail) ++ extraAggs: _*)
+        .write.mode("overwrite")
+      (if (maxRecordsPerFile > 0L) w.option("maxRecordsPerFile", maxRecordsPerFile)
+       else w).parquet(dataDir)
       0L
     }
     val writeQuarantine = () => quarantine.fold(0L) { q =>
@@ -140,7 +139,12 @@ object PackageWriter {
       q.observe(qObs, count(lit(1)).as("rows")).write.mode("overwrite").parquet(s"$dir/quarantine")
       awaitMetrics(qObs, s"$dir quarantine").getLong(0)
     }
-    val Seq(_, qRows) = Par.awaitAll(Seq(writeStats, writeQuarantine))
+    val Seq(_, qRows) = Par.awaitAll(Seq(writeData, writeQuarantine))
+
+    val r = awaitMetrics(evidence, dir)
+    val statIdx = 0 +: (2 to statAggs.length)
+    writeStats(df.sparkSession, s"$dir/stats", Row.fromSeq(statIdx.map(r.get)),
+      StructType(statIdx.map(r.schema(_))))
     val extras = (statAggs.length + 1 until r.length).map(i => r.schema(i).name -> r.get(i)).toMap
 
     val segments = {
@@ -151,6 +155,31 @@ object PackageWriter {
 
     writeManifest(dir, resource, planHash, r.getLong(0), qRows, df.columns.toSeq, hashAt(r, 1),
       segments).copy(schema = df.schema, observed = extras)
+  }
+
+  /** Overwrite `statsDir` with one Parquet file holding `row`, written
+    * on the driver through the writer a DataFrame write uses (same
+    * schema conversion, Spark metadata, timestamp type and codec), with
+    * no Spark job. The file is written under a `_`-prefixed name, which
+    * Spark's file listing skips, then renamed to `part-00000<ext>`. */
+  private def writeStats(spark: SparkSession, statsDir: String, row: Row,
+      schema: StructType): Unit = {
+    val sqlConf = spark.sessionState.conf
+    val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
+    val ctx = new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+    val ext = factory.getFileExtension(ctx)
+    val out = new Path(statsDir)
+    val fs = out.getFileSystem(job.getConfiguration)
+    fs.delete(out, true)
+    val staged = new Path(out, s"_part-00000$ext")
+    val writer = factory.newInstance(staged.toString, schema, ctx)
+    try writer.write(CatalystTypeConverters.createToCatalystConverter(schema)(row)
+      .asInstanceOf[InternalRow])
+    finally writer.close()
+    if (!fs.rename(staged, new Path(out, s"part-00000$ext")))
+      throw GraftError.State(s"package stats: could not rename $staged into place")
   }
 
   /** A written package's `data/`, read with the schema it was written

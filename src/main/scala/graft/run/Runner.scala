@@ -21,14 +21,15 @@ import graft.pkg.PackageWriter
   * dedup/merge key when the disposition needs one. Planning does no
   * data I/O (cdf VISION.md:439).
   *
-  * SQL executions of an Append or Replace run, four in all: the
+  * SQL executions of an Append or Replace run, three in all: the
   * package data write (observing count, content hash, stats and the
-  * cursor max); the quarantine write (observing its count) and the
-  * one-row stats write, which run concurrently; and the receipt probe,
-  * which reads the destination with the package's written schema (no
-  * schema-inference job). Landing the package into the destination is
-  * a file-level step, not a SQL execution: the package's `data/` part
-  * files are copied in ([[land]]), so the package is never decoded or
+  * cursor max) and the quarantine write (observing its count), which
+  * run concurrently; and the receipt probe, which reads the destination
+  * with the package's written schema (no schema-inference job). The
+  * one-row `stats/` file is written on the driver, not by a SQL
+  * execution. Landing the package into the destination is a file-level
+  * step, not a SQL execution either: the package's `data/` part files
+  * are copied in ([[land]]), so the package is never decoded or
   * re-encoded. Merge and CdcApply read the package instead: the
   * touched-bucket lookup over it, then the bucketed apply.
   */

@@ -7,33 +7,17 @@ import java.util.Locale
   * shipped configuration from measurement, not belief).
   *
   * runMain graft.tools.SpearmanProbe <sfDir> [reps]
-  * runMain graft.tools.SpearmanProbe <sfDir> plans <outDir>
-  *   — dump before (r15 shipped: spread+persist, both hists hinted
-  *     unconditionally) and after (r16 shipped) formatted plans.
+  *
+  * `spearmanDf` computes its one-row result eagerly, so the formatted
+  * plans of the r15 and r16 shapes are kept as the committed
+  * `plans/r16/q_spearman_{before,after}.txt` rather than re-dumped.
   */
 object SpearmanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val reps = args.lift(1).filterNot(_ == "plans").map(_.toInt).getOrElse(5)
+    val reps = args.lift(1).map(_.toInt).getOrElse(5)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.Sessions.local(cpus, cpus)
-    if (args.lift(1).contains("plans")) {
-      val outDir = args(2)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-      def dump(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(outDir, name), plan)
-        println(s"[spearman] wrote $outDir/$name")
-        spark.catalog.clearCache()
-      }
-      dump("q_spearman_before.txt", // r15 shipped shape
-        graft.catalog.RankStatsQueries.spearmanDf(spark, sfDir,
-          spreadFact = true, persistPts = true, hintX = true, yGateRows = Long.MaxValue))
-      dump("q_spearman_after.txt", // r16 shipped shape (catalog entry)
-        graft.catalog.Catalog.byName("q_spearman").run(spark, sfDir))
-      spark.stop(); return
-    }
     def f(d: Double): String = String.format(Locale.ROOT, "%.2f", Double.box(d))
     val gate = 4L << 20
     val variants: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
@@ -51,13 +35,10 @@ object SpearmanProbe {
         graft.catalog.RankStatsQueries.spearmanDf(spark, sfDir, true, true, false, -1L)))
     variants.foreach { case (name, build) =>
       build().write.format("noop").mode("overwrite").save() // warmup
-      spark.catalog.clearCache()
       val walls = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         build().write.format("noop").mode("overwrite").save()
-        val w = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        w
+        (System.nanoTime() - t0) / 1e9
       }.sorted
       println(s"[spearman] ${name.padTo(34, ' ')} min=${f(walls.head)} " +
         s"med=${f(walls(walls.length / 2))} max=${f(walls.last)}")

@@ -98,6 +98,52 @@ class PackageEvidenceSpec extends SparkSpec {
     finally s.close()
   }
 
+  /** The file names under `dir`, without the local file system's
+    * `.crc` checksum sidecars. */
+  private def listing(dir: String): Seq[String] = {
+    val s = Files.list(Paths.get(dir))
+    try s.iterator().asScala.map(_.getFileName.toString).filterNot(_.startsWith(".")).toSeq.sorted
+    finally s.close()
+  }
+
+  test("stats/ holds exactly one part file and no _-prefixed file after every write") {
+    val df = frame(120)
+    val inputs = Seq(
+      "1 partition" -> df.coalesce(1), "7 partitions" -> df.repartition(7),
+      "limit(0)" -> df.limit(0), "filter(false)" -> df.filter(lit(false)),
+      "empty createDataFrame" -> spark.createDataFrame(java.util.List.of[Row](), schema))
+    inputs.foreach { case (label, input) =>
+      val dir = tmpDir()
+      PackageWriter.write(input, Some(input), dir, "stats_files", "p0")
+      val files = listing(s"$dir/stats")
+      assert(files.size == 1 && files.head.startsWith("part-"), s"$label: $files")
+      // a second write into the same package directory overwrites stats/
+      PackageWriter.write(df, None, dir, "stats_files", "p1")
+      assert(listing(s"$dir/stats").size == 1, label)
+      assert(spark.read.parquet(s"$dir/stats").head().getAs[Long]("row_count") == 120L, label)
+    }
+  }
+
+  test("a quarantine write that fails at run time fails write only after the data write ended, with no stats or manifest") {
+    val dir = tmpDir()
+    // each row sleeps, so the data write outlasts the failing quarantine
+    // write that runs beside it
+    val slow = udf((l: Long) => { Thread.sleep(2L); l })
+    val data = frame(400).repartition(4).withColumn("l", slow(col("l")))
+    // the exchange keeps the optimizer from evaluating the projection
+    // over the local rows at planning time: the fault fires in a task
+    val quarantine = frame(40).repartition(2).select(col("l"),
+      when(col("l").isNotNull, raise_error(lit("planted quarantine fault"))).as("boom"))
+    val err = intercept[Exception](PackageWriter.write(data, Some(quarantine), dir, "qfail", "p0"))
+    val messages = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null && m.contains("planted quarantine fault")), err)
+    // the data write had committed when the failure surfaced
+    assert(Files.exists(Paths.get(dir, "data", "_SUCCESS")))
+    assert(spark.read.parquet(s"$dir/data").count() == 400)
+    assert(!Files.exists(Paths.get(dir, "manifest.json")))
+    assert(!Files.exists(Paths.get(dir, "stats")) || partFiles(s"$dir/stats").isEmpty)
+  }
+
   test("the read-back rejects a package whose data part-file was deleted after the write") {
     val dir = tmpDir()
     val pkg = PackageWriter.write(frame(200).repartition(4), None, dir, "damaged", "p0")

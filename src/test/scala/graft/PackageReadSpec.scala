@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
@@ -10,12 +10,13 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.contract.{ContractPolicy, RowRule}
 import graft.core.{Descriptor, Ledger}
+import graft.pkg.PackageWriter
 import graft.run.Runner
 import graft.streaming.{DrainEpoch, StreamRunner}
 
@@ -29,16 +30,20 @@ import graft.streaming.{DrainEpoch, StreamRunner}
 class PackageReadSpec extends SparkSpec {
 
   /** Counts the SQL executions, and per package directory under `root`
-    * the ones whose plan reads its `data/` or `quarantine/`, and counts
-    * schema-inference jobs: RDD-API jobs (`parallelize` outside any
-    * SQL operator) such as Parquet's footer-merging job. */
+    * the ones whose plan reads its `data/` or `quarantine/`, records the
+    * output path of every file write, and counts schema-inference jobs:
+    * RDD-API jobs (`parallelize` outside any SQL operator) such as
+    * Parquet's footer-merging job. */
   private final class Recorder(root: String) extends SparkListener with QueryExecutionListener {
     val reads = new ConcurrentHashMap[String, Integer]()
     val executions = new AtomicInteger
+    val writes = new ConcurrentLinkedQueue[String]()
     val inferenceJobs = new AtomicInteger
 
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
       executions.incrementAndGet()
+      qe.analyzed.collect { case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toUri.getPath }
+        .foreach(writes.add)
       qe.optimizedPlan.collect { case l: LogicalRelation => l.relation }
         .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toUri.getPath) }
         .flatten
@@ -144,13 +149,27 @@ class PackageReadSpec extends SparkSpec {
     assert(rec.inferenceJobs.get == 0)
   }
 
-  test("Runner.run(Append) runs exactly 4 SQL executions") {
+  test("Runner.run(Append) runs exactly 3 SQL executions") {
     val base = tmpDir()
     val (r, rec) = recorded(base)(runAppend(base, cursor = None))
     assert(r.committed)
-    // the package data write, the quarantine write, the stats write and
-    // the receipt probe; landing the package is not a SQL execution
-    assert(rec.executions.get == 4)
+    // the package data write, the quarantine write and the receipt
+    // probe; `stats/` is written on the driver and landing the package
+    // is a file-level step, neither a SQL execution
+    assert(rec.executions.get == 3)
+  }
+
+  test("PackageWriter.write runs 2 SQL executions with a quarantine frame, 1 without, none writing stats/") {
+    val src = events(200, 1700000000L, 0)
+    Seq(Some(src.filter(col("value") > 150)) -> 2, None -> 1).foreach { case (quarantine, n) =>
+      val dir = tmpDir()
+      val (_, rec) = recorded(dir)(PackageWriter.write(src, quarantine, dir, "writes", "p0"))
+      assert(rec.executions.get == n, s"quarantine = ${quarantine.isDefined}")
+      // the SQL executions write data/ and quarantine/ only; stats/ is
+      // written on the driver
+      assert(rec.writes.asScala.toSeq.sorted == Seq(s"$dir/data", s"$dir/quarantine").take(n))
+      assert(spark.read.parquet(s"$dir/stats").count() == 1)
+    }
   }
 
   test("Runner.run with a cursor takes the cursor max from the package write, not a package scan") {

@@ -8,6 +8,7 @@ class R16OptimizationSpec extends SparkSpec {
 
   test("spearman: every probe knob combination computes the same rho") {
     val d = sf()
+    spark.catalog.clearCache()
     val combos = for {
       spread <- Seq(true, false)
       persist <- Seq(true, false)
@@ -17,7 +18,8 @@ class R16OptimizationSpec extends SparkSpec {
     val rhos = combos.map { case (sp, pe, hx, g) =>
       val r = graft.catalog.RankStatsQueries
         .spearmanDf(spark, d, sp, pe, hx, g).head().getDouble(0)
-      spark.catalog.clearCache()
+      // the persisted projection and histogram are released by the call
+      assert(spark.sharedState.cacheManager.isEmpty, s"cache left by ${(sp, pe, hx, g)}")
       r
     }
     assert(rhos.distinct.size == 1,
@@ -97,5 +99,40 @@ class R16OptimizationSpec extends SparkSpec {
     assert(rows.nonEmpty)
     assert(rows.map(_.getInt(0)).toSeq == rows.map(_.getInt(0)).toSeq.sorted)
     assert(rows.forall(_.getLong(1) > 0L))
+  }
+
+  test("CacheScope releases what it persisted, newest first, also when the block throws") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.storage.StorageLevel
+    spark.catalog.clearCache()
+    val outside = graft.core.CacheScope.persist(spark.range(10).toDF("id"))
+    var inside = Seq.empty[DataFrame]
+    intercept[IllegalStateException](graft.core.CacheScope {
+      val a = graft.core.CacheScope.persist(spark.range(100).toDF("id"))
+      val b = graft.core.CacheScope.persist(a.filter("id > 5"))
+      inside = Seq(a, b)
+      assert(b.count() == 94L && inside.forall(_.storageLevel != StorageLevel.NONE))
+      throw new IllegalStateException("planted")
+    })
+    assert(inside.size == 2 && inside.forall(_.storageLevel == StorageLevel.NONE))
+    // the persist made outside any scope is left to its caller
+    assert(outside.storageLevel != StorageLevel.NONE)
+    outside.unpersist()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
+
+  test("Bench testdata fingerprint walks the tree and marks an empty or unreadable one") {
+    val root = java.nio.file.Files.createTempDirectory("graft_fp")
+    assert(graft.Bench.testdataFingerprint(root.toString) == ("empty", 0L))
+    val missing = root.resolve("missing").toString
+    assert(graft.Bench.testdataFingerprint(missing)._1 == "error:java.nio.file.NoSuchFileException")
+    val table = java.nio.file.Files.createDirectories(root.resolve("orders"))
+    java.nio.file.Files.write(table.resolve("part-0.parquet"), Array.fill[Byte](7)(1))
+    val (fp, bytes) = graft.Bench.testdataFingerprint(root.toString)
+    assert(fp.length == 16 && fp.forall(Character.digit(_, 16) >= 0) && bytes == 7L)
+    // a file in a nested table directory changes the fingerprint
+    java.nio.file.Files.write(table.resolve("part-1.parquet"), Array.fill[Byte](3)(2))
+    val (fp2, bytes2) = graft.Bench.testdataFingerprint(root.toString)
+    assert(fp2 != fp && bytes2 == 10L)
   }
 }

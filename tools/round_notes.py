@@ -5,22 +5,55 @@ notes must be mechanically derived from the committed artifacts — the
 r15 "certified wins" table quoted a non-shipped run and failed audit).
 
 Usage: tools/round_notes.py <baseline.json> <shipped.json> [names...]
+       tools/round_notes.py --check FILE
 
 Prints markdown: aggregate table, a named-cells table (if names given),
 and the full >10%-delta win/regression lists. Copy-paste into
 OPTIMIZATION_r<k>.md verbatim.
+
+Either artifact may be a bench contract line ({"queries": ...}) or a
+run record that wraps one ({"n", "rc", "cpus", "parsed": {...}}, e.g.
+BENCH_r16_c8.json).
+
+--check FILE exits 1 if FILE still contains a PLACEHOLDER_ marker.
 """
 import json
 import sys
 
 
+def load(path: str) -> dict:
+    """The bench line in `path`, unwrapped from a run record."""
+    try:
+        with open(path) as f:
+            doc = json.load(f)
+    except (OSError, ValueError) as e:
+        sys.exit(f"{path}: {e}")
+    if isinstance(doc, dict) and isinstance(doc.get("parsed"), dict):
+        doc = doc["parsed"]
+    if not isinstance(doc, dict) or not isinstance(doc.get("queries"), dict):
+        sys.exit(f"{path}: no per-query 'queries' map (not a bench line or run record)")
+    return doc
+
+
+def check(path: str) -> int:
+    with open(path) as f:
+        hits = [n for n, line in enumerate(f, 1) if "PLACEHOLDER_" in line]
+    for n in hits:
+        print(f"{path}:{n}: PLACEHOLDER_ marker left", file=sys.stderr)
+    return 1 if hits else 0
+
+
 def main() -> None:
+    if sys.argv[1:2] == ["--check"]:
+        if len(sys.argv) != 3:
+            sys.exit("usage: tools/round_notes.py --check FILE")
+        sys.exit(check(sys.argv[2]))
     base_p, ship_p = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
-    base = json.load(open(base_p))
-    ship = json.load(open(ship_p))
+    base = load(base_p)
+    ship = load(ship_p)
     qb, qs = base["queries"], ship["queries"]
-    sb, ss = base["queries_spread"], ship["queries_spread"]
+    sb, ss = base.get("queries_spread", {}), ship.get("queries_spread", {})
     common = [k for k in qb if k in qs and qb[k] >= 0 and qs[k] >= 0]
 
     print(f"<!-- generated by tools/round_notes.py {base_p} {ship_p} -->")
