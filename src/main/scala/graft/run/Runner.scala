@@ -100,14 +100,12 @@ object Runner {
       partitions: Seq[(String, DataFrame)], baseDir: String,
       ledger: Ledger): (Seq[(String, RunResult)], Option[Position]) = {
     val results = partitions.map { case (pid, df) =>
-      val scopedCfg = cfg.copy(descriptor = cfg.descriptor.copy(
-        id = cfg.descriptor.id))
       val pkgDir = s"$baseDir/pkg_$pid"
       val destDir = s"$baseDir/dest_$pid"
       // reuse the scope machinery by running under a partition-suffixed
-      // resource id; the ledger scope is the partition key
-      val r = run(spark, scopedCfg.copy(descriptor =
-        scopedCfg.descriptor.copy(id = s"${cfg.descriptor.id}/partition:$pid")),
+      // resource id `<id>/partition:<pid>`; the ledger scope stays `root`
+      val r = run(spark, cfg.copy(descriptor =
+        cfg.descriptor.copy(id = s"${cfg.descriptor.id}/partition:$pid")),
         df, pkgDir, destDir, ledger)
       pid -> r
     }

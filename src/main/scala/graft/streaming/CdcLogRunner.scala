@@ -90,6 +90,16 @@ object CdcLogRunner {
 
   private def scope(resource: String): String = s"cdc:$resource"
 
+  /** The last committed unit's `toTx`, or `Long.MinValue` before the
+    * first commit. */
+  private def committedTx(ledger: Ledger, resource: String, txCol: String): Long =
+    ledger.resumePosition(resource, scope(resource)) match {
+      case Some(Position.Cursor(f, v)) =>
+        require(f == txCol, s"cursor field $f does not match tx column $txCol"); v
+      case Some(other) => throw new IllegalStateException(s"unexpected position kind ${other.kind}")
+      case None => Long.MinValue
+    }
+
   /** Deliver every unit past the committed cursor. `killAfterUnits`
     * simulates a crash for the chaos spec: the runner stops cold after
     * N successful unit commits. Returns results for units delivered in
@@ -98,12 +108,7 @@ object CdcLogRunner {
       resource: String, plans: Seq[UnitPlan],
       killAfterUnits: Option[Int] = None): Seq[UnitResult] = {
     val spark = log.sparkSession
-    val resumeTx = ledger.resumePosition(resource, scope(resource)) match {
-      case Some(Position.Cursor(f, v)) =>
-        require(f == txCol, s"cursor field $f does not match tx column $txCol"); v
-      case Some(other) => throw new IllegalStateException(s"unexpected position kind ${other.kind}")
-      case None => Long.MinValue
-    }
+    val resumeTx = committedTx(ledger, resource, txCol)
     val results = Seq.newBuilder[UnitResult]
     var delivered = 0
     plans.iterator
@@ -138,12 +143,7 @@ object CdcLogRunner {
       resource: String, plans: Seq[UnitPlan],
       killAfterUnits: Option[Int] = None): Seq[UnitResult] = {
     val spark = log.sparkSession
-    val resumeTx = ledger.resumePosition(resource, scope(resource)) match {
-      case Some(Position.Cursor(f, v)) =>
-        require(f == txCol, s"cursor field $f does not match tx column $txCol"); v
-      case Some(other) => throw new IllegalStateException(s"unexpected position kind ${other.kind}")
-      case None => Long.MinValue
-    }
+    val resumeTx = committedTx(ledger, resource, txCol)
     val todo = plans.filter(_.toTx > resumeTx)
     if (todo.isEmpty) return Seq.empty
 
@@ -179,7 +179,7 @@ object CdcLogRunner {
     val (fused, dataCols) = groupedCountHashStats(withStats = true)
     val fusedRows = fused.persist().collect()
     val perUnit = fusedRows
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getDecimal(2).toBigInteger.toString))
+      .map(r => r.getInt(0) -> (r.getLong(1), PackageWriter.hashAt(r, 2)))
       .toMap
     // segment-stats manifest from the same pass: tiny cached write,
     // partitioned by segment so a resumed delivery adds its units
@@ -196,7 +196,7 @@ object CdcLogRunner {
     // jobs)
     val (probe, _) = groupedCountHashStats(withStats = false)
     val probed = probe.collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getDecimal(2).toBigInteger.toString))
+      .map(r => r.getInt(0) -> (r.getLong(1), PackageWriter.hashAt(r, 2)))
       .toMap
 
     val results = Seq.newBuilder[UnitResult]

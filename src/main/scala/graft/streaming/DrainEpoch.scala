@@ -13,14 +13,17 @@ import graft.pkg.PackageWriter
   * unbounded source (cdf: crates/cdf-runtime/src/drain_epoch.rs:44-660
   * `DrainEpochController`; VISION.md:366-374).
   *
-  * Spark-first shape: `Trigger.AvailableNow`-style epochs — here an
-  * explicit epoch loop (each epoch = one bounded micro-batch window)
-  * so the controller is testable without a streaming source. Per
-  * epoch: classify late data 3 ways (admit / recapture / quarantine),
-  * union the previous epoch's recaptured carryover, close the window,
-  * write the epoch package, settle, advance the safe frontier
-  * (= only ADMITTED data advances it, cdf execution_extent.rs:619-624),
-  * then gate the next epoch on the ledger commit.
+  * [[Epochs]] is the one epoch step. Per epoch: classify late data 3
+  * ways (admit / recapture / quarantine), union the previous epoch's
+  * recaptured carryover, write the epoch package, settle it through
+  * the ledger against its read-back receipt, advance the safe frontier
+  * (= only ADMITTED data advances it, cdf execution_extent.rs:619-624);
+  * at drain end, flush the last carryover as one more package. Two
+  * drivers feed it: [[drain]], an explicit loop over bounded batches so
+  * the controller is testable without a streaming source, and
+  * [[StreamRunner.drainAvailableNow]], which feeds it micro-batches. A
+  * failed epoch releases the cached carryover before the error leaves
+  * either driver.
   *
   * Closure triggers (drain_epoch.rs:65-100): quiescence (no new rows),
   * max epochs, max rows.
@@ -77,76 +80,86 @@ object DrainEpoch {
     ledger.commit(resource, scope, pkg.packageHash, rb.receipt.toJsonString)
   }
 
+  /** The drain state one epoch step runs against: the previous
+    * epoch's recaptured carryover (cached) and the results so far, whose
+    * last entry holds the safe frontier and the last watermark. Both
+    * drivers run their epochs through it; `planPrefix` + epoch number is
+    * each package's plan hash. */
+  private[streaming] final class Epochs(spark: SparkSession, cfg: Config, planPrefix: String,
+      outDir: String, ledger: Ledger) {
+    private var carryover: Option[DataFrame] = None
+    private val results = scala.collection.mutable.ArrayBuffer.empty[EpochResult]
+    private def frontier = results.lastOption.flatMap(_.frontierUs)
+
+    def epoch(n: Int, batch: DataFrame, wm: Timestamp): Unit = {
+      // Only the NEW batch is classified against the (monotone) watermark.
+      // The previous epoch's recaptured rows are admitted into THIS
+      // epoch's package directly (cdf orchestration.rs:3845-3978):
+      // re-classifying them against a watermark that only advances would
+      // cycle recapture→quarantine and never deliver within-grace data.
+      val (admitNew, recapture, quarantine) =
+        LateData.split(batch, cfg.eventTimeCol, wm, cfg.graceMs)
+      val admit = carryover.map(admitNew.unionByName(_)).getOrElse(admitNew)
+      val pkg = PackageWriter.write(admit, Some(quarantine), s"$outDir/epoch_$n",
+        cfg.resource, planHash = s"$planPrefix$n")
+      // safe frontier: committed position only from ADMITTED data,
+      // window-close = max(event_time) − lag, never regressing; the max
+      // comes from the same scan of the written package that checks its receipt
+      val rb = PackageWriter.readBack(spark, pkg,
+        Seq(max(col(cfg.eventTimeCol)).cast("timestamp")))
+      val newFrontier = if (rb.extras.isNullAt(0)) frontier else {
+        val closeUs = rb.extras.getTimestamp(0).getTime * 1000L - cfg.lagMs * 1000L
+        Some(frontier.fold(closeUs)(math.max(_, closeUs)))
+      }
+      settle(n, pkg, rb, newFrontier, s"epoch $n")
+      release() // consumed into this epoch's package
+      carryover = Some(recapture.persist())
+      val recCount = carryover.get.count()
+      if (recCount == 0) release()
+      results += EpochResult(n, wm, pkg.rows, recCount, pkg.quarantined, pkg.packageHash,
+        newFrontier)
+    }
+
+    /** Drain end: the last epoch's recaptured rows are delivered, never
+      * dropped (cdf orchestration.rs:3845-3978), as one more admitted
+      * package settled like any epoch, in `epoch_<n>_flush`: a later drain
+      * over the same checkpoint starts its batches at `n`. */
+    def finish(): Seq[EpochResult] = {
+      carryover.foreach { rest =>
+        val last = results.last
+        val n = last.epoch + 1
+        val pkg = PackageWriter.write(rest, None, s"$outDir/epoch_${n}_flush", cfg.resource,
+          planHash = s"$planPrefix$n-carryover-flush")
+        settle(n, pkg, PackageWriter.readBack(spark, pkg), frontier, "carryover flush")
+        release()
+        results += EpochResult(n, last.watermark, pkg.rows, 0, 0, pkg.packageHash, frontier)
+      }
+      results.toSeq
+    }
+
+    /** Unpersist the cached carryover, if any. */
+    def release(): Unit = {
+      carryover.foreach(_.unpersist())
+      carryover = None
+    }
+
+    private def settle(n: Int, pkg: PackageWriter.PackageResult, rb: PackageWriter.ReadBack,
+        at: Option[Long], what: String): Unit =
+      DrainEpoch.settle(ledger, cfg.resource, s"stream:${cfg.resource}/epoch:$n", pkg, rb,
+        at.map(Position.Cursor(cfg.eventTimeCol, _)), what)
+  }
+
   /** Drain `batches` (one DataFrame per arrival window, simulating the
     * source's delivery order) through epochs with watermark advance. */
   def drain(spark: SparkSession, cfg: Config, batches: Seq[DataFrame],
       watermarks: Seq[Timestamp], outDir: String, ledger: Ledger): Seq[EpochResult] = {
     require(batches.length == watermarks.length, "one watermark per epoch")
-    var carryover: Option[DataFrame] = None
-    var frontier: Option[Long] = None
-    val results = Seq.newBuilder[EpochResult]
-    var lastWm: Timestamp = null
-    var epochsRun = 0
-
-    batches.zip(watermarks).zipWithIndex.take(cfg.maxEpochs).foreach {
-      case ((batch, wm), epoch) =>
-        // Only the NEW batch is classified against the (monotone) watermark.
-        // The previous epoch's recaptured rows are admitted into THIS
-        // epoch's package directly (cdf orchestration.rs:3845-3978 feeds
-        // carryover into the next epoch's package as admitted rows):
-        // re-classifying them against a watermark that only advances would
-        // cycle recapture→quarantine and never deliver within-grace data.
-        val (admitNew, recapture, quarantine) =
-          LateData.split(batch, cfg.eventTimeCol, wm, cfg.graceMs)
-        val admit = carryover.map(admitNew.unionByName(_)).getOrElse(admitNew)
-        lastWm = wm
-
-        val pkgDir = s"$outDir/epoch_$epoch"
-        val pkg = PackageWriter.write(admit, Some(quarantine), pkgDir,
-          cfg.resource, planHash = s"epoch-$epoch")
-
-        // safe frontier: committed position only from ADMITTED data,
-        // window-close = max(event_time) − lag; the max comes from the
-        // same scan of the written package that checks its receipt
-        val rb = PackageWriter.readBack(spark, pkg,
-          Seq(max(col(cfg.eventTimeCol)).cast("timestamp")))
-        val newFrontier =
-          if (rb.extras.isNullAt(0)) frontier
-          else {
-            val closeUs = rb.extras.getTimestamp(0).getTime * 1000L - cfg.lagMs * 1000L
-            // monotone: the frontier never regresses
-            Some(frontier.fold(closeUs)(math.max(_, closeUs)))
-          }
-
-        settle(ledger, cfg.resource, s"stream:${cfg.resource}/epoch:$epoch", pkg, rb,
-          newFrontier.map(Position.Cursor(cfg.eventTimeCol, _)), s"epoch $epoch")
-        frontier = newFrontier
-
-        val rec = recapture.persist()
-        val recCount = rec.count()
-        carryover.foreach(_.unpersist()) // consumed into this epoch's package
-        carryover = if (recCount > 0) Some(rec) else { rec.unpersist(); None }
-
-        results += EpochResult(epoch, wm, pkg.rows, recCount,
-          pkg.quarantined, pkg.packageHash, frontier)
-        epochsRun += 1
-    }
-
-    // Drain end: recaptured rows from the final epoch must never be
-    // dropped (cdf orchestration.rs:3845-3978 — carryover is delivered,
-    // not discarded). Flush them as one final admitted package, settled
-    // through the ledger like any epoch.
-    carryover.foreach { rest =>
-      val epoch = epochsRun
-      val pkgDir = s"$outDir/epoch_$epoch"
-      val pkg = PackageWriter.write(rest, None, pkgDir, cfg.resource,
-        planHash = s"epoch-$epoch-carryover-flush")
-      settle(ledger, cfg.resource, s"stream:${cfg.resource}/epoch:$epoch", pkg,
-        PackageWriter.readBack(spark, pkg),
-        frontier.map(Position.Cursor(cfg.eventTimeCol, _)), "carryover flush")
-      rest.unpersist()
-      results += EpochResult(epoch, lastWm, pkg.rows, 0, 0, pkg.packageHash, frontier)
-    }
-    results.result()
+    val epochs = new Epochs(spark, cfg, "epoch-", outDir, ledger)
+    try {
+      batches.zip(watermarks).zipWithIndex.take(cfg.maxEpochs).foreach {
+        case ((batch, wm), n) => epochs.epoch(n, batch, wm)
+      }
+      epochs.finish()
+    } finally epochs.release()
   }
 }
