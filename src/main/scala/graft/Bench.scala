@@ -132,13 +132,19 @@ object Bench {
     // A/B across rounds showed single measurements swing 3-5x on sub-2.5s
     // cells). Run 1 additionally pays per-plan codegen, which min discards.
     // Spread [min, median, max] is emitted per cell so no reading hides.
+    // A cell with a throwing rep is listed in "failed" (and the run exits
+    // non-zero): it must never pass as a faster cell.
+    val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = selected.map { q =>
-      val runs = marked(q.name)((1 to 3).map(_ => once(q)).filter(_ >= 0).sorted)
+      val all = marked(q.name)((1 to 3).map(_ => once(q)))
+      val runs = all.filter(_ >= 0).sorted
+      if (runs.length < all.length) failed += q.name
       val cell =
         if (runs.isEmpty) (-1.0, -1.0, -1.0)
         else (runs.head, runs(runs.length / 2), runs.last)
       q.name -> cell
     }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val qs = results.map { case (k, v) => "\"" + k + "\":" + f(v._1) }
       .mkString("{", ",", "}")
     val qSpread = results.map { case (k, v) =>
@@ -480,9 +486,10 @@ object Bench {
     // shutdown noise) — the line is printed AFTER spark.stop() with the
     // log level forced off, and build.sbt suppresses sbt's [success]
     // epilogue, so this is the LAST stdout line of the run. It is
-    // printed in a `finally`, so a throwing stop cannot lose it.
-    val line = s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"queries_spread":$qSpread,"derived":$derived,$fpJson,"sf":"$sfDir"}"""
-    val full = s"""{"metric":"total","value":${f(total)},"unit":"sec","order":"sweep_then_derived","queries":$qs,"queries_spread":$qSpread,"derived":$derived,"derived_spread":$derivedSpread,"host_load":$loadJson,"kernel_lanes":$laneJson,$fpJson,"sf":"$sfDir"}"""
+    // printed in a `finally`, so a throwing stop cannot lose it. A run
+    // with a failed cell exits non-zero after the line is printed.
+    val line = s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs,"queries_spread":$qSpread,"failed":$failedJson,"derived":$derived,$fpJson,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${f(total)},"unit":"sec","order":"sweep_then_derived","queries":$qs,"queries_spread":$qSpread,"failed":$failedJson,"derived":$derived,"derived_spread":$derivedSpread,"host_load":$loadJson,"kernel_lanes":$laneJson,$fpJson,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LOCAL.json"),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.sparkContext.setLogLevel("OFF")
@@ -491,5 +498,6 @@ object Bench {
       println(line)
       System.out.flush()
     }
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

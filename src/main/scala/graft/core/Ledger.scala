@@ -15,10 +15,14 @@ import graft.core.CanonicalJson._
   * Transition lattice per (resource, scope):
   *   proposed → committed (only via a verified receipt)
   *   proposed → abandoned
-  * `commit` without a matching proposal, or double-commit of the same
-  * proposal, is an error. Replay of an already-committed package hash
-  * is acknowledged as duplicate (idempotent), not re-committed
-  * (cdf conformance "replay identity, duplicate: true").
+  * `commit` without a matching proposal is an error. Replay of an
+  * already-committed package hash is acknowledged as duplicate
+  * (idempotent), not re-committed (cdf conformance "replay identity,
+  * duplicate: true").
+  *
+  * Outside this class, main code reaches `propose` and `commit` only
+  * through [[settle]], the one settle step every runner delivers its
+  * packages through.
   */
 final class Ledger(path: Path) {
 
@@ -35,6 +39,10 @@ final class Ledger(path: Path) {
       packageHash: String,
       position: Option[String],
       receipt: Option[String])
+
+  /** Outcome of [[settle]]: the package's committed entry, and whether
+    * it was committed before the call (replay identity). */
+  final class Settled(val entry: Entry, val duplicate: Boolean)
 
   private def renderEntry(e: Entry): String =
     render(JObj.of(
@@ -85,10 +93,29 @@ final class Ledger(path: Path) {
   private def nextSeq(all: Seq[Entry] = entries()): Long =
     all.lastOption.map(_.seq + 1).getOrElse(0L)
 
+  private def scoped(all: Seq[Entry], resource: String, scope: String): Seq[Entry] =
+    all.filter(e => e.resource == resource && e.scope == scope)
+
+  /** The latest committed entry of `packageHash` among one scope's entries. */
+  private def committedIn(es: Seq[Entry], packageHash: String): Option[Entry] =
+    es.findLast(e => e.state == "committed" && e.packageHash == packageHash)
+
+  /** One scope's committed head: the latest committed entry, unless a
+    * later rewind redirects the head to an earlier package. */
+  private def headOf(es: Seq[Entry]): Option[Entry] =
+    es.reverse.collectFirst {
+      case e if e.state == "rewound" => committedIn(es, e.packageHash).get
+      case e if e.state == "committed" => e
+    }
+
+  private def proposeAt(seq: Long, resource: String, scope: String, packageHash: String,
+      position: Option[Position]): Entry =
+    append(Entry(seq, resource, scope, "proposed", packageHash,
+      position.map(p => render(p.toJson)), None))
+
   def propose(resource: String, scope: String, packageHash: String,
       position: Option[Position]): Entry = synchronized {
-    append(Entry(nextSeq(), resource, scope, "proposed", packageHash,
-      position.map(p => render(p.toJson)), None))
+    proposeAt(nextSeq(), resource, scope, packageHash, position)
   }
 
   /** The ONLY path to `committed` — requires a verified receipt
@@ -97,17 +124,44 @@ final class Ledger(path: Path) {
       receiptJson: String): Entry = synchronized {
     // one parse of the ledger serves both the scope scan and the next seq
     val all = entries()
-    val es = all.filter(e => e.resource == resource && e.scope == scope)
-    if (es.exists(e => e.state == "committed" && e.packageHash == packageHash)) {
-      // replay identity: duplicate commit acknowledged, not re-recorded
-      es.reverse.find(e => e.state == "committed" && e.packageHash == packageHash).get
-    } else {
+    val es = scoped(all, resource, scope)
+    // replay identity: duplicate commit acknowledged, not re-recorded
+    committedIn(es, packageHash).getOrElse {
       require(es.exists(e => e.state == "proposed" && e.packageHash == packageHash),
         s"commit without proposal: $resource/$scope/$packageHash")
       append(Entry(nextSeq(all), resource, scope, "committed", packageHash,
         es.reverse.collectFirst {
           case e if e.packageHash == packageHash && e.position.isDefined => e.position.get
         }, Some(receiptJson)))
+    }
+  }
+
+  /** The one settle step: package → destination receipt → commit (cdf
+    * SURVEY §3.1 step 5, VISION.md:854-856). One synchronized read of the
+    * ledger does three things: the replay check (a package already
+    * committed anywhere in the scope's history returns that entry and
+    * appends nothing), the committed-head lookup, and the `proposed`
+    * append at `position`. `deliver(head)` then lands the package and
+    * returns its receipt JSON and whether that receipt verified. A failed
+    * verdict throws [[GraftError.Destination]], leaving the proposal
+    * dangling; a verified receipt is committed. Two ledger parses in all. */
+  def settle(resource: String, scope: String, packageHash: String, position: Option[Position])(
+      deliver: Option[Entry] => (String, Boolean)): Settled = {
+    val proposed = synchronized {
+      val all = entries()
+      val es = scoped(all, resource, scope)
+      committedIn(es, packageHash).toLeft {
+        proposeAt(nextSeq(all), resource, scope, packageHash, position)
+        headOf(es)
+      }
+    }
+    proposed match {
+      case Left(prior) => new Settled(prior, duplicate = true)
+      case Right(head) =>
+        val (receipt, verified) = deliver(head)
+        if (!verified) throw GraftError.Destination(
+          "receipt verification failed — refusing to commit", transient = false)
+        new Settled(commit(resource, scope, packageHash, receipt), duplicate = false)
     }
   }
 
@@ -121,8 +175,7 @@ final class Ledger(path: Path) {
     * Rewinding to a hash never committed in this scope is a State error. */
   def rewind(resource: String, scope: String, toPackageHash: String): Entry = synchronized {
     val all = entries()
-    val target = all.find(e => e.resource == resource && e.scope == scope &&
-      e.state == "committed" && e.packageHash == toPackageHash)
+    val target = committedIn(scoped(all, resource, scope), toPackageHash)
     require(target.isDefined, s"rewind target never committed: $resource/$scope/$toPackageHash")
     append(Entry(nextSeq(all), resource, scope, "rewound", toPackageHash,
       target.get.position, target.get.receipt))
@@ -130,14 +183,8 @@ final class Ledger(path: Path) {
 
   /** One committed head per scope: the latest committed entry, unless a
     * later rewind redirects the head to an earlier package. */
-  def committedHead(resource: String, scope: String): Option[Entry] = {
-    val es = entries().filter(e => e.resource == resource && e.scope == scope)
-    es.reverse.collectFirst {
-      case e if e.state == "rewound" =>
-        es.filter(x => x.state == "committed" && x.packageHash == e.packageHash).last
-      case e if e.state == "committed" => e
-    }
-  }
+  def committedHead(resource: String, scope: String): Option[Entry] =
+    headOf(scoped(entries(), resource, scope))
 
   /** Resume position = head's recorded position (typed). */
   def resumePosition(resource: String, scope: String): Option[Position] =

@@ -1,5 +1,6 @@
 package graft.pkg
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Destination abstraction implementing the commit protocol shape
@@ -41,18 +42,30 @@ object Destinations {
     }
   }
 
-  /** Atomic replace-by-swap: write to `<path>.__swap`, then rename over
-    * the destination. */
-  def replaceBySwap(df: DataFrame, path: String, fmt: Format): Unit = {
-    val spark = df.sparkSession
-    val tmp = s"$path.__swap"
-    fmt.write(df, tmp)
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    val dest = new org.apache.hadoop.fs.Path(path)
-    fs.delete(dest, true)
-    require(fs.rename(new org.apache.hadoop.fs.Path(tmp), dest),
-      s"atomic swap rename failed for $path")
+  /** Replace-by-swap with no missing-table window: `stage` writes the
+    * new generation into `<path>.__swap`; the current table is moved
+    * ASIDE to `<path>.__old` (rename, atomic on HDFS/posix), the new
+    * generation is moved into place, then the old one is deleted. A
+    * crash between the two renames leaves `<path>.__old` intact for
+    * recovery — a reader sees the old table or the new one, never an
+    * absent one (cdf VISION.md:927 "never delete-then-insert"). */
+  def swap(spark: SparkSession, path: String)(stage: String => Unit): Unit = {
+    val tmp = new Path(s"$path.__swap")
+    val dest = new Path(path)
+    val old = new Path(s"$path.__old")
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(tmp, true) // clear any leftover from a prior crash
+    stage(tmp.toString)
+    fs.delete(old, true)
+    val hadPrior = fs.exists(dest)
+    if (hadPrior) require(fs.rename(dest, old), s"swap failed: could not move $dest aside")
+    require(fs.rename(tmp, dest), s"swap failed: could not move $tmp into place")
+    if (hadPrior) fs.delete(old, true)
   }
+
+  /** Atomic replace of the table at `path` with `df`, through [[swap]]. */
+  def replaceBySwap(df: DataFrame, path: String, fmt: Format): Unit =
+    swap(df.sparkSession, path)(fmt.write(df, _))
 
   /** Write + receipt + verify probe in one step: the receipt records
     * what the destination durably holds, and the probe re-reads the

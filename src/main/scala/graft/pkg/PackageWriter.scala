@@ -40,12 +40,13 @@ import graft.operators.StatsOps
   *
   * Evidence is observed, not re-read: the data write carries one
   * `Dataset.observe` that yields row count, content hash and the stats
-  * profile; the quarantine write observes its own count. The package is
-  * read back at most once, by its consumer: the bucketed Merge/CdcApply
-  * apply in `Runner`, or [[readBack]] (count + hash vs the observed
-  * receipt) in the streaming and CDC runners. An Append or Replace
-  * `Runner` never reads it: it lands the `data/` part files by file and
-  * probes the destination.
+  * profile, plus any caller aggregates (the `Runner` cursor max, the
+  * drain frontier's event-time max); the quarantine write observes its
+  * own count. The package is read back at most once, by its consumer:
+  * the bucketed Merge/CdcApply apply in `Runner`, or [[readBack]]
+  * (count + hash vs the observed receipt) as the receipt the streaming
+  * and CDC runners settle. An Append or Replace `Runner` never reads it:
+  * it lands the `data/` part files by file and probes the destination.
   */
 object PackageWriter {
 
@@ -188,22 +189,18 @@ object PackageWriter {
     spark.read.schema(pkg.schema).parquet(s"${pkg.dir}/data")
 
   /** Outcome of [[readBack]]: the package's receipt (what the write
-    * observed), whether the written bytes match it, and the values of
-    * the caller's extra aggregates over the written rows. */
-  final case class ReadBack(receipt: Receipt, matches: Boolean, extras: Row)
+    * observed) and whether the written bytes match it. */
+  final case class ReadBack(receipt: Receipt, matches: Boolean)
 
   /** The one read-back of a written package: ONE aggregate over `data/`
     * computes count + content hash, compared with what the write
-    * observed, plus `extraAggs` (e.g. an event-time max for a frontier)
-    * from the same scan. A part file lost or rewritten after the write
-    * does not match. */
-  def readBack(spark: SparkSession, pkg: PackageResult,
-      extraAggs: Seq[Column] = Nil): ReadBack = {
-    val data = readData(spark, pkg)
-    val r = data.agg(count(lit(1)), sum(rowHash(data.columns.toSeq)) +: extraAggs: _*).head()
-    val receipt = Receipt(s"parquet:${pkg.dir}/data", pkg.rows, pkg.contentHash)
-    ReadBack(receipt, r.getLong(0) == pkg.rows && hashAt(r, 1) == pkg.contentHash,
-      Row.fromSeq(r.toSeq.drop(2)))
+    * observed. A part file lost or rewritten after the write does not
+    * match. Everything else the caller needs from the rows (a frontier's
+    * event-time max) is observed on the write, not read back here. */
+  def readBack(spark: SparkSession, pkg: PackageResult): ReadBack = {
+    val (rows, hash) = countAndHash(readData(spark, pkg))
+    ReadBack(Receipt(s"parquet:${pkg.dir}/data", pkg.rows, pkg.contentHash),
+      rows == pkg.rows && hash == pkg.contentHash)
   }
 
   /** Render + persist the canonical package manifest; shared by the
@@ -232,6 +229,19 @@ object PackageWriter {
     def toJsonString: String = render(JObj.of(
       "destination" -> JStr(destination), "rows" -> JInt(rows),
       "content_hash" -> JStr(contentHash)))
+  }
+
+  object Receipt {
+    /** A committed receipt back from its JSON. One lacking `rows` or
+      * `content_hash` cannot anchor a verification: a State error. */
+    def fromJson(json: String): Receipt = {
+      val f = objFields(parse(json))
+      (f.get("rows"), f.get("content_hash")) match {
+        case (Some(JInt(rows)), Some(JStr(hash))) =>
+          Receipt(f.get("destination").collect { case JStr(d) => d }.getOrElse(""), rows, hash)
+        case _ => throw GraftError.State(s"receipt lacks rows or content_hash: $json")
+      }
+    }
   }
 
   /** Post-commit verification probe: recount + rehash the destination

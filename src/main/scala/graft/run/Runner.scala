@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.contract.{ContractPolicy, Transform, ValidationProgram}
 import graft.core.{Descriptor, Ledger, Position}
-import graft.operators.{Dedup, MergeOps}
-import graft.pkg.PackageWriter
+import graft.operators.Dedup
+import graft.pkg.{Destinations, PackageWriter}
+import graft.pkg.PackageWriter.Receipt
 
 /** The run spine — `cdf run <resource>` re-expressed Spark-first
   * (cdf: SURVEY §3.1; graph node chain VISION.md:713-721
@@ -16,10 +17,15 @@ import graft.pkg.PackageWriter
   *
   * Stages: scan → validate (split accept/quarantine) → normalize →
   * dedup (disposition precondition) → package write (data + quarantine
-  * + stats + manifest) → destination write → receipt verify → ledger
-  * commit. Steps 1–3 are narrow map stages; the only shuffle is the
-  * dedup/merge key when the disposition needs one. Planning does no
-  * data I/O (cdf VISION.md:439).
+  * + stats + manifest) → settle. Steps 1–3 are narrow map stages; the
+  * only shuffle is the dedup/merge key when the disposition needs one.
+  * Planning does no data I/O (cdf VISION.md:439).
+  *
+  * Settle is [[Ledger.settle]], the step every runner shares: replay
+  * check + committed head + proposal in one ledger read, then this
+  * run's delivery — one match on the disposition whose branch writes
+  * the destination, probes it and returns its receipt and verdict —
+  * then the commit. The ledger is parsed twice per run.
   *
   * SQL executions of an Append or Replace run, three in all: the
   * package data write (observing count, content hash, stats and the
@@ -151,26 +157,11 @@ object Runner {
     }
   }
 
-  /** Replace-by-swap with no missing-table window: land the package in
-    * a temp dir, move the current dest ASIDE (rename, atomic on
-    * HDFS/posix), move temp into place, then delete the old generation.
-    * A crash between the two renames leaves dest.__old intact for
-    * recovery — a reader sees the old table or the new one, never an
-    * absent one (cdf VISION.md:927 "never delete-then-insert"). */
-  def swapLand(spark: SparkSession, pkg: PackageWriter.PackageResult, destDir: String): Unit = {
-    val tmp = new Path(s"$destDir.__swap")
-    val destPath = new Path(destDir)
-    val oldPath = new Path(s"$destDir.__old")
-    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(tmp, true) // clear any leftover from a prior crash
-    land(spark, pkg, tmp.toString)
-    fs.delete(oldPath, true)
-    val hadPrior = fs.exists(destPath)
-    if (hadPrior) require(fs.rename(destPath, oldPath),
-      s"swap failed: could not move $destPath aside")
-    require(fs.rename(tmp, destPath), s"swap failed: could not move $tmp into place")
-    if (hadPrior) fs.delete(oldPath, true)
-  }
+  /** Replace-by-swap: land the package in a temp dir, then swap it in
+    * through [[Destinations.swap]], which never leaves the destination
+    * absent (cdf VISION.md:927 "never delete-then-insert"). */
+  def swapLand(spark: SparkSession, pkg: PackageWriter.PackageResult, destDir: String): Unit =
+    Destinations.swap(spark, destDir)(land(spark, pkg, _))
 
   /** Execute one bounded run: `source` → package at `pkgDir` →
     * destination parquet at `destDir` → ledger commit. Idempotent on
@@ -248,54 +239,15 @@ object Runner {
       graft.core.Segmentation.Targets())
     graft.core.Segmentation.writeRecording(pkgDir, segRecording)
 
-    val scope = Descriptor.ScopeKey.Root.render
-
-    // replay identity: same package hash committed ANYWHERE in this
-    // scope's history → duplicate, nothing re-executed. Head-only would
-    // re-run the destination write (duplicating rows under Append) for
-    // a package that is no longer the head but was already delivered.
-    val priorCommit = ledger.entries().reverse.find(e =>
-      e.resource == cfg.descriptor.id && e.scope == scope &&
-        e.state == "committed" && e.packageHash == pkg.packageHash)
-    priorCommit.foreach { prior =>
-      return RunResult(pkg.packageHash, pkg.rows, pkg.quarantined,
-        PackageWriter.Receipt("parquet:" + destDir, pkg.rows, pkg.contentHash),
-        committed = true, duplicate = true,
-        prior.position.map(Position.fromJson),
-        schemaFingerprint = fingerprint, segments = segRecording.segments)
-    }
-
     // 5. cursor position: window-close = max(observed) − lag.
     val position = cfg.positionOverride.orElse(cursorAgg.flatMap { case (field, _, lagUnits) =>
       Option(pkg.observed(CursorMax)).map(m =>
         Position.Cursor(field, m.asInstanceOf[Long] - lagUnits): Position)
     })
 
-    ledger.propose(cfg.descriptor.id, scope, pkg.packageHash, position)
-
     // Merge and CdcApply read the package (with its written schema);
     // Append and Replace land its files and never read it
     lazy val packaged = PackageWriter.readData(spark, pkg)
-
-    // 6. destination write per disposition. Append and Replace land the
-    //    package's files; Replace lands them through the atomic swap —
-    //    never delete-then-insert (cdf VISION.md:927).
-    //    Merge and CdcApply do NOT full-rewrite: their destination is
-    //    laid out hash-bucketed by the key (pmod(xxhash64(keys),
-    //    mergeBuckets) as a partition column), so an incremental run
-    //    rewrites ONLY the buckets its stage keys hash into — a 1%
-    //    package pays ~1% of the destination (cdf law: a staged merge
-    //    touches only staged keys, cdf-dest-postgres/src/commit.rs:
-    //    916-943). Dynamic partition overwrite replaces exactly the
-    //    partitions present in the write; untouched bucket directories
-    //    are never opened.
-    var mergeTouched: Option[Seq[Int]] = None
-    var cdcDeletedKeys: Option[DataFrame] = None
-    // exact row count the merge job actually wrote (staged + survivors),
-    // observed inside the write job — the receipt probe must equal it
-    // (cdf reconciles exact written/updated counts,
-    // cdf-dest-postgres/src/commit.rs:916-943).
-    var mergeExpectedRows: Option[Long] = None
 
     /** bucket-pruned upsert/apply: read only the stage's buckets from
       * the base, replace keys present in `stageKeys`, add `replacement`
@@ -306,9 +258,14 @@ object Runner {
       * because a persist() hid the self-read from Spark's overwrite
       * check, with cache eviction recomputing against half-overwritten
       * data). A bucket moved aside but not yet replaced at crash time
-      * is restored from the aside dir on the next run. */
+      * is restored from the aside dir on the next run. Returns the
+      * touched buckets (None on a first load, which writes them all) and
+      * the exact row count the write observed itself writing (staged +
+      * survivors): the receipt probe of that scope must equal it (cdf
+      * reconciles exact written/updated counts,
+      * cdf-dest-postgres/src/commit.rs:916-943). */
     def bucketedApply(keys: Seq[String], stageKeys: DataFrame,
-        replacement: DataFrame): Unit = {
+        replacement: DataFrame): (Option[Seq[Int]], Long) = {
       def withBucket(df: DataFrame) = df.withColumn(MergeBucketCol,
         pmod(xxhash64(keys.map(col): _*), lit(cfg.mergeBuckets)).cast("int"))
       val staged = withBucket(replacement)
@@ -329,11 +286,12 @@ object Runner {
       }
       fs.delete(path(gen), true) // leftover generation from a prior crash
       val obs = org.apache.spark.sql.Observation()
+      def written = obs.get("rows").asInstanceOf[Long]
       if (!fs.exists(path(destDir))) {
         // first load: every staged bucket is new — plain bucketed write
         staged.observe(obs, count(lit(1)).as("rows"))
           .write.partitionBy(MergeBucketCol).parquet(destDir)
-        mergeExpectedRows = Some(obs.get("rows").asInstanceOf[Long])
+        (None, written)
       } else {
         // touched buckets from the STAGE KEYS (bounded: <= mergeBuckets
         // ids, scans the incremental package, never the destination)
@@ -347,7 +305,6 @@ object Runner {
           .unionByName(survivors.select(base.columns.map(col): _*))
         merged.observe(obs, count(lit(1)).as("rows"))
           .write.partitionBy(MergeBucketCol).parquet(gen)
-        mergeExpectedRows = Some(obs.get("rows").asInstanceOf[Long])
         // swap: for each touched bucket, move the old dir aside, move the
         // new generation in. A bucket whose every row was evicted
         // (terminal deletes) has no generation dir — its old dir stays
@@ -366,114 +323,92 @@ object Runner {
         }
         fs.delete(path(aside), true)
         fs.delete(path(gen), true)
-        mergeTouched = Some(touched)
+        (Some(touched), written)
       }
     }
 
-    cfg.descriptor.disposition match {
-      case Descriptor.Disposition.Append =>
-        land(spark, pkg, destDir)
-      case Descriptor.Disposition.Replace =>
-        swapLand(spark, pkg, destDir)
-      case Descriptor.Disposition.Merge(keys) =>
-        bucketedApply(keys, packaged.select(keys.map(col): _*), packaged)
-      case Descriptor.Disposition.CdcApply(keys, opCol) =>
-        // ordered net effect of the package per key; a terminal delete
-        // REMOVES the key from the destination (anti-join on ALL staged
-        // keys evicts both updated and deleted keys; only non-deletes
-        // re-enter). Incremental: keys absent from this package are
-        // untouched — prior runs' rows survive (cdf VISION.md:931).
-        val last = Dedup.keyed(packaged, keys,
-          if (cfg.orderColumns.nonEmpty) cfg.orderColumns else keys, Dedup.Keep.Last)
-        cdcDeletedKeys = Some(
-          last.filter(col(opCol) === "delete").select(keys.map(col): _*))
-        bucketedApply(keys, last.select(keys.map(col): _*),
-          last.filter(col(opCol) =!= "delete").drop(opCol))
+    /** The receipt probe's input, read after the chaos kill-point. */
+    def probe(read: => DataFrame): DataFrame = {
+      ChaosHooks.beforeReceiptProbe.foreach(_(destDir))
+      read
+    }
+    /** Count + content hash of the landed destination, read with the
+      * package's written schema. */
+    def probeLanded(): (Long, String) =
+      PackageWriter.countAndHash(probe(spark.read.schema(pkg.schema).parquet(destDir)))
+    /** A bucketed apply's probe scope: the touched buckets only (a
+      * pruned scan — the point is not re-reading 100 TB post-write), or
+      * the whole destination after a first load. */
+    def bucketScope(touched: Option[Seq[Int]]): DataFrame = touched.fold(readDest(spark, destDir))(t =>
+      spark.read.parquet(destDir).filter(col(MergeBucketCol).isin(t.map(Int.box): _*))
+        .drop(MergeBucketCol))
+    def bucketDest(touched: Option[Seq[Int]]): String =
+      s"parquet:$destDir" + touched.fold("")(t => s"#buckets=${t.mkString(",")}")
+
+    // 6–8. settle (Ledger.settle): a package hash committed ANYWHERE in
+    //    this scope's history is a duplicate and nothing is re-executed
+    //    (head-only would re-append a package delivered before the
+    //    head). Otherwise the package is proposed, delivered, and
+    //    committed only on a verified receipt (cdf VISION.md:854-856).
+    //    Append and Replace land the package's files, Replace through the
+    //    atomic swap. Merge and CdcApply rewrite ONLY the hash buckets
+    //    their stage keys fall in — a 1% package pays ~1% of the
+    //    destination (cdf-dest-postgres/src/commit.rs:916-943). The
+    //    receipt is ONE probe scan of the destination scope (count +
+    //    content hash in one aggregation job), checked against
+    //    write-side expectations that cost no extra read.
+    val settled = ledger.settle(cfg.descriptor.id, Descriptor.ScopeKey.Root.render,
+        pkg.packageHash, position) { head =>
+      val (receipt, verified) = cfg.descriptor.disposition match {
+        case Descriptor.Disposition.Append =>
+          // the content hash is an exact decimal SUM of per-row hashes,
+          // so the destination must hold the prior receipt + the package
+          val prior = head.flatMap(_.receipt).map(Receipt.fromJson).getOrElse(Receipt("", 0L, "0"))
+          land(spark, pkg, destDir)
+          val (rows, hash) = probeLanded()
+          (Receipt(s"parquet:$destDir", rows, hash), rows == prior.rows + pkg.rows &&
+            BigInt(hash) == BigInt(prior.contentHash) + BigInt(pkg.contentHash))
+        case Descriptor.Disposition.Replace =>
+          swapLand(spark, pkg, destDir)
+          val (rows, hash) = probeLanded()
+          (Receipt(s"parquet:$destDir", rows, hash), rows == pkg.rows && hash == pkg.contentHash)
+        case Descriptor.Disposition.Merge(keys) =>
+          val (touched, written) = bucketedApply(keys, packaged.select(keys.map(col): _*), packaged)
+          val (rows, hash) = PackageWriter.countAndHash(probe(bucketScope(touched)))
+          // EXACT reconciliation: `>=` alone would miss a bucket that
+          // dropped survivor rows while the staged rows landed; every
+          // staged row survives an upsert
+          (Receipt(bucketDest(touched), rows, hash), rows == written && rows >= pkg.rows)
+        case Descriptor.Disposition.CdcApply(keys, opCol) =>
+          // ordered net effect of the package per key; a terminal delete
+          // REMOVES the key from the destination (anti-join on ALL staged
+          // keys evicts both updated and deleted keys; only non-deletes
+          // re-enter). Incremental: keys absent from this package are
+          // untouched — prior runs' rows survive (cdf VISION.md:931).
+          val last = Dedup.keyed(packaged, keys,
+            if (cfg.orderColumns.nonEmpty) cfg.orderColumns else keys, Dedup.Keep.Last)
+          val (touched, written) = bucketedApply(keys, last.select(keys.map(col): _*),
+            last.filter(col(opCol) =!= "delete").drop(opCol))
+          // the probe's SAME scan also counts surviving rows whose key
+          // this package deleted (broadcast mark of the stage-sized
+          // delete set) — must be zero
+          val scope = probe(bucketScope(touched))
+          val deleted = last.filter(col(opCol) === "delete").select(keys.map(col): _*)
+          val r = scope.join(broadcast(deleted.withColumn("__gdel", lit(1L))), keys, "left")
+            .agg(count(lit(1)), sum(PackageWriter.rowHash(scope.columns.toSeq)),
+              sum(coalesce(col("__gdel"), lit(0L)))).head()
+          (Receipt(bucketDest(touched), r.getLong(0), PackageWriter.hashAt(r, 1)),
+            (r.isNullAt(2) || r.getLong(2) == 0L) && r.getLong(0) == written)
+      }
+      (receipt.toJsonString, verified)
     }
 
-    // 7. receipt: durable, independently verifiable ack. ONE probe scan
-    //    — count + content hash come from a single aggregation job, and
-    //    verification compares that probe against write-side
-    //    expectations that cost no extra read:
-    //    - Replace: dest must equal the package exactly (rows + hash).
-    //    - Append: the content hash is an exact decimal SUM of per-row
-    //      hashes, so expected = prior receipt + package, additively.
-    //    - Merge: probe scope is the touched buckets only (pruned scan —
-    //      the whole point is not re-reading 100 TB post-write); every
-    //      staged row survives an upsert, so probe rows >= package rows.
-    //    - CdcApply: the probe's SAME scan additionally counts surviving
-    //      rows whose key this package deleted (broadcast mark of the
-    //      stage-sized delete set) — must be zero.
-    //    (The previous shape scanned the destination twice — countAndHash
-    //    then a verifyReceipt re-read recomputing the identical pair.)
-    //    Append and Replace read with the package's written schema: no
-    //    footer-inference job, and a destination file whose columns
-    //    differ reads as nulls (a hash mismatch) or fails the read.
-    ChaosHooks.beforeReceiptProbe.foreach(_(destDir))
-    val probeData = (cfg.descriptor.disposition, mergeTouched) match {
-      case (Descriptor.Disposition.Append | Descriptor.Disposition.Replace, _) =>
-        spark.read.schema(pkg.schema).parquet(destDir)
-      case (_, Some(touched)) => spark.read.parquet(destDir)
-        .filter(col(MergeBucketCol).isin(touched.map(Int.box): _*)).drop(MergeBucketCol)
-      case _ => readDest(spark, destDir)
-    }
-    val (destRows, destHash, deletedSurvivors) = cdcDeletedKeys match {
-      case Some(del) =>
-        val keys = del.columns.toSeq
-        val dataCols = probeData.columns.toSeq
-        val marked = probeData.join(
-          broadcast(del.withColumn("__gdel", lit(1L))), keys, "left")
-        val r = marked
-          .agg(count(lit(1)), sum(PackageWriter.rowHash(dataCols)),
-            sum(coalesce(col("__gdel"), lit(0L)))).head()
-        (r.getLong(0), PackageWriter.hashAt(r, 1), if (r.isNullAt(2)) 0L else r.getLong(2))
-      case None =>
-        val (c, h) = PackageWriter.countAndHash(probeData)
-        (c, h, 0L)
-    }
-    val receiptDest = mergeTouched match {
-      case Some(touched) => s"parquet:$destDir#buckets=${touched.mkString(",")}"
-      case None => "parquet:" + destDir
-    }
-    val receipt = PackageWriter.Receipt(receiptDest, destRows, destHash)
-    val verified = cfg.descriptor.disposition match {
-      case Descriptor.Disposition.Replace =>
-        destRows == pkg.rows && destHash == pkg.contentHash
-      case Descriptor.Disposition.Append =>
-        ledger.committedHead(cfg.descriptor.id, scope).flatMap(_.receipt) match {
-          case Some(priorJson) =>
-            val pf = graft.core.CanonicalJson.objFields(
-              graft.core.CanonicalJson.parse(priorJson))
-            (pf.get("rows"), pf.get("content_hash")) match {
-              case (Some(graft.core.CanonicalJson.JInt(priorRows)),
-                    Some(graft.core.CanonicalJson.JStr(priorHash))) =>
-                destRows == priorRows + pkg.rows &&
-                  BigInt(destHash) == BigInt(priorHash) + BigInt(pkg.contentHash)
-              case _ => destRows >= pkg.rows
-            }
-          case None => // first load: dest IS the package
-            destRows == pkg.rows && destHash == pkg.contentHash
-        }
-      // Merge/CdcApply: EXACT reconciliation — the probe of the touched
-      // scope must count precisely what the merge job observed itself
-      // writing (staged + survivors). `>=` would miss a bucket that
-      // dropped survivor rows while the staged rows landed; a missing
-      // staged upsert is equally caught (cdf-dest-postgres/src/commit.rs:
-      // 916-943 reconciles exact written/updated counts).
-      case _: Descriptor.Disposition.Merge =>
-        mergeExpectedRows.contains(destRows) && destRows >= pkg.rows
-      case _: Descriptor.Disposition.CdcApply =>
-        deletedSurvivors == 0L && mergeExpectedRows.contains(destRows)
-    }
-    if (!verified)
-      throw graft.core.GraftError.Destination(
-        "receipt verification failed — refusing to commit", transient = false)
-
-    // 8. the ONLY path to committed: verified receipt (cdf VISION.md:854-856)
-    ledger.commit(cfg.descriptor.id, scope, pkg.packageHash, receipt.toJsonString)
-
+    val (receipt, at) =
+      if (settled.duplicate) (Receipt(s"parquet:$destDir", pkg.rows, pkg.contentHash),
+        settled.entry.position.map(Position.fromJson))
+      else (Receipt.fromJson(settled.entry.receipt.get), position)
     RunResult(pkg.packageHash, pkg.rows, pkg.quarantined, receipt,
-      committed = true, duplicate = false, position,
+      committed = true, duplicate = settled.duplicate, at,
       schemaFingerprint = fingerprint, segments = segRecording.segments)
   }
 }

@@ -119,9 +119,8 @@ object CdcLogRunner {
         val pkgDir = s"$outDir/unit_${u.unitId}"
         val pkg = PackageWriter.write(slice, None, pkgDir, resource,
           planHash = s"cdc-unit-${u.unitId}:${u.fromTx}-${u.toTx}")
-        DrainEpoch.settle(ledger, resource, scope(resource), pkg,
-          PackageWriter.readBack(spark, pkg),
-          Some(Position.Cursor(txCol, u.toTx)), s"cdc unit ${u.unitId}")
+        DrainEpoch.settle(spark, ledger, resource, scope(resource), pkg,
+          Some(Position.Cursor(txCol, u.toTx)))
         results += UnitResult(u.unitId, u.fromTx, u.toTx, pkg.rows, pkg.packageHash)
         delivered += 1
       }
@@ -204,17 +203,15 @@ object CdcLogRunner {
     todo.iterator
       .takeWhile(_ => killAfterUnits.forall(delivered < _))
       .foreach { u =>
-        val unitDir = s"$unitsRoot/__unit=${u.unitId}"
         val (rows, hash) = perUnit(u.unitId)
         val pkg = PackageWriter.writeManifest(s"$outDir/unit_${u.unitId}", resource,
           planHash = s"cdc-unit-${u.unitId}:${u.fromTx}-${u.toTx}",
           rows = rows, qRows = 0L, columns = dataCols, hash = hash, segments = 1)
-        ledger.propose(resource, scope(resource), pkg.packageHash,
-          Some(Position.Cursor(txCol, u.toTx)))
-        val receipt = PackageWriter.Receipt(s"parquet:$unitDir", rows, hash)
-        require(probed.get(u.unitId).contains((rows, hash)),
-          s"cdc unit ${u.unitId} receipt verify failed")
-        ledger.commit(resource, scope(resource), pkg.packageHash, receipt.toJsonString)
+        ledger.settle(resource, scope(resource), pkg.packageHash,
+            Some(Position.Cursor(txCol, u.toTx))) { _ =>
+          (PackageWriter.Receipt(s"parquet:$unitsRoot/__unit=${u.unitId}", rows, hash).toJsonString,
+            probed.get(u.unitId).contains((rows, hash)))
+        }
         results += UnitResult(u.unitId, u.fromTx, u.toTx, rows, pkg.packageHash)
         delivered += 1
       }

@@ -15,10 +15,13 @@ import graft.pkg.PackageWriter
   *
   * [[Epochs]] is the one epoch step. Per epoch: classify late data 3
   * ways (admit / recapture / quarantine), union the previous epoch's
-  * recaptured carryover, write the epoch package, settle it through
-  * the ledger against its read-back receipt, advance the safe frontier
-  * (= only ADMITTED data advances it, cdf execution_extent.rs:619-624);
-  * at drain end, flush the last carryover as one more package. Two
+  * recaptured carryover, write the epoch package (its write observes
+  * the admitted event-time max), advance the safe frontier from that max
+  * (= only ADMITTED data advances it, cdf execution_extent.rs:619-624),
+  * settle the package at the frontier through [[Ledger.settle]] against
+  * its read-back receipt; at drain end, flush the last carryover as one
+  * more package. A re-run over the same ledger replays: each epoch's
+  * package is already committed, so no entry is appended. Two
   * drivers feed it: [[drain]], an explicit loop over bounded batches so
   * the controller is testable without a streaming source, and
   * [[StreamRunner.drainAvailableNow]], which feeds it micro-batches. A
@@ -70,21 +73,25 @@ object DrainEpoch {
       lagMs: Long,
       maxEpochs: Int)
 
-  /** Settle a written package: propose it at `position`, require its
-    * read-back to match the receipt the write observed, then commit. */
-  private[streaming] def settle(ledger: Ledger, resource: String, scope: String,
-      pkg: PackageWriter.PackageResult, rb: PackageWriter.ReadBack,
-      position: Option[Position], what: String): Unit = {
-    ledger.propose(resource, scope, pkg.packageHash, position)
-    require(rb.matches, s"$what receipt verify failed")
-    ledger.commit(resource, scope, pkg.packageHash, rb.receipt.toJsonString)
-  }
+  /** Settle a written package at `position` through the ledger's one
+    * settle step; its receipt is the package's read-back. */
+  private[streaming] def settle(spark: SparkSession, ledger: Ledger, resource: String,
+      scope: String, pkg: PackageWriter.PackageResult, position: Option[Position]): Unit =
+    ledger.settle(resource, scope, pkg.packageHash, position) { _ =>
+      val rb = PackageWriter.readBack(spark, pkg)
+      (rb.receipt.toJsonString, rb.matches)
+    }
+
+  /** Name of the admitted event-time max the epoch package write observes. */
+  private val EventTimeMax = "__event_time_max"
 
   /** The drain state one epoch step runs against: the previous
     * epoch's recaptured carryover (cached) and the results so far, whose
-    * last entry holds the safe frontier and the last watermark. Both
-    * drivers run their epochs through it; `planPrefix` + epoch number is
-    * each package's plan hash. */
+    * last entry holds the safe frontier and the last watermark. The
+    * frontier is observed on the package write (its event-time max, in
+    * milliseconds), never read back from the package. Both drivers run
+    * their epochs through it; `planPrefix` + epoch number is each
+    * package's plan hash. */
   private[streaming] final class Epochs(spark: SparkSession, cfg: Config, planPrefix: String,
       outDir: String, ledger: Ledger) {
     private var carryover: Option[DataFrame] = None
@@ -100,18 +107,17 @@ object DrainEpoch {
       val (admitNew, recapture, quarantine) =
         LateData.split(batch, cfg.eventTimeCol, wm, cfg.graceMs)
       val admit = carryover.map(admitNew.unionByName(_)).getOrElse(admitNew)
-      val pkg = PackageWriter.write(admit, Some(quarantine), s"$outDir/epoch_$n",
-        cfg.resource, planHash = s"$planPrefix$n")
       // safe frontier: committed position only from ADMITTED data,
       // window-close = max(event_time) − lag, never regressing; the max
-      // comes from the same scan of the written package that checks its receipt
-      val rb = PackageWriter.readBack(spark, pkg,
-        Seq(max(col(cfg.eventTimeCol)).cast("timestamp")))
-      val newFrontier = if (rb.extras.isNullAt(0)) frontier else {
-        val closeUs = rb.extras.getTimestamp(0).getTime * 1000L - cfg.lagMs * 1000L
+      // (truncated to milliseconds) is observed by the package write
+      val pkg = PackageWriter.write(admit, Some(quarantine), s"$outDir/epoch_$n",
+        cfg.resource, planHash = s"$planPrefix$n",
+        extraAggs = Seq(unix_millis(max(col(cfg.eventTimeCol)).cast("timestamp")).as(EventTimeMax)))
+      val newFrontier = Option(pkg.observed(EventTimeMax)).fold(frontier) { ms =>
+        val closeUs = ms.asInstanceOf[Long] * 1000L - cfg.lagMs * 1000L
         Some(frontier.fold(closeUs)(math.max(_, closeUs)))
       }
-      settle(n, pkg, rb, newFrontier, s"epoch $n")
+      settle(n, pkg, newFrontier)
       release() // consumed into this epoch's package
       carryover = Some(recapture.persist())
       val recCount = carryover.get.count()
@@ -130,7 +136,7 @@ object DrainEpoch {
         val n = last.epoch + 1
         val pkg = PackageWriter.write(rest, None, s"$outDir/epoch_${n}_flush", cfg.resource,
           planHash = s"$planPrefix$n-carryover-flush")
-        settle(n, pkg, PackageWriter.readBack(spark, pkg), frontier, "carryover flush")
+        settle(n, pkg, frontier)
         release()
         results += EpochResult(n, last.watermark, pkg.rows, 0, 0, pkg.packageHash, frontier)
       }
@@ -143,10 +149,9 @@ object DrainEpoch {
       carryover = None
     }
 
-    private def settle(n: Int, pkg: PackageWriter.PackageResult, rb: PackageWriter.ReadBack,
-        at: Option[Long], what: String): Unit =
-      DrainEpoch.settle(ledger, cfg.resource, s"stream:${cfg.resource}/epoch:$n", pkg, rb,
-        at.map(Position.Cursor(cfg.eventTimeCol, _)), what)
+    private def settle(n: Int, pkg: PackageWriter.PackageResult, at: Option[Long]): Unit =
+      DrainEpoch.settle(spark, ledger, cfg.resource, s"stream:${cfg.resource}/epoch:$n", pkg,
+        at.map(Position.Cursor(cfg.eventTimeCol, _)))
   }
 
   /** Drain `batches` (one DataFrame per arrival window, simulating the

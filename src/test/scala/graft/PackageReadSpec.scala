@@ -64,17 +64,25 @@ class PackageReadSpec extends SparkSpec {
     def readCounts: Map[String, Int] = reads.asScala.map { case (k, v) => k -> v.intValue }.toMap
   }
 
+  /** Wait until every listener event posted so far is delivered. */
+  private def drainListenerBus(): Unit = {
+    val bus = classOf[org.apache.spark.SparkContext].getMethod("listenerBus")
+      .invoke(spark.sparkContext)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  }
+
   /** Run `body` with a [[Recorder]] attached; listener events are
-    * asynchronous, so the bus is drained before the recorder is read. */
+    * asynchronous, so the bus is drained before the recorder is
+    * registered (an earlier execution's event cannot reach it) and again
+    * before it is read. */
   private def recorded[A](root: String)(body: => A): (A, Recorder) = {
+    drainListenerBus()
     val rec = new Recorder(root)
     spark.listenerManager.register(rec)
     spark.sparkContext.addSparkListener(rec)
     try {
       val out = body
-      val bus = classOf[org.apache.spark.SparkContext].getMethod("listenerBus")
-        .invoke(spark.sparkContext)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+      drainListenerBus()
       (out, rec)
     } finally {
       spark.listenerManager.unregister(rec)
