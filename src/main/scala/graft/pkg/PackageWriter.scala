@@ -46,7 +46,7 @@ import graft.operators.StatsOps
   * the bucketed Merge/CdcApply apply in `Runner`, or [[readBack]]
   * (count + hash vs the observed receipt) as the receipt the streaming
   * and CDC runners settle. An Append or Replace `Runner` never reads it:
-  * it lands the `data/` part files by file and probes the destination.
+  * it lands the `data/` part files by file and probes the landed files.
   */
 object PackageWriter {
 
@@ -224,11 +224,29 @@ object PackageWriter {
   }
 
   /** Destination receipt: durable, independently verifiable ack
-    * (cdf VISION.md:935-954). `verify` re-probes the destination. */
-  final case class Receipt(destination: String, rows: Long, contentHash: String) {
-    def toJsonString: String = render(JObj.of(
+    * (cdf VISION.md:935-954). `rows` and `content_hash` always describe
+    * the whole destination table (for an Append: the prior receipt plus
+    * the package), so [[verifyReceipt]] over the destination audits a
+    * committed receipt in full at any time.
+    *
+    * `listing`, recorded by an Append `Runner.run`, is the sha256 of the
+    * destination's sorted `part-*` entries as `name:size:mtime`, taken
+    * from one file listing (metadata, no rows read). The next Append
+    * checks the destination's listing minus the files it landed against
+    * it and scans only its own files, like the `(key, etag, sha256)`
+    * file manifests of cdf's Parquet/object-store receipts (SURVEY
+    * §2.2). It covers a committed part file lost, added, renamed,
+    * resized or touched. It does not cover a committed file rewritten in
+    * place under the same name, size and mtime: that file is checked by
+    * metadata, not by content, until a full [[verifyReceipt]]. A receipt
+    * without `listing` (written before listings were recorded, or by
+    * another disposition) makes the next Append probe the whole
+    * destination once. */
+  final case class Receipt(destination: String, rows: Long, contentHash: String,
+      listing: Option[String] = None) {
+    def toJsonString: String = render(JObj(Vector(
       "destination" -> JStr(destination), "rows" -> JInt(rows),
-      "content_hash" -> JStr(contentHash)))
+      "content_hash" -> JStr(contentHash)) ++ listing.map("listing" -> JStr(_))))
   }
 
   object Receipt {
@@ -238,7 +256,8 @@ object PackageWriter {
       val f = objFields(parse(json))
       (f.get("rows"), f.get("content_hash")) match {
         case (Some(JInt(rows)), Some(JStr(hash))) =>
-          Receipt(f.get("destination").collect { case JStr(d) => d }.getOrElse(""), rows, hash)
+          Receipt(f.get("destination").collect { case JStr(d) => d }.getOrElse(""), rows, hash,
+            f.get("listing").collect { case JStr(l) => l })
         case _ => throw GraftError.State(s"receipt lacks rows or content_hash: $json")
       }
     }

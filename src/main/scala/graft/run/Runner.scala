@@ -1,10 +1,11 @@
 package graft.run
 
-import org.apache.hadoop.fs.{FileUtil, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, FileUtil, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.contract.{ContractPolicy, Transform, ValidationProgram}
+import graft.core.CanonicalJson.sha256Hex
 import graft.core.{Descriptor, Ledger, Position}
 import graft.operators.Dedup
 import graft.pkg.{Destinations, PackageWriter}
@@ -30,14 +31,22 @@ import graft.pkg.PackageWriter.Receipt
   * SQL executions of an Append or Replace run, three in all: the
   * package data write (observing count, content hash, stats and the
   * cursor max) and the quarantine write (observing its count), which
-  * run concurrently; and the receipt probe, which reads the destination
-  * with the package's written schema (no schema-inference job). The
-  * one-row `stats/` file is written on the driver, not by a SQL
-  * execution. Landing the package into the destination is a file-level
-  * step, not a SQL execution either: the package's `data/` part files
-  * are copied in ([[land]]), so the package is never decoded or
-  * re-encoded. Merge and CdcApply read the package instead: the
-  * touched-bucket lookup over it, then the bucketed apply.
+  * run concurrently; and the receipt probe, which reads with the
+  * package's written schema (no schema-inference job). The one-row
+  * `stats/` file is written on the driver, not by a SQL execution.
+  * Landing the package into the destination is a file-level step, not
+  * a SQL execution either: the package's `data/` part files are copied
+  * in ([[land]]), so the package is never decoded or re-encoded.
+  *
+  * The Append probe is O(package), not O(destination history): it
+  * scans only the part files this run landed, and vouches for the
+  * older ones by metadata — one listing of the destination, whose
+  * digest without the landed files must equal the listing recorded in
+  * the prior receipt ([[PackageWriter.Receipt]]). A prior receipt
+  * without a listing gets one full-destination probe instead. Replace
+  * probes the whole destination, which is exactly the landed files.
+  * Merge and CdcApply read the package once, for the bucketed apply:
+  * the buckets their keys touch are observed on the package write.
   */
 object Runner {
 
@@ -46,8 +55,10 @@ object Runner {
     * does); it exists so merges prune to touched buckets. */
   val MergeBucketCol = "__mbucket"
 
-  /** Name of the cursor-max aggregate observed by the package write. */
+  /** Names of the aggregates observed by the package write: the cursor
+    * max, and the Merge/CdcApply buckets the package's keys fall in. */
   private val CursorMax = "__cursor_max"
+  private val TouchedBuckets = "__touched_buckets"
 
   /** Test-only chaos kill-points (cdf: crates/cdf-conformance/src/
     * runtime_chaos/ injects faults between pipeline stages). The spec
@@ -141,21 +152,40 @@ object Runner {
     * file is copied in under a `_landing-<name>` name, which readers
     * skip like any `_`-prefixed file, then renamed into place. The
     * destination receives exactly the bytes the package's evidence
-    * describes, with no Spark job, and never shows a partial file. */
-  def land(spark: SparkSession, pkg: PackageWriter.PackageResult, targetDir: String): Unit = {
+    * describes, with no Spark job, and never shows a partial file.
+    * Returns the landed part files, name → byte size in the package:
+    * the Append receipt probe scans exactly these, and a failed Append
+    * removes them. */
+  def land(spark: SparkSession, pkg: PackageWriter.PackageResult, targetDir: String): Map[String, Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val data = new Path(s"${pkg.dir}/data")
     val target = new Path(targetDir)
     val srcFs = data.getFileSystem(conf)
     val fs = target.getFileSystem(conf)
     fs.mkdirs(target)
-    srcFs.listStatus(data).map(_.getPath).filter(_.getName.startsWith("part-")).foreach { src =>
+    srcFs.listStatus(data).filter(_.getPath.getName.startsWith("part-")).map { st =>
+      val src = st.getPath
       val tmp = new Path(target, s"_landing-${src.getName}")
       require(FileUtil.copy(srcFs, src, fs, tmp, false, true, conf), s"landing failed: could not copy $src")
       require(fs.rename(tmp, new Path(target, src.getName)),
         s"landing failed: could not move $tmp into place")
-    }
+      src.getName -> st.getLen
+    }.toMap
   }
+
+  /** The `part-*` files of `dir`, by name, from one `listStatus`: a
+    * metadata call that reads no rows. */
+  private def partFiles(spark: SparkSession, dir: String): Map[String, FileStatus] = {
+    val path = new Path(dir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(path)
+      .filter(_.getPath.getName.startsWith("part-")).map(st => st.getPath.getName -> st).toMap
+  }
+
+  /** sha256 of the sorted `name:size:mtime` entries of `files`: the
+    * listing an Append receipt records. */
+  private def listingDigest(files: Iterable[FileStatus]): String =
+    sha256Hex(files.map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+      .toSeq.sorted.mkString("\n"))
 
   /** Replace-by-swap: land the package in a temp dir, then swap it in
     * through [[Destinations.swap]], which never leaves the destination
@@ -230,10 +260,19 @@ object Runner {
       }
       (c.field, maxExpr.as(CursorMax), lagUnits)
     }
+    //    Merge and CdcApply also observe the buckets the package's keys
+    //    fall in (at most mergeBuckets ids): the apply's touched scope.
+    def bucketOf(keys: Seq[String]): Column =
+      pmod(xxhash64(keys.map(col): _*), lit(cfg.mergeBuckets)).cast("int")
+    val bucketAgg = cfg.descriptor.disposition match {
+      case Descriptor.Disposition.Merge(keys) => Some(collect_set(bucketOf(keys)).as(TouchedBuckets))
+      case Descriptor.Disposition.CdcApply(keys, _) => Some(collect_set(bucketOf(keys)).as(TouchedBuckets))
+      case _ => None
+    }
     val mrpf = graft.core.Segmentation.maxRecordsPerFile(cfg.approxRowBytes)
     val pkg = PackageWriter.write(deduped, Some(quarantined), pkgDir,
       cfg.descriptor.id, planHash = fingerprint, maxRecordsPerFile = mrpf,
-      extraAggs = cursorAgg.map(_._2).toSeq)
+      extraAggs = cursorAgg.map(_._2).toSeq ++ bucketAgg)
     val segRecording = graft.core.Segmentation.Recording(
       pkg.segments, pkg.rows, pkg.rows * cfg.approxRowBytes,
       graft.core.Segmentation.Targets())
@@ -249,9 +288,10 @@ object Runner {
     // Append and Replace land its files and never read it
     lazy val packaged = PackageWriter.readData(spark, pkg)
 
-    /** bucket-pruned upsert/apply: read only the stage's buckets from
-      * the base, replace keys present in `stageKeys`, add `replacement`
-      * rows. The merged touched scope is written to a fresh GENERATION
+    /** bucket-pruned upsert/apply: read only the package's buckets
+      * (observed on its write) from the base, replace keys present in
+      * `stageKeys`, add `replacement` rows. The merged touched scope is
+      * written to a fresh GENERATION
       * dir and the touched bucket dirs are then swapped into place by
       * rename — the destination is NEVER read and overwritten in the
       * same job (the previous dynamic-overwrite shape was only legal
@@ -266,9 +306,7 @@ object Runner {
       * cdf-dest-postgres/src/commit.rs:916-943). */
     def bucketedApply(keys: Seq[String], stageKeys: DataFrame,
         replacement: DataFrame): (Option[Seq[Int]], Long) = {
-      def withBucket(df: DataFrame) = df.withColumn(MergeBucketCol,
-        pmod(xxhash64(keys.map(col): _*), lit(cfg.mergeBuckets)).cast("int"))
-      val staged = withBucket(replacement)
+      val staged = replacement.withColumn(MergeBucketCol, bucketOf(keys))
       val fs = org.apache.hadoop.fs.FileSystem.get(
         spark.sparkContext.hadoopConfiguration)
       def path(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -293,10 +331,10 @@ object Runner {
           .write.partitionBy(MergeBucketCol).parquet(destDir)
         (None, written)
       } else {
-        // touched buckets from the STAGE KEYS (bounded: <= mergeBuckets
-        // ids, scans the incremental package, never the destination)
-        val touched = withBucket(stageKeys).select(MergeBucketCol).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
+        // touched buckets of the stage keys, as the package write
+        // observed them (bounded: <= mergeBuckets ids, no package scan)
+        val touched = pkg.observed(TouchedBuckets).asInstanceOf[scala.collection.Seq[Int]]
+          .toSeq.sorted
         // partition pruning: only touched bucket dirs are read
         val base = spark.read.parquet(destDir)
           .filter(col(MergeBucketCol).isin(touched.map(Int.box): _*))
@@ -328,14 +366,28 @@ object Runner {
     }
 
     /** The receipt probe's input, read after the chaos kill-point. */
-    def probe(read: => DataFrame): DataFrame = {
+    def probe[A](read: => A): A = {
       ChaosHooks.beforeReceiptProbe.foreach(_(destDir))
       read
     }
-    /** Count + content hash of the landed destination, read with the
-      * package's written schema. */
-    def probeLanded(): (Long, String) =
-      PackageWriter.countAndHash(probe(spark.read.schema(pkg.schema).parquet(destDir)))
+    /** Count + content hash of `paths` under the destination, read with
+      * the package's written schema. */
+    def probeLanded(paths: String*): (Long, String) =
+      PackageWriter.countAndHash(spark.read.schema(pkg.schema).parquet(paths: _*))
+    /** `check`'s verdict on an Append's landed files; a false verdict,
+      * or a check that throws, first removes the landed files still
+      * present, so the destination is again what the committed receipt
+      * describes and the next Append can verify. */
+    def verifyLanded(landed: Map[String, Long])(check: => Boolean): Boolean = {
+      def unland(): Unit = {
+        val dest = new Path(destDir)
+        val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        landed.keys.foreach(n => fs.delete(new Path(dest, n), false))
+      }
+      val ok = try check catch { case e: Throwable => unland(); throw e }
+      if (!ok) unland()
+      ok
+    }
     /** A bucketed apply's probe scope: the touched buckets only (a
       * pruned scan — the point is not re-reading 100 TB post-write), or
       * the whole destination after a first load. */
@@ -354,8 +406,9 @@ object Runner {
     //    atomic swap. Merge and CdcApply rewrite ONLY the hash buckets
     //    their stage keys fall in — a 1% package pays ~1% of the
     //    destination (cdf-dest-postgres/src/commit.rs:916-943). The
-    //    receipt is ONE probe scan of the destination scope (count +
-    //    content hash in one aggregation job), checked against
+    //    receipt is ONE probe scan of the written scope (count + content
+    //    hash in one aggregation job: an Append's landed files, the
+    //    touched buckets, or the whole table), checked against
     //    write-side expectations that cost no extra read.
     val settled = ledger.settle(cfg.descriptor.id, Descriptor.ScopeKey.Root.render,
         pkg.packageHash, position) { head =>
@@ -363,14 +416,29 @@ object Runner {
         case Descriptor.Disposition.Append =>
           // the content hash is an exact decimal SUM of per-row hashes,
           // so the destination must hold the prior receipt + the package
-          val prior = head.flatMap(_.receipt).map(Receipt.fromJson).getOrElse(Receipt("", 0L, "0"))
-          land(spark, pkg, destDir)
-          val (rows, hash) = probeLanded()
-          (Receipt(s"parquet:$destDir", rows, hash), rows == prior.rows + pkg.rows &&
-            BigInt(hash) == BigInt(prior.contentHash) + BigInt(pkg.contentHash))
+          val prior = head.flatMap(_.receipt).map(Receipt.fromJson)
+            .getOrElse(Receipt("", 0L, "0", Some(listingDigest(Nil))))
+          val rows = prior.rows + pkg.rows
+          val hash = BigInt(prior.contentHash) + BigInt(pkg.contentHash)
+          val landed = land(spark, pkg, destDir)
+          val parts = probe(partFiles(spark, destDir))
+          val verified = verifyLanded(landed)(prior.listing match {
+            case Some(before) =>
+              // the landed files by name, size and content; the older
+              // generations by the listing the prior receipt recorded
+              landed.forall { case (n, size) => parts.get(n).exists(_.getLen == size) } &&
+                listingDigest((parts -- landed.keys).values) == before && {
+                  val (r, h) = probeLanded(landed.keys.toSeq.map(n => s"$destDir/$n"): _*)
+                  r == pkg.rows && BigInt(h) == BigInt(pkg.contentHash)
+                }
+            case None => // a receipt without a listing: one full probe
+              val (r, h) = probeLanded(destDir)
+              r == rows && BigInt(h) == hash
+          })
+          (Receipt(s"parquet:$destDir", rows, hash.toString, Some(listingDigest(parts.values))), verified)
         case Descriptor.Disposition.Replace =>
           swapLand(spark, pkg, destDir)
-          val (rows, hash) = probeLanded()
+          val (rows, hash) = probe(probeLanded(destDir))
           (Receipt(s"parquet:$destDir", rows, hash), rows == pkg.rows && hash == pkg.contentHash)
         case Descriptor.Disposition.Merge(keys) =>
           val (touched, written) = bucketedApply(keys, packaged.select(keys.map(col): _*), packaged)

@@ -191,6 +191,33 @@ class PackageReadSpec extends SparkSpec {
     assert(rec.inferenceJobs.get == 0)
   }
 
+  /** Merge and CdcApply onto an existing destination: the buckets the
+    * package's keys touch are observed on the package write, so the
+    * package is read only by the apply (and, for CdcApply, by the
+    * probe's broadcast of the deleted keys). */
+  for ((disposition, pkgReads) <- Seq[(Descriptor.Disposition, Int)](
+      Descriptor.Disposition.Merge(Seq("event_id")) -> 1,
+      Descriptor.Disposition.CdcApply(Seq("event_id"), "op") -> 2))
+    test(s"Runner.run($disposition) onto an existing destination runs 4 SQL executions, no bucket lookup") {
+      val base = tmpDir(); val ledger = Ledger.at(base)
+      val cfg = Runner.RunConfig(
+        descriptor = Descriptor.ResourceDescriptor(
+          id = s"reads_$disposition", schemaSource = Descriptor.SchemaSource.Discover,
+          primaryKey = Seq("event_id"), cursor = None, disposition = disposition),
+        policy = ContractPolicy(Seq(RowRule.Range("value_range", "value", 0, 600))),
+        orderColumns = Seq("ts"), mergeBuckets = 8)
+      def ops(n: Int, salt: Int) = events(n, 1700000000L, salt)
+        .withColumn("op", when(col("user_id") === 0, "delete").otherwise("upsert"))
+      Runner.run(spark, cfg, ops(500, 0), s"$base/pkg1", s"$base/dest", ledger)
+      val (r, rec) = recorded(base)(Runner.run(spark, cfg, ops(300, 0).filter(col("event_id") % 2 === 0),
+        s"$base/pkg2", s"$base/dest", ledger))
+      assert(r.committed && !r.duplicate)
+      // the package data write, the quarantine write, the bucketed apply
+      // and the receipt probe
+      assert(rec.executions.get == 4)
+      assert(rec.readCounts == Map(s"$base/pkg2" -> pkgReads))
+    }
+
   test("StreamRunner reads each epoch package once, with no schema inference") {
     val base = tmpDir()
     val ((res, out), rec) = recorded(base)(drainStream(base, files = 3))
