@@ -231,9 +231,11 @@ object PackageWriter {
     *
     * `listing`, recorded by an Append `Runner.run`, is the sha256 of the
     * destination's sorted `part-*` entries as `name:size:mtime`, taken
-    * from one file listing (metadata, no rows read). The next Append
-    * checks the destination's listing minus the files it landed against
-    * it and scans only its own files, like the `(key, etag, sha256)`
+    * from one file listing (metadata, no rows read), after the run's
+    * files are published. The next Append checks the destination's
+    * listing against it before publishing anything, and its receipt
+    * probe scans only its own staged files (`<dest>.__stage`, read with
+    * the package's written schema), like the `(key, etag, sha256)`
     * file manifests of cdf's Parquet/object-store receipts (SURVEY
     * §2.2). It covers a committed part file lost, added, renamed,
     * resized or touched. It does not cover a committed file rewritten in
@@ -241,7 +243,7 @@ object PackageWriter {
     * metadata, not by content, until a full [[verifyReceipt]]. A receipt
     * without `listing` (written before listings were recorded, or by
     * another disposition) makes the next Append probe the whole
-    * destination once. */
+    * destination against that receipt once. */
   final case class Receipt(destination: String, rows: Long, contentHash: String,
       listing: Option[String] = None) {
     def toJsonString: String = render(JObj(Vector(

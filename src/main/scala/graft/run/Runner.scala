@@ -3,6 +3,7 @@ package graft.run
 import org.apache.hadoop.fs.{FileStatus, FileUtil, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.contract.{ContractPolicy, Transform, ValidationProgram}
 import graft.core.CanonicalJson.sha256Hex
@@ -24,29 +25,30 @@ import graft.pkg.PackageWriter.Receipt
   *
   * Settle is [[Ledger.settle]], the step every runner shares: replay
   * check + committed head + proposal in one ledger read, then this
-  * run's delivery — one match on the disposition whose branch writes
-  * the destination, probes it and returns its receipt and verdict —
-  * then the commit. The ledger is parsed twice per run.
+  * run's delivery, then the commit; the ledger is parsed twice per run.
+  * Delivery is stage → verify → publish ([[Destinations.staged]]) for
+  * every disposition: the output is written to a sibling stage dir
+  * (`<dest>.__stage`, `.__swap` or `.__mergegen`), the receipt probe
+  * reads THAT dir with the written schema, and only a verified output
+  * is renamed into the destination. A refused run leaves the
+  * destination as its committed receipt describes; a crashed one
+  * leaves at most a stage dir, which the next run clears.
   *
   * SQL executions of an Append or Replace run, three in all: the
   * package data write (observing count, content hash, stats and the
   * cursor max) and the quarantine write (observing its count), which
-  * run concurrently; and the receipt probe, which reads with the
-  * package's written schema (no schema-inference job). The one-row
-  * `stats/` file is written on the driver, not by a SQL execution.
-  * Landing the package into the destination is a file-level step, not
-  * a SQL execution either: the package's `data/` part files are copied
-  * in ([[land]]), so the package is never decoded or re-encoded.
+  * run concurrently; and the receipt probe. The one-row `stats/` file
+  * is written on the driver. Landing is a file-level step: the
+  * package's `data/` part files are copied into the stage dir
+  * ([[land]]), never decoded or re-encoded.
   *
   * The Append probe is O(package), not O(destination history): it
-  * scans only the part files this run landed, and vouches for the
-  * older ones by metadata — one listing of the destination, whose
-  * digest without the landed files must equal the listing recorded in
-  * the prior receipt ([[PackageWriter.Receipt]]). A prior receipt
-  * without a listing gets one full-destination probe instead. Replace
-  * probes the whole destination, which is exactly the landed files.
-  * Merge and CdcApply read the package once, for the bucketed apply:
-  * the buckets their keys touch are observed on the package write.
+  * scans only the staged files, and vouches for the destination's files
+  * by metadata — one listing, whose digest must equal the listing in
+  * the prior receipt ([[PackageWriter.Receipt]]); a prior receipt
+  * without one gets one full probe of the destination instead. Merge
+  * and CdcApply read the package once, for the bucketed apply: the
+  * buckets their keys touch are observed on the package write.
   */
 object Runner {
 
@@ -61,10 +63,11 @@ object Runner {
   private val TouchedBuckets = "__touched_buckets"
 
   /** Test-only chaos kill-points (cdf: crates/cdf-conformance/src/
-    * runtime_chaos/ injects faults between pipeline stages). The spec
-    * plants an intervention between the destination write and the
-    * receipt probe to prove verification actually catches a
-    * destination that lost rows. Never set in production paths. */
+    * runtime_chaos/ injects faults between pipeline stages).
+    * `beforeReceiptProbe` receives the run's stage dir between the
+    * staged write and the receipt probe, so a spec can prove a staged
+    * output that lost rows is refused and never published. Never set in
+    * production paths. */
   object ChaosHooks {
     @volatile var beforeReceiptProbe: Option[String => Unit] = None
   }
@@ -149,36 +152,32 @@ object Runner {
     spark.read.parquet(destDir).drop(MergeBucketCol)
 
   /** Land a package's rows into `targetDir` by file: each `data/part-*`
-    * file is copied in under a `_landing-<name>` name, which readers
-    * skip like any `_`-prefixed file, then renamed into place. The
-    * destination receives exactly the bytes the package's evidence
-    * describes, with no Spark job, and never shows a partial file.
-    * Returns the landed part files, name → byte size in the package:
-    * the Append receipt probe scans exactly these, and a failed Append
-    * removes them. */
-  def land(spark: SparkSession, pkg: PackageWriter.PackageResult, targetDir: String): Map[String, Long] = {
+    * file is copied in under its own name. The target is a run's stage
+    * directory, never the destination itself: the staged files are
+    * probed there and renamed into the destination only on a verified
+    * receipt. The destination receives exactly the bytes the package's
+    * evidence describes, with no Spark job. */
+  def land(spark: SparkSession, pkg: PackageWriter.PackageResult, targetDir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val data = new Path(s"${pkg.dir}/data")
     val target = new Path(targetDir)
     val srcFs = data.getFileSystem(conf)
     val fs = target.getFileSystem(conf)
     fs.mkdirs(target)
-    srcFs.listStatus(data).filter(_.getPath.getName.startsWith("part-")).map { st =>
-      val src = st.getPath
-      val tmp = new Path(target, s"_landing-${src.getName}")
-      require(FileUtil.copy(srcFs, src, fs, tmp, false, true, conf), s"landing failed: could not copy $src")
-      require(fs.rename(tmp, new Path(target, src.getName)),
-        s"landing failed: could not move $tmp into place")
-      src.getName -> st.getLen
-    }.toMap
+    srcFs.listStatus(data).map(_.getPath).filter(_.getName.startsWith("part-")).foreach { src =>
+      require(FileUtil.copy(srcFs, src, fs, new Path(target, src.getName), false, true, conf),
+        s"landing failed: could not copy $src")
+    }
   }
 
-  /** The `part-*` files of `dir`, by name, from one `listStatus`: a
-    * metadata call that reads no rows. */
+  /** The `part-*` files of `dir` (none if it does not exist), by name,
+    * from one `listStatus`: a metadata call that reads no rows. */
   private def partFiles(spark: SparkSession, dir: String): Map[String, FileStatus] = {
     val path = new Path(dir)
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(path)
-      .filter(_.getPath.getName.startsWith("part-")).map(st => st.getPath.getName -> st).toMap
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(path)) Map.empty
+    else fs.listStatus(path).filter(_.getPath.getName.startsWith("part-"))
+      .map(st => st.getPath.getName -> st).toMap
   }
 
   /** sha256 of the sorted `name:size:mtime` entries of `files`: the
@@ -186,12 +185,6 @@ object Runner {
   private def listingDigest(files: Iterable[FileStatus]): String =
     sha256Hex(files.map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
       .toSeq.sorted.mkString("\n"))
-
-  /** Replace-by-swap: land the package in a temp dir, then swap it in
-    * through [[Destinations.swap]], which never leaves the destination
-    * absent (cdf VISION.md:927 "never delete-then-insert"). */
-  def swapLand(spark: SparkSession, pkg: PackageWriter.PackageResult, destDir: String): Unit =
-    Destinations.swap(spark, destDir)(land(spark, pkg, _))
 
   /** Execute one bounded run: `source` → package at `pkgDir` →
     * destination parquet at `destDir` → ledger commit. Idempotent on
@@ -287,129 +280,100 @@ object Runner {
     // Merge and CdcApply read the package (with its written schema);
     // Append and Replace land its files and never read it
     lazy val packaged = PackageWriter.readData(spark, pkg)
+    val conf = spark.sparkContext.hadoopConfiguration
+
+    /** The receipt probe's input: `stageDir` read with the written
+      * `schema`, after the chaos kill-point. A staged file lost before
+      * the probe makes a false verdict, not a read error. */
+    def probe(stageDir: String, schema: StructType): DataFrame = {
+      ChaosHooks.beforeReceiptProbe.foreach(_(stageDir))
+      spark.read.schema(schema).parquet(stageDir)
+    }
+    /** Land the package's files into `stageDir` and probe them: whether
+      * the staged files hold exactly the package (count + content hash),
+      * and their count + hash. */
+    def landVerified(stageDir: String): ((Long, String), Boolean) = {
+      land(spark, pkg, stageDir)
+      val probed = PackageWriter.countAndHash(probe(stageDir, pkg.schema))
+      (probed, probed == (pkg.rows, pkg.contentHash))
+    }
 
     /** bucket-pruned upsert/apply: read only the package's buckets
       * (observed on its write) from the base, replace keys present in
       * `stageKeys`, add `replacement` rows. The merged touched scope is
-      * written to a fresh GENERATION
-      * dir and the touched bucket dirs are then swapped into place by
-      * rename — the destination is NEVER read and overwritten in the
-      * same job (the previous dynamic-overwrite shape was only legal
-      * because a persist() hid the self-read from Spark's overwrite
-      * check, with cache eviction recomputing against half-overwritten
-      * data). A bucket moved aside but not yet replaced at crash time
-      * is restored from the aside dir on the next run. Returns the
-      * touched buckets (None on a first load, which writes them all) and
-      * the exact row count the write observed itself writing (staged +
-      * survivors): the receipt probe of that scope must equal it (cdf
-      * reconciles exact written/updated counts,
-      * cdf-dest-postgres/src/commit.rs:916-943). */
-    def bucketedApply(keys: Seq[String], stageKeys: DataFrame,
-        replacement: DataFrame): (Option[Seq[Int]], Long) = {
+      * staged as a GENERATION dir `<dest>.__mergegen`, where `check`
+      * probes it against the exact row count the write observed (cdf
+      * reconciles exact counts, cdf-dest-postgres/src/commit.rs:916-943).
+      * Only a verified generation is published, each touched bucket dir
+      * swapped by rename (a first load publishes it as the destination);
+      * a bucket moved aside by a crash mid-swap is restored next run. */
+    def bucketedApply(keys: Seq[String], stageKeys: DataFrame, replacement: DataFrame)(
+        check: (DataFrame, Long) => ((Long, String), Boolean)): (Receipt, Boolean) = {
       val staged = replacement.withColumn(MergeBucketCol, bucketOf(keys))
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        spark.sparkContext.hadoopConfiguration)
-      def path(s: String) = new org.apache.hadoop.fs.Path(s)
-      val gen = s"$destDir.__mergegen"   // new generation of touched buckets
-      val aside = s"$destDir.__mergeold" // prior generation, aside mid-swap
+      val fs = org.apache.hadoop.fs.FileSystem.get(conf)
+      val dest = new Path(destDir)
+      val aside = new Path(s"$destDir.__mergeold") // prior generation, aside mid-swap
       // recovery: a crash mid-swap can leave a bucket moved aside but not
       // yet replaced — restore any aside bucket the dest lacks, then clear
-      if (fs.exists(path(aside))) {
-        fs.listStatus(path(aside)).foreach { st =>
-          val destB = path(s"$destDir/${st.getPath.getName}")
+      if (fs.exists(aside)) {
+        fs.listStatus(aside).foreach { st =>
+          val destB = new Path(dest, st.getPath.getName)
           if (!fs.exists(destB))
             require(fs.rename(st.getPath, destB), s"merge recovery failed: $destB")
         }
-        fs.delete(path(aside), true)
+        fs.delete(aside, true)
       }
-      fs.delete(path(gen), true) // leftover generation from a prior crash
-      val obs = org.apache.spark.sql.Observation()
-      def written = obs.get("rows").asInstanceOf[Long]
-      if (!fs.exists(path(destDir))) {
-        // first load: every staged bucket is new — plain bucketed write
-        staged.observe(obs, count(lit(1)).as("rows"))
-          .write.partitionBy(MergeBucketCol).parquet(destDir)
-        (None, written)
-      } else {
-        // touched buckets of the stage keys, as the package write
-        // observed them (bounded: <= mergeBuckets ids, no package scan)
-        val touched = pkg.observed(TouchedBuckets).asInstanceOf[scala.collection.Seq[Int]]
-          .toSeq.sorted
+      // touched buckets of the stage keys, as the package write observed
+      // them (bounded: <= mergeBuckets ids, no package scan)
+      val touched = pkg.observed(TouchedBuckets).asInstanceOf[scala.collection.Seq[Int]].toSeq.sorted
+      val firstLoad = !fs.exists(dest)
+      val merged = if (firstLoad) staged else {
         // partition pruning: only touched bucket dirs are read
         val base = spark.read.parquet(destDir)
           .filter(col(MergeBucketCol).isin(touched.map(Int.box): _*))
         val survivors = base.join(stageKeys, keys, "left_anti")
-        val merged = staged.select(base.columns.map(col): _*)
+        staged.select(base.columns.map(col): _*)
           .unionByName(survivors.select(base.columns.map(col): _*))
-        merged.observe(obs, count(lit(1)).as("rows"))
-          .write.partitionBy(MergeBucketCol).parquet(gen)
-        // swap: for each touched bucket, move the old dir aside, move the
-        // new generation in. A bucket whose every row was evicted
-        // (terminal deletes) has no generation dir — its old dir stays
-        // aside and is dropped with the cleanup. No commit happens until
-        // the receipt verifies, so any crash window re-runs idempotently.
-        fs.mkdirs(path(aside))
-        touched.foreach { b =>
-          val destB = path(s"$destDir/$MergeBucketCol=$b")
-          val genB = path(s"$gen/$MergeBucketCol=$b")
-          if (fs.exists(destB))
-            require(fs.rename(destB, path(s"$aside/$MergeBucketCol=$b")),
-              s"merge swap failed: could not move $destB aside")
-          if (fs.exists(genB))
-            require(fs.rename(genB, destB),
-              s"merge swap failed: could not move $genB into place")
+      }
+      val ((rows, hash), verified) = Destinations.staged(spark, s"$destDir.__mergegen") { gen =>
+        val obs = org.apache.spark.sql.Observation()
+        merged.observe(obs, count(lit(1)).as("rows")).write.partitionBy(MergeBucketCol).parquet(gen)
+        check(probe(gen, merged.schema).drop(MergeBucketCol), obs.get("rows").asInstanceOf[Long])
+      } { gen =>
+        if (firstLoad) require(fs.rename(gen, dest), s"merge publish failed: could not move $gen into place")
+        else {
+          // for each touched bucket, move the old dir aside, move the new
+          // generation in. A bucket whose every row was evicted (terminal
+          // deletes) has no generation dir — its old dir stays aside and
+          // is dropped with the cleanup.
+          fs.mkdirs(aside)
+          touched.foreach { b =>
+            val destB = new Path(dest, s"$MergeBucketCol=$b")
+            val genB = new Path(gen, s"$MergeBucketCol=$b")
+            if (fs.exists(destB))
+              require(fs.rename(destB, new Path(aside, destB.getName)),
+                s"merge swap failed: could not move $destB aside")
+            if (fs.exists(genB))
+              require(fs.rename(genB, destB), s"merge swap failed: could not move $genB into place")
+          }
+          fs.delete(aside, true)
         }
-        fs.delete(path(aside), true)
-        fs.delete(path(gen), true)
-        (Some(touched), written)
       }
+      val scope = if (firstLoad) "" else s"#buckets=${touched.mkString(",")}"
+      (Receipt(s"parquet:$destDir$scope", rows, hash), verified)
     }
-
-    /** The receipt probe's input, read after the chaos kill-point. */
-    def probe[A](read: => A): A = {
-      ChaosHooks.beforeReceiptProbe.foreach(_(destDir))
-      read
-    }
-    /** Count + content hash of `paths` under the destination, read with
-      * the package's written schema. */
-    def probeLanded(paths: String*): (Long, String) =
-      PackageWriter.countAndHash(spark.read.schema(pkg.schema).parquet(paths: _*))
-    /** `check`'s verdict on an Append's landed files; a false verdict,
-      * or a check that throws, first removes the landed files still
-      * present, so the destination is again what the committed receipt
-      * describes and the next Append can verify. */
-    def verifyLanded(landed: Map[String, Long])(check: => Boolean): Boolean = {
-      def unland(): Unit = {
-        val dest = new Path(destDir)
-        val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        landed.keys.foreach(n => fs.delete(new Path(dest, n), false))
-      }
-      val ok = try check catch { case e: Throwable => unland(); throw e }
-      if (!ok) unland()
-      ok
-    }
-    /** A bucketed apply's probe scope: the touched buckets only (a
-      * pruned scan — the point is not re-reading 100 TB post-write), or
-      * the whole destination after a first load. */
-    def bucketScope(touched: Option[Seq[Int]]): DataFrame = touched.fold(readDest(spark, destDir))(t =>
-      spark.read.parquet(destDir).filter(col(MergeBucketCol).isin(t.map(Int.box): _*))
-        .drop(MergeBucketCol))
-    def bucketDest(touched: Option[Seq[Int]]): String =
-      s"parquet:$destDir" + touched.fold("")(t => s"#buckets=${t.mkString(",")}")
 
     // 6–8. settle (Ledger.settle): a package hash committed ANYWHERE in
     //    this scope's history is a duplicate and nothing is re-executed
     //    (head-only would re-append a package delivered before the
     //    head). Otherwise the package is proposed, delivered, and
     //    committed only on a verified receipt (cdf VISION.md:854-856).
-    //    Append and Replace land the package's files, Replace through the
-    //    atomic swap. Merge and CdcApply rewrite ONLY the hash buckets
-    //    their stage keys fall in — a 1% package pays ~1% of the
-    //    destination (cdf-dest-postgres/src/commit.rs:916-943). The
-    //    receipt is ONE probe scan of the written scope (count + content
-    //    hash in one aggregation job: an Append's landed files, the
-    //    touched buckets, or the whole table), checked against
-    //    write-side expectations that cost no extra read.
+    //    Delivery is stage → verify → publish: Append and Replace land
+    //    the package's files in the stage dir, Merge and CdcApply stage
+    //    ONLY the hash buckets their keys fall in — a 1% package pays ~1%
+    //    of the destination. The receipt is ONE probe scan of the staged
+    //    output (count + content hash in one aggregation job), checked
+    //    against write-side expectations BEFORE anything is published.
     val settled = ledger.settle(cfg.descriptor.id, Descriptor.ScopeKey.Root.render,
         pkg.packageHash, position) { head =>
       val (receipt, verified) = cfg.descriptor.disposition match {
@@ -418,35 +382,36 @@ object Runner {
           // so the destination must hold the prior receipt + the package
           val prior = head.flatMap(_.receipt).map(Receipt.fromJson)
             .getOrElse(Receipt("", 0L, "0", Some(listingDigest(Nil))))
-          val rows = prior.rows + pkg.rows
-          val hash = BigInt(prior.contentHash) + BigInt(pkg.contentHash)
-          val landed = land(spark, pkg, destDir)
-          val parts = probe(partFiles(spark, destDir))
-          val verified = verifyLanded(landed)(prior.listing match {
-            case Some(before) =>
-              // the landed files by name, size and content; the older
-              // generations by the listing the prior receipt recorded
-              landed.forall { case (n, size) => parts.get(n).exists(_.getLen == size) } &&
-                listingDigest((parts -- landed.keys).values) == before && {
-                  val (r, h) = probeLanded(landed.keys.toSeq.map(n => s"$destDir/$n"): _*)
-                  r == pkg.rows && BigInt(h) == BigInt(pkg.contentHash)
-                }
-            case None => // a receipt without a listing: one full probe
-              val (r, h) = probeLanded(destDir)
-              r == rows && BigInt(h) == hash
-          })
-          (Receipt(s"parquet:$destDir", rows, hash.toString, Some(listingDigest(parts.values))), verified)
+          val (_, verified) = Destinations.staged(spark, s"$destDir.__stage") { stage =>
+            val (_, landedOk) = landVerified(stage)
+            // the committed files: by the listing the prior receipt
+            // recorded, or (a receipt without one) by one full probe
+            ((), landedOk && prior.listing.fold(
+              PackageWriter.countAndHash(spark.read.schema(pkg.schema).parquet(destDir)) ==
+                (prior.rows, prior.contentHash))(
+              _ == listingDigest(partFiles(spark, destDir).values)))
+          } { stage =>
+            val fs = stage.getFileSystem(conf)
+            fs.mkdirs(new Path(destDir))
+            partFiles(spark, stage.toString).keys.foreach { n =>
+              require(fs.rename(new Path(stage, n), new Path(destDir, n)),
+                s"publish failed: could not move $n into $destDir")
+            }
+          }
+          (Receipt(s"parquet:$destDir", prior.rows + pkg.rows,
+            (BigInt(prior.contentHash) + BigInt(pkg.contentHash)).toString,
+            Some(listingDigest(partFiles(spark, destDir).values))), verified)
         case Descriptor.Disposition.Replace =>
-          swapLand(spark, pkg, destDir)
-          val (rows, hash) = probe(probeLanded(destDir))
-          (Receipt(s"parquet:$destDir", rows, hash), rows == pkg.rows && hash == pkg.contentHash)
+          val ((rows, hash), verified) = Destinations.swap(spark, destDir)(landVerified)
+          (Receipt(s"parquet:$destDir", rows, hash), verified)
         case Descriptor.Disposition.Merge(keys) =>
-          val (touched, written) = bucketedApply(keys, packaged.select(keys.map(col): _*), packaged)
-          val (rows, hash) = PackageWriter.countAndHash(probe(bucketScope(touched)))
-          // EXACT reconciliation: `>=` alone would miss a bucket that
-          // dropped survivor rows while the staged rows landed; every
-          // staged row survives an upsert
-          (Receipt(bucketDest(touched), rows, hash), rows == written && rows >= pkg.rows)
+          bucketedApply(keys, packaged.select(keys.map(col): _*), packaged) { (scope, written) =>
+            val probed @ (rows, _) = PackageWriter.countAndHash(scope)
+            // EXACT reconciliation: `>=` alone would miss a bucket that
+            // dropped survivor rows while the staged rows landed; every
+            // staged row survives an upsert
+            (probed, rows == written && rows >= pkg.rows)
+          }
         case Descriptor.Disposition.CdcApply(keys, opCol) =>
           // ordered net effect of the package per key; a terminal delete
           // REMOVES the key from the destination (anti-join on ALL staged
@@ -455,18 +420,18 @@ object Runner {
           // untouched — prior runs' rows survive (cdf VISION.md:931).
           val last = Dedup.keyed(packaged, keys,
             if (cfg.orderColumns.nonEmpty) cfg.orderColumns else keys, Dedup.Keep.Last)
-          val (touched, written) = bucketedApply(keys, last.select(keys.map(col): _*),
-            last.filter(col(opCol) =!= "delete").drop(opCol))
-          // the probe's SAME scan also counts surviving rows whose key
-          // this package deleted (broadcast mark of the stage-sized
-          // delete set) — must be zero
-          val scope = probe(bucketScope(touched))
           val deleted = last.filter(col(opCol) === "delete").select(keys.map(col): _*)
-          val r = scope.join(broadcast(deleted.withColumn("__gdel", lit(1L))), keys, "left")
-            .agg(count(lit(1)), sum(PackageWriter.rowHash(scope.columns.toSeq)),
-              sum(coalesce(col("__gdel"), lit(0L)))).head()
-          (Receipt(bucketDest(touched), r.getLong(0), PackageWriter.hashAt(r, 1)),
-            (r.isNullAt(2) || r.getLong(2) == 0L) && r.getLong(0) == written)
+          bucketedApply(keys, last.select(keys.map(col): _*),
+              last.filter(col(opCol) =!= "delete").drop(opCol)) { (scope, written) =>
+            // the probe's SAME scan also counts surviving rows whose key
+            // this package deleted (broadcast mark of the stage-sized
+            // delete set) — must be zero
+            val r = scope.join(broadcast(deleted.withColumn("__gdel", lit(1L))), keys, "left")
+              .agg(count(lit(1)), sum(PackageWriter.rowHash(scope.columns.toSeq)),
+                sum(coalesce(col("__gdel"), lit(0L)))).head()
+            ((r.getLong(0), PackageWriter.hashAt(r, 1)),
+              (r.isNullAt(2) || r.getLong(2) == 0L) && r.getLong(0) == written)
+          }
       }
       (receipt.toJsonString, verified)
     }

@@ -28,7 +28,8 @@ class AppendProbeSpec extends SparkSpec {
   private val scope = Descriptor.ScopeKey.Root.render
 
   /** Counts the SQL executions and records, per execution that scans
-    * `dest`, the paths (files or directories) its scans are rooted at. */
+    * `dest` or its stage directory `<dest>.__stage`, the paths (files
+    * or directories) its scans are rooted at. */
   private final class Recorder(dest: String) extends QueryExecutionListener {
     val executions = new AtomicInteger
     val destReads = new ConcurrentLinkedQueue[Set[String]]()
@@ -37,7 +38,7 @@ class AppendProbeSpec extends SparkSpec {
       executions.incrementAndGet()
       val roots = qe.optimizedPlan.collect { case l: LogicalRelation => l.relation }
         .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toUri.getPath) }
-        .flatten.filter(p => p == dest || p.startsWith(s"$dest/")).toSet
+        .flatten.filter(p => p == dest || p.startsWith(s"$dest/") || p == s"$dest.__stage").toSet
       if (roots.nonEmpty) destReads.add(roots)
     }
 
@@ -102,7 +103,7 @@ class AppendProbeSpec extends SparkSpec {
     assert(rec.executions.get == 3)
     val landed = parts(s"$base/pkg3/data")
     assert(landed.size > 1)
-    assert(rec.destReads.asScala.toSeq == Seq(landed.map(n => s"$dest/$n")))
+    assert(rec.destReads.asScala.toSeq == Seq(Set(s"$dest.__stage")))
     // the receipt still describes the whole table: a full audit verifies it
     assert(r3.receipt.rows == 900 && r3.receipt.listing.isDefined)
     assert(PackageWriter.verifyReceipt(Runner.readDest(spark, dest), r3.receipt))
@@ -118,10 +119,10 @@ class AppendProbeSpec extends SparkSpec {
     ledger.commit(id, scope, "legacy", r1.receipt.copy(listing = None).toJsonString)
     val (r2, full) = recorded(dest)(Runner.run(spark, cfg, events(300, 1), s"$base/pkg2", dest, ledger))
     assert(r2.committed && r2.receipt.rows == 700 && r2.receipt.listing.isDefined)
-    assert(full.destReads.asScala.toSeq == Seq(Set(dest)))
+    assert(full.destReads.asScala.toSeq == Seq(Set(s"$dest.__stage"), Set(dest)))
     val (r3, incr) = recorded(dest)(Runner.run(spark, cfg, events(200, 2), s"$base/pkg3", dest, ledger))
     assert(r3.committed && r3.receipt.rows == 900)
-    assert(incr.destReads.asScala.toSeq == Seq(parts(s"$base/pkg3/data").map(n => s"$dest/$n")))
+    assert(incr.destReads.asScala.toSeq == Seq(Set(s"$dest.__stage")))
     assert(PackageWriter.verifyReceipt(Runner.readDest(spark, dest), r3.receipt))
   }
 

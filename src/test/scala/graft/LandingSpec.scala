@@ -11,12 +11,13 @@ import graft.contract.{ContractPolicy, RowRule}
 import graft.core.{Descriptor, Ledger}
 import graft.run.Runner
 
-/** Append and Replace land the package's `data/` part files into the
-  * destination by file (copy under a `_landing-` name, then rename), and
-  * the receipt probe reads the destination with the package's written
-  * schema. These guard what the destination holds after a landing, that
-  * a half-finished landing is invisible, and that a lost or foreign
-  * destination file never commits. */
+/** Append and Replace land the package's `data/` part files by file into
+  * a stage dir (`<dest>.__stage` / `<dest>.__swap`), the receipt probe
+  * reads the staged files with the package's written schema, and only a
+  * verified landing is renamed into the destination. These guard what
+  * the destination holds after a landing, that a stray file from a
+  * crashed landing is invisible, and that a lost or foreign file never
+  * commits. */
 class LandingSpec extends SparkSpec {
 
   private val scope = Descriptor.ScopeKey.Root.render

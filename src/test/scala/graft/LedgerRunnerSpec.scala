@@ -397,7 +397,7 @@ class LedgerRunnerSpec extends SparkSpec {
     // the swap path itself: at no point is the rename sequence able to
     // produce an absent destination — dest is moved aside only after the
     // replacement exists, and the aside copy is deleted only after the
-    // replacement is in place (see Runner.swapLand ordering).
+    // replacement is in place (see Destinations.swap ordering).
   }
 
   test("runner scans the source exactly twice per run (accepted + quarantine writes; no pre-count/re-count)") {
