@@ -40,13 +40,4 @@ object LateData {
     def part(v: String) = c.filter(col(DispositionCol) === v).drop(DispositionCol)
     (part(Admit), part(Recapture), part(Quarantine))
   }
-
-  /** Window-close cursor: committed position = max(observed) − lag,
-    * never naive max (cdf: VISION.md:460-464 I5, resource.rs:389-402
-    * `CursorSpec`). Overlap is absorbed by merge dedup. */
-  def windowClosePosition(df: DataFrame, cursorCol: String, lagMs: Long): Option[Timestamp] = {
-    val row = df.agg(max(col(cursorCol)).cast("timestamp").as("mx")).head()
-    if (row.isNullAt(0)) None
-    else Some(new Timestamp(row.getTimestamp(0).getTime - lagMs))
-  }
 }

@@ -52,11 +52,13 @@ object PackageWriter {
 
   /** `schema` is the schema the package's `data/` was written with (empty
     * for manifest-only packages); `observed` holds the values of the
-    * caller's extra aggregates, observed during the data write. */
+    * caller's extra aggregates, observed during the data write;
+    * `carried` the row count and content hash of the `carryover` rows
+    * [[write]] routed out of the package, observed on their write. */
   final case class PackageResult(dir: String, packageHash: String, rows: Long,
       quarantined: Long, manifest: String, segments: Int = 1,
       contentHash: String = "", schema: StructType = new StructType(),
-      observed: Map[String, Any] = Map.empty)
+      observed: Map[String, Any] = Map.empty, carried: Option[(Long, String)] = None)
 
   /** Per-row content hash over `cols`, widened to DECIMAL(38,0) so its
     * sum is exact: the one definition every content hash is summed from. */
@@ -96,6 +98,15 @@ object PackageWriter {
       throw GraftError.State(s"package $what: write metrics not observed within $ObservationWait")
     }
 
+  /** `df` with its row count and content hash (the values of
+    * [[countAndHash]]) observed by whichever action runs it, and the wait
+    * for them once that action has run: no job of its own. */
+  def observingCountAndHash(df: DataFrame, what: String): (DataFrame, () => (Long, String)) = {
+    val o = Observation()
+    (df.observe(o, count(lit(1)).as("rows"), sum(rowHash(df.columns.toSeq)).as("hash")),
+      () => { val r = awaitMetrics(o, what); (r.getLong(0), hashAt(r, 1)) })
+  }
+
   /** Write the package in ONE pass over `df`. An [[Observation]] on the
     * data write collects the row count, the content hash and the
     * `stats/` profile (plus `extraAggs`, returned in `observed`) from
@@ -116,10 +127,22 @@ object PackageWriter {
     *
     * `maxRecordsPerFile = 0` leaves the writer's file sizing alone;
     * a positive value caps rows per written file (segmentation with no
-    * pre-count and no shuffle — see Segmentation.maxRecordsPerFile). */
+    * pre-count and no shuffle — see Segmentation.maxRecordsPerFile).
+    *
+    * `carryover` (rows with the quarantine's columns, and a directory
+    * outside the package) routes more rows out in the quarantine's job,
+    * the drain's recaptured carryover: one write partitioned by
+    * destination into `<dir>/_routed`, whose two partition directories
+    * are then renamed to `<dir>/quarantine` and the carryover's
+    * directory. A write job has a fixed cost in directories, files and
+    * (on a local file system without native IO) forked `chmod`s; one
+    * job for both outputs pays it once. Its count and content hash are
+    * observed on that write and returned in `carried`. */
   def write(df: DataFrame, quarantine: Option[DataFrame], dir: String,
       resource: String, planHash: String,
-      maxRecordsPerFile: Long = 0L, extraAggs: Seq[Column] = Nil): PackageResult = {
+      maxRecordsPerFile: Long = 0L, extraAggs: Seq[Column] = Nil,
+      carryover: Option[(DataFrame, String)] = None): PackageResult = {
+    require(carryover.isEmpty || quarantine.isDefined, "a carryover is routed with the quarantine")
     val dataDir = s"$dir/data"
 
     val statCols = df.schema.fields.filter(f => StatTypes(f.dataType.typeName)).map(_.name).toSeq
@@ -135,12 +158,36 @@ object PackageWriter {
        else w).parquet(dataDir)
       0L
     }
+    val qObs = Observation()
     val writeQuarantine = () => quarantine.fold(0L) { q =>
-      val qObs = Observation()
-      q.observe(qObs, count(lit(1)).as("rows")).write.mode("overwrite").parquet(s"$dir/quarantine")
+      carryover.fold(q.observe(qObs, count(lit(1)).as("rows"))
+          .write.mode("overwrite").parquet(s"$dir/quarantine")) { case (rows, to) =>
+        val isCarried = col(Routed)
+        q.withColumn(Routed, lit(false)).unionByName(rows.withColumn(Routed, lit(true)))
+          .observe(qObs, count_if(!isCarried).as("rows"), count_if(isCarried).as("carried"),
+            sum(when(isCarried, rowHash(rows.columns.toSeq))).as("hash"))
+          // no `_SUCCESS` marker: `_routed` is removed once its partitions moved
+          .write.mode("overwrite").option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+          .partitionBy(Routed).parquet(s"$dir/_routed")
+        val routed = new Path(s"$dir/_routed")
+        val fs = routed.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+        Seq(false -> new Path(s"$dir/quarantine"), true -> new Path(to)).foreach { case (v, dest) =>
+          val from = new Path(routed, s"$Routed=$v")
+          fs.delete(dest, true)
+          fs.mkdirs(dest.getParent)
+          // an output with no rows has no partition: it becomes an empty directory
+          val moved = if (fs.exists(from)) fs.rename(from, dest) else fs.mkdirs(dest)
+          if (!moved) throw GraftError.State(s"package $dir: could not move $from to $dest")
+        }
+        fs.delete(routed, true)
+      }
       awaitMetrics(qObs, s"$dir quarantine").getLong(0)
     }
     val Seq(_, qRows) = Par.awaitAll(Seq(writeData, writeQuarantine))
+    val carried = carryover.map { _ =>
+      val c = awaitMetrics(qObs, s"$dir carryover")
+      (c.getLong(1), hashAt(c, 2))
+    }
 
     val r = awaitMetrics(evidence, dir)
     val statIdx = 0 +: (2 to statAggs.length)
@@ -155,8 +202,11 @@ object PackageWriter {
     }
 
     writeManifest(dir, resource, planHash, r.getLong(0), qRows, df.columns.toSeq, hashAt(r, 1),
-      segments).copy(schema = df.schema, observed = extras)
+      segments).copy(schema = df.schema, observed = extras, carried = carried)
   }
+
+  /** The partition column routing [[write]]'s quarantine and carryover rows. */
+  private val Routed = "__carried"
 
   /** Overwrite `statsDir` with one Parquet file holding `row`, written
     * on the driver through the writer a DataFrame write uses (same
@@ -246,9 +296,10 @@ object PackageWriter {
     * destination against that receipt once. */
   final case class Receipt(destination: String, rows: Long, contentHash: String,
       listing: Option[String] = None) {
-    def toJsonString: String = render(JObj(Vector(
+    def toJson: JObj = JObj(Vector(
       "destination" -> JStr(destination), "rows" -> JInt(rows),
-      "content_hash" -> JStr(contentHash)) ++ listing.map("listing" -> JStr(_))))
+      "content_hash" -> JStr(contentHash)) ++ listing.map("listing" -> JStr(_)))
+    def toJsonString: String = render(toJson)
   }
 
   object Receipt {

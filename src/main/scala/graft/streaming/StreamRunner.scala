@@ -17,8 +17,13 @@ import graft.core.Ledger
   * watermark, which silently drops late rows). `Trigger.AvailableNow`
   * gives run-until-quiescent semantics: the query drains everything
   * available, then stops — the reference's drain mode exactly. The
-  * end-of-drain carryover is flushed after the query stops; if an epoch
-  * fails, the cached carryover is released before the error propagates.
+  * end-of-drain carryover is flushed after the query stops. Each
+  * epoch's recaptured rows live in `<outDir>/_carryover/`, next to the
+  * `_checkpoint/`, and its committed ledger entry records them, so a
+  * drain resumed on the same checkpoint and ledger reads the carryover
+  * the last committed epoch left (or, for a batch Spark runs again, the
+  * one that batch admitted) and delivers every row; a failed epoch
+  * leaves nothing to clean up.
   */
 object StreamRunner {
 
@@ -42,19 +47,17 @@ object StreamRunner {
     // the query ends when the source is drained: no epoch bound
     val epochs = new DrainEpoch.Epochs(stream.sparkSession,
       DrainEpoch.Config(resource, eventTimeCol, graceMs, lagMs, maxEpochs = Int.MaxValue),
-      "stream-epoch-", outDir, ledger)
-    try {
-      stream.writeStream
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", s"$outDir/_checkpoint")
-        .foreachBatch { (batch: Dataset[Row], id: Long) =>
-          val df = batch.toDF()
-          watermarkFor(df).foreach(epochs.epoch(id.toInt, df, _))
-        }
-        .start()
-        .awaitTermination()
-      val results = epochs.finish()
-      StreamResult(results, results.lastOption.flatMap(_.frontierUs))
-    } finally epochs.release()
+      "stream-epoch-", outDir, ledger, stream.schema)
+    stream.writeStream
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", s"$outDir/_checkpoint")
+      .foreachBatch { (batch: Dataset[Row], id: Long) =>
+        val df = batch.toDF()
+        watermarkFor(df).foreach(epochs.epoch(id.toInt, df, _))
+      }
+      .start()
+      .awaitTermination()
+    val results = epochs.finish()
+    StreamResult(results, results.lastOption.flatMap(_.frontierUs))
   }
 }

@@ -31,12 +31,14 @@ class PackageReadSpec extends SparkSpec {
 
   /** Counts the SQL executions, and per package directory under `root`
     * the ones whose plan reads its `data/` or `quarantine/`, records the
-    * output path of every file write, and counts schema-inference jobs:
-    * RDD-API jobs (`parallelize` outside any SQL operator) such as
-    * Parquet's footer-merging job. */
+    * root path of every file read under `root` and the output path of
+    * every file write, and counts schema-inference jobs: RDD-API jobs
+    * (`parallelize` outside any SQL operator) such as Parquet's
+    * footer-merging job. */
   private final class Recorder(root: String) extends SparkListener with QueryExecutionListener {
     val reads = new ConcurrentHashMap[String, Integer]()
     val executions = new AtomicInteger
+    val roots = new ConcurrentLinkedQueue[String]()
     val writes = new ConcurrentLinkedQueue[String]()
     val inferenceJobs = new AtomicInteger
 
@@ -44,10 +46,13 @@ class PackageReadSpec extends SparkSpec {
       executions.incrementAndGet()
       qe.analyzed.collect { case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toUri.getPath }
         .foreach(writes.add)
-      qe.optimizedPlan.collect { case l: LogicalRelation => l.relation }
+      val read = qe.optimizedPlan.collect { case l: LogicalRelation => l.relation }
         .collect { case h: HadoopFsRelation => h.location.rootPaths.map(_.toUri.getPath) }
         .flatten
-        .filter(p => p.startsWith(root) && (p.endsWith("/data") || p.endsWith("/quarantine")))
+        .filter(_.startsWith(root))
+      read.foreach(roots.add)
+      read
+        .filter(p => p.endsWith("/data") || p.endsWith("/quarantine"))
         .map(p => p.substring(0, p.lastIndexOf('/')))
         .distinct
         .foreach(dir => reads.merge(dir, 1, (a, b) => a + b))
@@ -249,7 +254,7 @@ class PackageReadSpec extends SparkSpec {
   test("cache hygiene: StreamRunner.drainAvailableNow leaves nothing cached") {
     spark.catalog.clearCache()
     val (res, _) = drainStream(tmpDir(), files = 2)
-    assert(res.epochs.exists(_.recaptured > 0)) // carryover was cached and released
+    assert(res.epochs.exists(_.recaptured > 0)) // carryover went through _carryover/, never cached
     assert(cacheEmpty)
   }
 
@@ -258,5 +263,45 @@ class PackageReadSpec extends SparkSpec {
     val (res, _) = drainEpochs(tmpDir())
     assert(res.exists(_.recaptured > 0))
     assert(cacheEmpty)
+  }
+
+  test("a drain epoch runs 3 SQL executions: its data write, one write of its quarantine and carryover, and the read-back") {
+    val base = tmpDir()
+    val ((res, out), rec) = recorded(base)(drainEpochs(base))
+    assert(res.size == 4 && res.last.recaptured == 0) // 3 epochs + the carryover flush
+    // the quarantine and the recaptured carryover are one write, routed
+    // into place from `_routed`
+    assert(rec.writes.asScala.toSeq.sorted == ((0 until 3).flatMap(n =>
+      Seq(s"$out/epoch_$n/data", s"$out/epoch_$n/_routed")) :+ s"$out/epoch_3_flush/data").sorted)
+    assert((0 until 3).forall(n => Files.isDirectory(Paths.get(out, s"epoch_$n", "quarantine"))))
+    // every other execution is one package's read-back: none counts the
+    // recaptured rows
+    assert(rec.executions.get == rec.writes.size + res.size)
+    assert(rec.readCounts == epochDirs(out).map(_ -> 1).toMap)
+  }
+
+  test("a drain reads each carryover back once, with the batches' schema: no schema-inference job") {
+    val base = tmpDir()
+    val ((res, out), rec) = recorded(base)(drainStream(base, files = 3))
+    assert(res.epochs.size == 4)
+    // epochs 1 and 2 and the flush each read the carryover before them
+    assert(rec.roots.asScala.filter(_.contains("/_carryover/")).toSeq.sorted ==
+      (0 until 3).map(n => s"$out/_carryover/epoch_$n"))
+    assert(rec.inferenceJobs.get == 0)
+  }
+
+  test("after a 6-epoch drain, _carryover/ holds at most 2 dirs") {
+    val base = tmpDir()
+    val out = s"$base/out"
+    val res = DrainEpoch.drain(spark,
+      DrainEpoch.Config("carry_dirs", "ts", graceMs = 180000L, lagMs = 1000L, maxEpochs = 10),
+      (0 until 6).map(k => events(300, 1700000000L + k * 300L, k)),
+      (0 until 6).map(k => new Timestamp((1700000000L + k * 300L + 300L) * 1000L)),
+      out, Ledger.at(base))
+    assert(res.size == 7 && res.take(6).forall(_.recaptured > 0))
+    val s = Files.list(Paths.get(out, "_carryover"))
+    val dirs = try s.iterator().asScala.map(_.getFileName.toString).toSet finally s.close()
+    assert(dirs.size <= 2)
+    assert(dirs.contains("epoch_5")) // the one the flush delivered
   }
 }
