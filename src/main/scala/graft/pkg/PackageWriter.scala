@@ -275,25 +275,24 @@ object PackageWriter {
 
   /** Destination receipt: durable, independently verifiable ack
     * (cdf VISION.md:935-954). `rows` and `content_hash` always describe
-    * the whole destination table (for an Append: the prior receipt plus
-    * the package), so [[verifyReceipt]] over the destination audits a
-    * committed receipt in full at any time.
+    * the whole destination table (the prior receipt, less the rows the
+    * run displaced, plus the rows it staged), so [[verifyReceipt]] over
+    * the destination audits a committed receipt in full at any time.
     *
-    * `listing`, recorded by an Append `Runner.run`, is the sha256 of the
-    * destination's sorted `part-*` entries as `name:size:mtime`, taken
-    * from one file listing (metadata, no rows read), after the run's
-    * files are published. The next Append checks the destination's
-    * listing against it before publishing anything, and its receipt
-    * probe scans only its own staged files (`<dest>.__stage`, read with
-    * the package's written schema), like the `(key, etag, sha256)`
-    * file manifests of cdf's Parquet/object-store receipts (SURVEY
-    * §2.2). It covers a committed part file lost, added, renamed,
-    * resized or touched. It does not cover a committed file rewritten in
-    * place under the same name, size and mtime: that file is checked by
-    * metadata, not by content, until a full [[verifyReceipt]]. A receipt
-    * without `listing` (written before listings were recorded, or by
-    * another disposition) makes the next Append probe the whole
-    * destination against that receipt once. */
+    * `listing`, recorded by every `Runner.run`, is the sha256 of the
+    * destination's sorted `part-*` entries (in Merge bucket dirs too) as
+    * `path:size:mtime`, paths relative to the destination, taken from
+    * one listing per directory (metadata, no rows read) after the run's
+    * files are published. The next run checks the destination's listing
+    * against it before publishing anything, and its receipt probe scans
+    * only its own staged files (read with the written schema), like the
+    * `(key, etag, sha256)` file manifests of cdf's Parquet/object-store
+    * receipts (SURVEY §2.2). It covers a committed part file lost, added,
+    * renamed, resized or touched. It does not cover a committed file
+    * rewritten in place under the same name, size and mtime: that file is
+    * checked by metadata, not by content, until a full [[verifyReceipt]].
+    * A receipt without `listing` (written before listings were recorded)
+    * makes the next run probe the whole destination against it once. */
   final case class Receipt(destination: String, rows: Long, contentHash: String,
       listing: Option[String] = None) {
     def toJson: JObj = JObj(Vector(

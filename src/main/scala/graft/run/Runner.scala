@@ -42,13 +42,15 @@ import graft.pkg.PackageWriter.Receipt
   * package's `data/` part files are copied into the stage dir
   * ([[land]]), never decoded or re-encoded.
   *
-  * The Append probe is O(package), not O(destination history): it
-  * scans only the staged files, and vouches for the destination's files
-  * by metadata — one listing, whose digest must equal the listing in
-  * the prior receipt ([[PackageWriter.Receipt]]); a prior receipt
-  * without one gets one full probe of the destination instead. Merge
-  * and CdcApply read the package once, for the bucketed apply: the
-  * buckets their keys touch are observed on the package write.
+  * One receipt rule for every disposition ([[PackageWriter.Receipt]]):
+  * the prior receipt, less the rows the run displaced (none for Append,
+  * all for Replace, the touched buckets' base rows for Merge/CdcApply),
+  * plus the rows it staged, with the destination's listing after
+  * publish. A run verifies when the staged probe's count + hash is what
+  * the write put there and (but for Replace) the destination's listing
+  * equals the prior receipt's; a receipt without one gets one full probe
+  * instead. The probe is O(package), not O(destination history). Merge
+  * and CdcApply read the package once, for the bucketed apply.
   */
 object Runner {
 
@@ -170,20 +172,25 @@ object Runner {
     }
   }
 
-  /** The `part-*` files of `dir` (none if it does not exist), by name,
-    * from one `listStatus`: a metadata call that reads no rows. */
-  private def partFiles(spark: SparkSession, dir: String): Map[String, FileStatus] = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) Map.empty
-    else fs.listStatus(path).filter(_.getPath.getName.startsWith("part-"))
-      .map(st => st.getPath.getName -> st).toMap
+  /** The `part-*` files of `dir` and of its Merge bucket dirs (none if
+    * `dir` does not exist), by path relative to `dir`, from one
+    * `listStatus` per directory: metadata calls that read no rows. */
+  private def listing(spark: SparkSession, dir: String): Map[String, FileStatus] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def under(d: Path, prefix: String): Seq[(String, FileStatus)] = fs.listStatus(d).toSeq.flatMap { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory && name.startsWith(s"$MergeBucketCol=")) under(st.getPath, s"$prefix$name/")
+      else if (name.startsWith("part-")) Seq(s"$prefix$name" -> st)
+      else Nil
+    }
+    if (fs.exists(root)) under(root, "").toMap else Map.empty
   }
 
-  /** sha256 of the sorted `name:size:mtime` entries of `files`: the
-    * listing an Append receipt records. */
-  private def listingDigest(files: Iterable[FileStatus]): String =
-    sha256Hex(files.map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+  /** sha256 of the sorted `path:size:mtime` entries of a [[listing]]:
+    * the listing a receipt records. */
+  private def listingDigest(files: Map[String, FileStatus]): String =
+    sha256Hex(files.map { case (n, f) => s"$n:${f.getLen}:${f.getModificationTime}" }
       .toSeq.sorted.mkString("\n"))
 
   /** Execute one bounded run: `source` → package at `pkgDir` →
@@ -281,6 +288,7 @@ object Runner {
     // Append and Replace land its files and never read it
     lazy val packaged = PackageWriter.readData(spark, pkg)
     val conf = spark.sparkContext.hadoopConfiguration
+    val NoRows = (0L, "0")
 
     /** The receipt probe's input: `stageDir` read with the written
       * `schema`, after the chaos kill-point. A staged file lost before
@@ -289,9 +297,8 @@ object Runner {
       ChaosHooks.beforeReceiptProbe.foreach(_(stageDir))
       spark.read.schema(schema).parquet(stageDir)
     }
-    /** Land the package's files into `stageDir` and probe them: whether
-      * the staged files hold exactly the package (count + content hash),
-      * and their count + hash. */
+    /** Land the package's files into `stageDir` and probe them: their
+      * count + content hash, and whether that is exactly the package's. */
     def landVerified(stageDir: String): ((Long, String), Boolean) = {
       land(spark, pkg, stageDir)
       val probed = PackageWriter.countAndHash(probe(stageDir, pkg.schema))
@@ -300,16 +307,15 @@ object Runner {
 
     /** bucket-pruned upsert/apply: read only the package's buckets
       * (observed on its write) from the base, replace keys present in
-      * `stageKeys`, add `replacement` rows. The merged touched scope is
-      * staged as a GENERATION dir `<dest>.__mergegen`, where `check`
-      * probes it against the exact row count the write observed (cdf
-      * reconciles exact counts, cdf-dest-postgres/src/commit.rs:916-943).
-      * Only a verified generation is published, each touched bucket dir
-      * swapped by rename (a first load publishes it as the destination);
-      * a bucket moved aside by a crash mid-swap is restored next run. */
-    def bucketedApply(keys: Seq[String], stageKeys: DataFrame, replacement: DataFrame)(
-        check: (DataFrame, Long) => ((Long, String), Boolean)): (Receipt, Boolean) = {
-      val staged = replacement.withColumn(MergeBucketCol, bucketOf(keys))
+      * `stageKeys`, add `replacement` rows, staged as a GENERATION dir
+      * `<dest>.__mergegen` that `check` and `priorIntact` verify. The
+      * write observes the count + hash (in `readDest`'s column order) of
+      * the base rows it displaces and of the rows it stages. A verified
+      * generation is published by swapping each touched bucket dir (a
+      * first load: as the destination); a crash mid-swap's aside bucket
+      * is restored. */
+    def bucketedApply(keys: Seq[String], stageKeys: DataFrame, replacement: DataFrame,
+        priorIntact: StructType => Boolean)(check: DataFrame => ((Long, String), Boolean)) = {
       val fs = org.apache.hadoop.fs.FileSystem.get(conf)
       val dest = new Path(destDir)
       val aside = new Path(s"$destDir.__mergeold") // prior generation, aside mid-swap
@@ -327,18 +333,20 @@ object Runner {
       // them (bounded: <= mergeBuckets ids, no package scan)
       val touched = pkg.observed(TouchedBuckets).asInstanceOf[scala.collection.Seq[Int]].toSeq.sorted
       val firstLoad = !fs.exists(dest)
-      val merged = if (firstLoad) staged else {
+      val (merged, displaced) = if (firstLoad) (replacement, () => NoRows) else {
         // partition pruning: only touched bucket dirs are read
-        val base = spark.read.parquet(destDir)
-          .filter(col(MergeBucketCol).isin(touched.map(Int.box): _*))
+        val (base, displaced) = PackageWriter.observingCountAndHash(spark.read.parquet(destDir)
+          .filter(col(MergeBucketCol).isin(touched.map(Int.box): _*)).drop(MergeBucketCol), "merge base")
         val survivors = base.join(stageKeys, keys, "left_anti")
-        staged.select(base.columns.map(col): _*)
-          .unionByName(survivors.select(base.columns.map(col): _*))
+        (replacement.select(base.columns.map(col): _*)
+          .unionByName(survivors.select(base.columns.map(col): _*)), displaced)
       }
-      val ((rows, hash), verified) = Destinations.staged(spark, s"$destDir.__mergegen") { gen =>
-        val obs = org.apache.spark.sql.Observation()
-        merged.observe(obs, count(lit(1)).as("rows")).write.partitionBy(MergeBucketCol).parquet(gen)
-        check(probe(gen, merged.schema).drop(MergeBucketCol), obs.get("rows").asInstanceOf[Long])
+      val (observed, written) = PackageWriter.observingCountAndHash(merged, "merge")
+      val out = observed.withColumn(MergeBucketCol, bucketOf(keys))
+      val staged = Destinations.staged(spark, s"$destDir.__mergegen") { gen =>
+        out.write.partitionBy(MergeBucketCol).parquet(gen)
+        val (probed, ok) = check(probe(gen, out.schema).drop(MergeBucketCol))
+        (probed, ok && probed == written() && priorIntact(out.schema))
       } { gen =>
         if (firstLoad) require(fs.rename(gen, dest), s"merge publish failed: could not move $gen into place")
         else {
@@ -359,8 +367,7 @@ object Runner {
           fs.delete(aside, true)
         }
       }
-      val scope = if (firstLoad) "" else s"#buckets=${touched.mkString(",")}"
-      (Receipt(s"parquet:$destDir$scope", rows, hash), verified)
+      (displaced(), staged, if (firstLoad) "" else s"#buckets=${touched.mkString(",")}")
     }
 
     // 6–8. settle (Ledger.settle): a package hash committed ANYWHERE in
@@ -371,47 +378,37 @@ object Runner {
     //    Delivery is stage → verify → publish: Append and Replace land
     //    the package's files in the stage dir, Merge and CdcApply stage
     //    ONLY the hash buckets their keys fall in — a 1% package pays ~1%
-    //    of the destination. The receipt is ONE probe scan of the staged
-    //    output (count + content hash in one aggregation job), checked
-    //    against write-side expectations BEFORE anything is published.
+    //    of the destination. Each delivery returns what it displaced, what
+    //    it staged and its verdict; one rule below makes the receipt.
     val settled = ledger.settle(cfg.descriptor.id, Descriptor.ScopeKey.Root.render,
         pkg.packageHash, position) { head =>
-      val (receipt, verified) = cfg.descriptor.disposition match {
+      val prior = head.flatMap(_.receipt).map(Receipt.fromJson)
+        .getOrElse(Receipt("", 0L, "0", Some(listingDigest(Map.empty))))
+      /** The verdict's second check: the destination still holds the
+        * files `prior` describes — by the listing it recorded, or (a
+        * receipt without one) by one full probe, read with `schema`. */
+      def priorIntact(schema: StructType): Boolean = prior.listing.fold(
+        PackageWriter.countAndHash(spark.read.schema(schema).parquet(destDir).drop(MergeBucketCol)) ==
+          (prior.rows, prior.contentHash))(_ == listingDigest(listing(spark, destDir)))
+
+      val (displaced, (staged, verified), scope) = cfg.descriptor.disposition match {
         case Descriptor.Disposition.Append =>
-          // the content hash is an exact decimal SUM of per-row hashes,
-          // so the destination must hold the prior receipt + the package
-          val prior = head.flatMap(_.receipt).map(Receipt.fromJson)
-            .getOrElse(Receipt("", 0L, "0", Some(listingDigest(Nil))))
-          val (_, verified) = Destinations.staged(spark, s"$destDir.__stage") { stage =>
-            val (_, landedOk) = landVerified(stage)
-            // the committed files: by the listing the prior receipt
-            // recorded, or (a receipt without one) by one full probe
-            ((), landedOk && prior.listing.fold(
-              PackageWriter.countAndHash(spark.read.schema(pkg.schema).parquet(destDir)) ==
-                (prior.rows, prior.contentHash))(
-              _ == listingDigest(partFiles(spark, destDir).values)))
+          (NoRows, Destinations.staged(spark, s"$destDir.__stage") { stage =>
+            val (probed, landedOk) = landVerified(stage)
+            (probed, landedOk && priorIntact(pkg.schema))
           } { stage =>
             val fs = stage.getFileSystem(conf)
             fs.mkdirs(new Path(destDir))
-            partFiles(spark, stage.toString).keys.foreach { n =>
+            listing(spark, stage.toString).keys.foreach { n =>
               require(fs.rename(new Path(stage, n), new Path(destDir, n)),
                 s"publish failed: could not move $n into $destDir")
             }
-          }
-          (Receipt(s"parquet:$destDir", prior.rows + pkg.rows,
-            (BigInt(prior.contentHash) + BigInt(pkg.contentHash)).toString,
-            Some(listingDigest(partFiles(spark, destDir).values))), verified)
+          }, "")
         case Descriptor.Disposition.Replace =>
-          val ((rows, hash), verified) = Destinations.swap(spark, destDir)(landVerified)
-          (Receipt(s"parquet:$destDir", rows, hash), verified)
+          ((prior.rows, prior.contentHash), Destinations.swap(spark, destDir)(landVerified), "")
         case Descriptor.Disposition.Merge(keys) =>
-          bucketedApply(keys, packaged.select(keys.map(col): _*), packaged) { (scope, written) =>
-            val probed @ (rows, _) = PackageWriter.countAndHash(scope)
-            // EXACT reconciliation: `>=` alone would miss a bucket that
-            // dropped survivor rows while the staged rows landed; every
-            // staged row survives an upsert
-            (probed, rows == written && rows >= pkg.rows)
-          }
+          bucketedApply(keys, packaged.select(keys.map(col): _*), packaged, priorIntact)(
+            scope => (PackageWriter.countAndHash(scope), true))
         case Descriptor.Disposition.CdcApply(keys, opCol) =>
           // ordered net effect of the package per key; a terminal delete
           // REMOVES the key from the destination (anti-join on ALL staged
@@ -422,26 +419,27 @@ object Runner {
             if (cfg.orderColumns.nonEmpty) cfg.orderColumns else keys, Dedup.Keep.Last)
           val deleted = last.filter(col(opCol) === "delete").select(keys.map(col): _*)
           bucketedApply(keys, last.select(keys.map(col): _*),
-              last.filter(col(opCol) =!= "delete").drop(opCol)) { (scope, written) =>
+              last.filter(col(opCol) =!= "delete").drop(opCol), priorIntact) { scope =>
             // the probe's SAME scan also counts surviving rows whose key
             // this package deleted (broadcast mark of the stage-sized
             // delete set) — must be zero
             val r = scope.join(broadcast(deleted.withColumn("__gdel", lit(1L))), keys, "left")
               .agg(count(lit(1)), sum(PackageWriter.rowHash(scope.columns.toSeq)),
                 sum(coalesce(col("__gdel"), lit(0L)))).head()
-            ((r.getLong(0), PackageWriter.hashAt(r, 1)),
-              (r.isNullAt(2) || r.getLong(2) == 0L) && r.getLong(0) == written)
+            ((r.getLong(0), PackageWriter.hashAt(r, 1)), r.isNullAt(2) || r.getLong(2) == 0L)
           }
       }
-      (receipt.toJsonString, verified)
+      // the one receipt rule: the whole table is the prior receipt, less
+      // what this delivery displaced, plus what it staged (exact sums of
+      // per-row hashes), and the destination's listing after publish
+      (Receipt(s"parquet:$destDir$scope", prior.rows - displaced._1 + staged._1,
+        (BigInt(prior.contentHash) - BigInt(displaced._2) + BigInt(staged._2)).toString,
+        Some(listingDigest(listing(spark, destDir)))).toJsonString, verified)
     }
 
-    val (receipt, at) =
-      if (settled.duplicate) (Receipt(s"parquet:$destDir", pkg.rows, pkg.contentHash),
-        settled.entry.position.map(Position.fromJson))
-      else (Receipt.fromJson(settled.entry.receipt.get), position)
-    RunResult(pkg.packageHash, pkg.rows, pkg.quarantined, receipt,
-      committed = true, duplicate = settled.duplicate, at,
+    // the committed entry's receipt and position, on a replay as on a commit
+    RunResult(pkg.packageHash, pkg.rows, pkg.quarantined, Receipt.fromJson(settled.entry.receipt.get),
+      committed = true, duplicate = settled.duplicate, settled.entry.position.map(Position.fromJson),
       schemaFingerprint = fingerprint, segments = segRecording.segments)
   }
 }

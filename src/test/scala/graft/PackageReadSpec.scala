@@ -172,6 +172,22 @@ class PackageReadSpec extends SparkSpec {
     assert(rec.executions.get == 3)
   }
 
+  test("Runner.run(Append) onto a destination a Replace committed runs 3 SQL executions") {
+    val base = tmpDir(); val ledger = Ledger.at(base)
+    def config(disposition: Descriptor.Disposition) = {
+      val cfg = appendConfig("reads_replaced", cursor = None)
+      cfg.copy(descriptor = cfg.descriptor.copy(disposition = disposition))
+    }
+    val r1 = Runner.run(spark, config(Descriptor.Disposition.Replace),
+      events(500, 1700000000L, 0), s"$base/pkg1", s"$base/dest", ledger)
+    val (r, rec) = recorded(base)(Runner.run(spark, config(Descriptor.Disposition.Append),
+      events(300, 1700000000L, 1), s"$base/pkg2", s"$base/dest", ledger))
+    assert(r.committed && !r.duplicate && r.receipt.rows == r1.accepted + r.accepted)
+    // the Replace's receipt records a listing, which vouches for its
+    // files: no full probe of the destination
+    assert(rec.executions.get == 3)
+  }
+
   test("PackageWriter.write runs 2 SQL executions with a quarantine frame, 1 without, none writing stats/") {
     val src = events(200, 1700000000L, 0)
     Seq(Some(src.filter(col("value") > 150)) -> 2, None -> 1).foreach { case (quarantine, n) =>
