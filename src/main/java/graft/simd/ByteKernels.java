@@ -236,7 +236,7 @@ public final class ByteKernels {
     return passN;
   }
 
-  // Measurement note (tools/SimdProbe, round 14): the IEEE total-order
+  // Measurement note (SCALE.md round-14 notes): the IEEE total-order
   // trick (raw-bits XOR sign-flip → long compares) was tried here and
   // LOST — 2.07 vs 1.83 ns/row clean — because C2 does not vectorize
   // the MoveD2L in the loop body; the explicit Vector API variant
@@ -319,7 +319,7 @@ public final class ByteKernels {
   // The contiguous 1-byte string rows (flag columns) previously ran on
   // Vector API compare blocks whose mask left the vector domain through
   // VectorMask.toLong — measured at a flat ~1.4 ns/row regardless of
-  // candidate count (tools/SimdProbe r14), i.e. the BRIDGE is the cost,
+  // candidate count (SCALE.md round-14 notes), i.e. the BRIDGE is the cost,
   // not the compares. These SWAR kernels stay in scalar registers the
   // whole way: 8 rows load as ONE little-endian long (VarHandle view,
   // intrinsified), byte-equality becomes the classic zero-byte trick

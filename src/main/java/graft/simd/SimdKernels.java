@@ -4,7 +4,6 @@ import jdk.incubator.vector.ByteVector;
 import jdk.incubator.vector.DoubleVector;
 import jdk.incubator.vector.IntVector;
 import jdk.incubator.vector.LongVector;
-import jdk.incubator.vector.VectorMask;
 import jdk.incubator.vector.VectorOperators;
 import jdk.incubator.vector.VectorSpecies;
 
@@ -13,7 +12,7 @@ import jdk.incubator.vector.VectorSpecies;
  * lanes where hand-written SIMD measurably BEATS what C2's SuperWord
  * pass generates for the branchless loops in {@link ByteKernels}.
  *
- * Measurement note (tools/SimdProbe, 4M rows, this host, JDK 17): the
+ * Measurement note (SCALE.md round-14 notes, 4M rows, JDK 17): the
  * first cut of this class carried explicit range kernels
  * (compare → trueCount → rank merge under mask). They won only on
  * uniform blocks (all-pass 0.74 ns/row) and LOST 3-5x on mixed
@@ -23,9 +22,8 @@ import jdk.incubator.vector.VectorSpecies;
  * software on JDK 17, while C2 auto-vectorizes the branchless
  * compare+cmov loops end to end. Those kernels were deleted: the
  * branchless {@link ByteKernels} loops ARE the SIMD range kernels here,
- * by construction of the JIT. What remains is the one shape where the
- * mask and the rank share a species, so the blend is a single native
- * instruction: the byte-lane NotNull kernel.
+ * by construction of the JIT. What remains is the int-lane layout check
+ * ({@link #unitStrings}) that gates the SWAR byte lanes.
  *
  * Availability contract: incubator types appear only inside method
  * bodies (species are locals, no incubator types in any descriptor);
@@ -77,55 +75,5 @@ public final class SimdKernels {
       if (lens[i] != 1 || offs[i] != off0 + i) return false;
     }
     return true;
-  }
-
-  /** Set membership over the contiguous 1-byte rows:
-   *  child[base+i] ∈ {c0,c1,c2,c3} (callers pad unused slots with c0),
-   *  one PASS BIT per row into bits (64 rows/word, tail zeroed).
-   *  One 512-bit compare block per 64 rows; the mask leaves the vector
-   *  domain through VectorMask.toLong.
-   *
-   *  Round-14 status: DEMOTED from the dispatch — the toLong bridge
-   *  costs a flat ~1.48 ns/row regardless of candidate count
-   *  (candidate-count-specialized variants measured identical), while
-   *  the SWAR formulation in {@link ByteKernels#byteSet4ContigSwar}
-   *  runs 0.28-0.38 ns/row with no module dependency. Kept as the
-   *  vector-api reference point for tools/SimdProbe regressions. */
-  public static long byteSetContigBits(byte[] child, int base, int n,
-      byte c0, byte c1, byte c2, byte c3, byte[] nulls, long[] bits) {
-    VectorSpecies<Byte> sp = ByteVector.SPECIES_PREFERRED;
-    int lanes = sp.length();
-    long passN = 0L;
-    int i = 0;
-    int upper = n & ~63;
-    for (; i < upper; i += 64) {
-      long word = 0L;
-      for (int j = 0; j < 64; j += lanes) {
-        ByteVector b = ByteVector.fromArray(sp, child, base + i + j);
-        VectorMask<Byte> pass = b.compare(VectorOperators.EQ, c0)
-            .or(b.compare(VectorOperators.EQ, c1))
-            .or(b.compare(VectorOperators.EQ, c2))
-            .or(b.compare(VectorOperators.EQ, c3));
-        if (nulls != null) {
-          pass = pass.and(ByteVector.fromArray(sp, nulls, i + j)
-              .compare(VectorOperators.EQ, (byte) 0));
-        }
-        word |= pass.toLong() << j;
-      }
-      bits[i >> 6] = word;
-      passN += Long.bitCount(word);
-    }
-    if (i < n) {
-      long word = 0L;
-      for (int k = i; k < n; k++) {
-        byte b = child[base + k];
-        boolean ok = (nulls == null || nulls[k] == 0)
-            & (b == c0 | b == c1 | b == c2 | b == c3);
-        word |= (ok ? 1L : 0L) << (k - i);
-      }
-      bits[i >> 6] = word;
-      passN += Long.bitCount(word);
-    }
-    return passN;
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.util.Locale
 
+import org.apache.spark.sql.SparkSession
+
 /** Benchmark main: runs every catalog query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line {"metric","value","unit","derived","sf"}.
   *
@@ -45,6 +47,30 @@ object Bench {
         (md.map("%02x".format(_)).mkString.take(16), files.map(f => Files.size(f._2)).sum)
       }
     } catch { case e: Exception => (s"error:${e.getClass.getName}", 0L) }
+  }
+
+  /** One timed rep of a catalog cell, shared by the sweep below and
+    * `graft.tools.Probe`: the query runs under its job label into the
+    * noop sink, and the cleanup runs outside the timer. A rep that
+    * throws returns -1, never a time. */
+  def timedRep(spark: SparkSession, sfDir: String, q: graft.core.QueryDef): Double = {
+    spark.sparkContext.setJobDescription(q.name) // guide §1.5: label cells
+    val t0 = System.nanoTime()
+    val ok =
+      try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); false }
+    val sec = (System.nanoTime() - t0) / 1e9
+    // drop persist barriers a query left behind: cached partitions
+    // otherwise accumulate across the suite and steal executor memory
+    // from every later cell
+    spark.catalog.clearCache()
+    // reclaim the cell's scratch fixtures NOW (outside the timed
+    // region): a full sweep otherwise accumulates every fixture dir
+    // in the tmpdir, competing for the page cache later cells run on
+    graft.core.Scratch.reclaim()
+    spark.sparkContext.setJobDescription(null)
+    if (ok) sec else -1.0
   }
 
   def main(args: Array[String]): Unit = {
@@ -107,25 +133,6 @@ object Bench {
     val only = argOnly.orElse(sys.env.get("SPARK_GRAFT_ONLY"))
       .map(_.split(",").map(_.trim).toSet)
     val selected = graft.catalog.Catalog.all.filter(q => only.forall(_.contains(q.name)))
-    def once(q: graft.core.QueryDef): Double = {
-      spark.sparkContext.setJobDescription(q.name) // guide §1.5: label cells
-      val t0 = System.nanoTime()
-      val ok =
-        try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); false }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // drop persist barriers a query left behind: cached partitions
-      // otherwise accumulate across the suite and steal executor memory
-      // from every later cell
-      spark.catalog.clearCache()
-      // reclaim the cell's scratch fixtures NOW (outside the timed
-      // region): a full sweep otherwise accumulates every fixture dir
-      // in the tmpdir, competing for the page cache later cells run on
-      graft.core.Scratch.reclaim()
-      spark.sparkContext.setJobDescription(null)
-      if (ok) sec else -1.0
-    }
     // Three timed runs per cell, headline = min (the engine's steady-state
     // cost; this shared host lands random multi-second co-tenant/GC spikes
     // one-sidedly, so min-of-3 is the reproducible estimator — a zero-diff
@@ -136,7 +143,7 @@ object Bench {
     // non-zero): it must never pass as a faster cell.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = selected.map { q =>
-      val all = marked(q.name)((1 to 3).map(_ => once(q)))
+      val all = marked(q.name)((1 to 3).map(_ => timedRep(spark, sfDir, q)))
       val runs = all.filter(_ >= 0).sorted
       if (runs.length < all.length) failed += q.name
       val cell =
@@ -188,10 +195,11 @@ object Bench {
     // output would spend timed wall-clock deleting thousands of files.
     // Root policy RE-MEASURED r15 (core/Scratch): bulk parquet writes on
     // THIS host run ~40% faster on the disk tmpdir's write-back path
-    // than on tmpfs (SinkProbe A/B, sink med 7.2M vs 5.1M rows/s) — the
-    // r9 shm choice was measured on a different host and is reversed
-    // here, explicitly, as a measurement-environment fix (same timed
-    // work, same methodology; SPARK_GRAFT_SCRATCH overrides for A/B).
+    // than on tmpfs (OPTIMIZATION_r15.md batch 3: sink med 7.2M vs
+    // 5.1M rows/s) — the r9 shm choice was measured on a different
+    // host and is reversed here, explicitly, as a measurement-
+    // environment fix (same timed work, same methodology;
+    // SPARK_GRAFT_SCRATCH overrides for A/B).
     val sinkDir = java.nio.file.Files.createTempDirectory(
       graft.core.Scratch.root, "graft_bench").toString
 
@@ -283,7 +291,7 @@ object Bench {
     // back-to-back halves; headline = min over ALL, and the
     // min-of-half-1 / min-of-half-2 ratio is emitted — a cell is
     // adjudicable only when that ratio stays within 1.3.
-    // WHERE THE FLOOR IS (tools/PerCoreProbe, r9): the scan→sink
+    // WHERE THE FLOOR IS (SCALE.md round-9 notes): the scan→sink
     // pass alone runs ~0.46 row-GB/s/core — that is Spark's
     // vectorized-decode → ColumnarToRow/UnsafeRow boundary, ~160ns
     // per 16-column row, and no projection above it can beat it. The

@@ -590,39 +590,24 @@ object RankStatsQueries {
       "sort exists. Per-row ranks rejoin the fact rows by VALUE (two co-keyed joins " +
       "against tie-collapsed histograms), and all six Pearson terms accumulate in " +
       "DECIMAL(38,0)/HUGEINT with one double cast each.") { (s, d) =>
-    // shipped configuration is a MEASUREMENT (tools/SpearmanProbe A/B,
-    // OPTIMIZATION_r16.md): NO spread — r15's round-robin exchange on
-    // the fact projection cost more than the 1-task map side saved
-    // (probe: 2.92 with vs 2.45 without; at real scale splits >= cores
-    // and the spread was a no-op anyway); persist kept (3 consumers);
-    // x histogram broadcast unconditionally (l_quantity's domain is
-    // genuinely bounded: 1..50 cents-scale); y histogram broadcast
-    // behind a COUNT GATE (r15 ADVICE: distinct prices grow with part
-    // count, so "value-bounded" was not scale-safe for y — past the
-    // gate the join falls back to the shuffle form).
-    spearmanDf(s, d, spreadFact = false, persistPts = true,
-      hintX = true, yGateRows = 4L << 20)
+    spearmanDf(s, d)
   }
 
-  /** q_spearman's dataflow with each optimization knob explicit, so
-    * the shipped configuration is probe-selected (tools/SpearmanProbe)
-    * rather than believed. Every variant computes the same result.
+  /** q_spearman's dataflow. Each choice below was selected by a
+    * measured A/B of every combination (OPTIMIZATION_r16.md item 6).
     *
     * The one-row result is computed here and returned as a local
     * frame, so everything the computation persists (the fact
     * projection, the y histogram, RunningTotals' sorted histograms) is
     * released before the call returns, also when it throws. */
-  private[graft] def spearmanDf(s: SparkSession, d: String,
-      spreadFact: Boolean, persistPts: Boolean,
-      hintX: Boolean, yGateRows: Long): DataFrame = graft.core.CacheScope {
-    // spread: the fact pass (two histogram builds + the six-term
-    // decimal Pearson aggregate) is CPU-bound and the one-row-group
-    // testdata scan would otherwise run it on one core (core/Par)
-    val base = t(s, d, "lineitem").select(
+  private[graft] def spearmanDf(s: SparkSession, d: String): DataFrame = graft.core.CacheScope {
+    // no spread: r15's round-robin exchange on the fact projection cost
+    // more than the 1-task map side saved (2.92 with vs 2.45 without; at
+    // real scale splits >= cores and the spread is a no-op anyway); the
+    // projection is persisted for its 3 consumers
+    val pts = graft.core.CacheScope.persist(t(s, d, "lineitem").select(
       (col("l_quantity").cast(DecimalType(12, 2)) * 100).cast("long").as("x"),
-      (col("l_extendedprice").cast(DecimalType(12, 2)) * 100).cast("long").as("y"))
-    val pts0 = if (spreadFact) graft.core.Par.spread(base) else base
-    val pts = if (persistPts) graft.core.CacheScope.persist(pts0) else pts0
+      (col("l_extendedprice").cast(DecimalType(12, 2)) * 100).cast("long").as("y")))
     def midranks(vCol: String, out: String): DataFrame = {
       val hist = pts.groupBy(vCol).agg(count(lit(1)).as("c"))
       graft.operators.RunningTotals
@@ -636,14 +621,16 @@ object RankStatsQueries {
     // broadcasts the FACT side (plan-audited r15: BuildLeft over the
     // whole lineitem projection — an OOM at real scale) or falls back
     // to two SortMergeJoins that shuffle every fact row by value.
-    // x is hinted unconditionally (bounded domain); y only while its
-    // actual cardinality stays under yGateRows — the count runs on the
-    // persisted histogram, one tiny extra job.
+    // x is hinted unconditionally (l_quantity's domain is genuinely
+    // bounded: 1..50 cents-scale); y only while its actual cardinality
+    // stays under a 4 Mi-row gate (distinct prices grow with part count,
+    // so "value-bounded" is not scale-safe for y; past the gate the join
+    // falls back to the shuffle form) — the count runs on the persisted
+    // histogram, one tiny extra job.
     val yh = graft.core.CacheScope.persist(midranks("y", "ry"))
     val xh = midranks("x", "rx")
-    val xJ = if (hintX) broadcast(xh) else xh
-    val yJ = if (yh.count() <= yGateRows) broadcast(yh) else yh
-    val ranked = pts.join(xJ, "x").join(yJ, "y")
+    val yJ = if (yh.count() <= (4L << 20)) broadcast(yh) else yh
+    val ranked = pts.join(broadcast(xh), "x").join(yJ, "y")
     val s6 = ranked.agg(
       count(lit(1)).cast(dec38).as("n"),
       sum(col("rx").cast(dec38)).as("sx"), sum(col("ry").cast(dec38)).as("sy"),

@@ -63,7 +63,7 @@ object ColumnarValidation {
     * OWNS its batch loop ([[VecTest.runBits]]): the per-row calls
     * inside are then monomorphic receivers the JIT inlines — a single
     * shared loop calling `pass(v, i)` through the trait was measured
-    * megamorphic (tools/KernelProbe: the same work ran slower than the
+    * megamorphic (a per-rule kernel A/B: the same work ran slower than the
     * sum of its single-rule cells). `pass` remains the semantic spec
     * and the slow-path; `runBits` must agree with a pass()-loop
     * exactly.
@@ -364,7 +364,7 @@ object ColumnarValidation {
     *  - plain `WritableColumnVector` (the vectorized parquet reader's
     *    non-dictionary pages, and [[graft.tools.KernelFixture]]): read
     *    (offset, length) + child bytes directly — no UTF8String is
-    *    ever constructed (tools/KernelProbe measured the per-row
+    *    ever constructed (a per-rule kernel A/B measured the per-row
     *    `getUTF8String` wrapper at ~25 of the 30ns/row these kernels
     *    used to cost: 4.8M allocations per pass is GC, not compare);
     *  - dictionary-encoded pages: evaluate once per distinct dict id
@@ -610,10 +610,10 @@ object ColumnarValidation {
     // (64 Ki rows × |ruleCols| × ~16 B ≈ a few MB per reader, vs the
     // 4096-row default sized for arbitrary-width row pipelines) and it
     // amortizes the per-batch fixed costs that dominated the cell
-    // (tools/DecodeProbe: 0.158 → 0.098 s on the same file; the pure
-    // decode floor for the 5 gated columns is 0.055 s). Scoped to this
-    // plan: set for the planning+execution of the kernel scan, restored
-    // after — the caller's session geometry is untouched.
+    // (SCALE.md round-9 notes: 0.158 → 0.098 s on the same file; the
+    // pure decode floor for the 5 gated columns is 0.055 s). Scoped to
+    // this plan: set for the planning+execution of the kernel scan,
+    // restored after — the caller's session geometry is untouched.
     val batchKey = "spark.sql.parquet.columnarReaderBatchSize"
     val prevBatch = spark.conf.getOption(batchKey)
     spark.conf.set(batchKey, "65536")

@@ -20,9 +20,9 @@ import org.apache.spark.sql.vectorized.ColumnVector
   *  1. Numeric range/threshold rules and general string rules route to
   *     the branchless bit loops in `ByteKernels` (SuperWord-vectorized).
   *  2. The explicit Vector API (`SimdKernels`, needs `--add-modules
-  *     jdk.incubator.vector` — wired in build.sbt/.jvmopts) covers the
-  *     contiguous 1-byte string rows (`byteSetContigBits`, 64 rows per
-  *     512-bit compare block). Module absence is RECORDED
+  *     jdk.incubator.vector` — wired in build.sbt/.jvmopts) checks the
+  *     contiguous 1-byte string-row layout (`unitStrings`) that the SWAR
+  *     byte lanes in `ByteKernels` need. Module absence is RECORDED
   *     ([[FastLanes.simdStatus]]), not an error.
   *  3. Anything that doesn't expose plain on-heap arrays — off-heap
   *     vectors, dictionary pages (memoized upstream), reflection
@@ -225,7 +225,7 @@ private[graft] object FastLanes {
   // API compare blocks measured a flat ~1.48 ns/row regardless of
   // candidate count — the VectorMask.toLong bridge, not the compares,
   // was the cost. The SWAR kernels (8 rows per scalar long, zero-byte
-  // trick + multiply-gather) run 0.28–0.38 ns/row (tools/SimdProbe)
+  // trick + multiply-gather) run 0.28–0.38 ns/row (SCALE.md round-14 notes)
   // and need no incubator module.
   private def set4(sa: StringArrays, n: Int, c0: Byte, c1: Byte, c2: Byte,
       c3: Byte, bits: Array[Long]): Long =

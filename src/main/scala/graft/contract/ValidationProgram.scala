@@ -94,7 +94,7 @@ object ValidationProgram {
   /** rank → string via a LITERAL-ARRAY index (ranks are contiguous
     * 0..4 by construction): one bounds-checked read of a constant
     * UTF8String per row instead of a 5-branch when-chain re-comparing
-    * the rank. Measured (tools/PerCoreProbe, single-core cell):
+    * the rank. Measured (SCALE.md round-9 notes, single-core cell):
     * wall-equal to the when-chain — the validation increment over the
     * same-width noop floor is rule evaluation itself (byte compares
     * on the gated string columns) plus the two contract string

@@ -57,8 +57,9 @@ final class Ledger(path: Path) {
   def entries(): Seq[Entry] =
     if (!Files.exists(path)) Vector.empty
     else {
-      scala.jdk.CollectionConverters.IteratorHasAsScala(
-        Files.lines(path, StandardCharsets.UTF_8).iterator()).asScala
+      // closed here, not at a GC: every settle reads the ledger twice
+      val lines = Files.lines(path, StandardCharsets.UTF_8)
+      try scala.jdk.CollectionConverters.IteratorHasAsScala(lines.iterator()).asScala
         .filter(_.nonEmpty)
         .map { l =>
           // structural parse (full unescape incl. \n \r \t \uXXXX),
@@ -81,6 +82,7 @@ final class Ledger(path: Path) {
           Entry(long("seq"), str("resource"), str("scope"), str("state"),
             str("package_hash"), optStr("position"), optStr("receipt"))
         }.toVector
+      finally lines.close()
     }
 
   private def append(e: Entry): Entry = synchronized {

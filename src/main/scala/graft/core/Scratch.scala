@@ -6,9 +6,9 @@ package graft.core
   *
   *  - BULK PARQUET/FORMAT WRITES (fixture tables, roundtrip staging,
   *    bench sinks) run ~40% to 4× FASTER on the disk tmpdir than on
-  *    /dev/shm on this kernel (SinkProbe A/B: sink med 7.2M rows/s on
-  *    /tmp vs 5.1M on shm; q_iceberg_merge 1.7s vs 7.6s, q_ndjson_decode
-  *    1.3s vs 3.5s) — tmpfs pays fresh-page faults on every write while
+  *    /dev/shm on this kernel (OPTIMIZATION_r15.md batch 3: sink med
+  *    7.2M rows/s on /tmp vs 5.1M on shm; q_iceberg_merge 1.7s vs 7.6s,
+  *    q_ndjson_decode 1.3s vs 3.5s) — tmpfs pays fresh-page faults on every write while
   *    ext4 rides the write-back page cache. `dir()` therefore defaults
   *    to java.io.tmpdir. The r9 shm choice was measured on a different
   *    host; this round re-measured and reversed it.

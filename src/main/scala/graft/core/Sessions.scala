@@ -32,7 +32,7 @@ object Sessions {
   }
 
   /** Run `body` with streaming-sized runtime confs (r16: each one
-    * measured per cell with tools/ConfProbe, see OPTIMIZATION_r16.md).
+    * measured per cell by a conf A/B, see OPTIMIZATION_r16.md item 4).
     *
     * - shuffle.partitions (= state-partition count): stateful streaming
     *   queries pay per-micro-batch fixed cost PER STATE PARTITION
@@ -55,14 +55,18 @@ object Sessions {
     *   batches of state/offset/commit files instead of 100 — these
     *   drain-and-stop fixtures never restart mid-stream, and a real
     *   deployment tunes retention to its recovery SLA. */
-  def withStreamingShuffle[T](s: SparkSession)(body: => T): T = {
-    val keys = Seq(
+  def withStreamingShuffle[T](s: SparkSession)(body: => T): T =
+    withConfs(s, Seq(
       "spark.sql.shuffle.partitions" ->
         sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4"),
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
-      "spark.sql.streaming.minBatchesToRetain" -> "2")
-    val prev = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
+      "spark.sql.streaming.minBatchesToRetain" -> "2"))(body)
+
+  /** Run `body` with `confs` set, then give each key back the value (or
+    * the absence) it had before, also when `body` throws. */
+  def withConfs[T](s: SparkSession, confs: Seq[(String, String)])(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
     try body finally prev.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)

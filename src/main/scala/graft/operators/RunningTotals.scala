@@ -39,7 +39,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   * boundaries). The persist is scoped to the enclosing query: a caller
   * that computes its result eagerly releases it with `core.CacheScope`
   * (q_spearman does), and every harness main (Verify, Bench,
-  * QueryProbe) calls `spark.catalog.clearCache()` after each query, so
+  * tools.Probe) calls `spark.catalog.clearCache()` after each query, so
   * these plans never accumulate across the catalog sweep — any NEW
   * entry point running many queries in one session must do the same.
   */
