@@ -15,10 +15,9 @@ import java.util.Arrays;
  * zeroing the unused tail bits of the last word, and returns the pass
  * count. Verdict assignment happens AFTER all rules ran, by word-wise
  * boolean algebra + popcount in the caller — so no kernel ever touches
- * a byte rank array, and the data→mask→rank bridge that made the rank
- * formulation 3-6 ns/row (tools/BitProbe, this host) disappears. The
- * branchless bit-assembly loops below auto-vectorize under C2's
- * SuperWord (geLong 6.4 → 0.9 ns/row measured).
+ * a byte rank array, and the data→mask→rank bridge that dominated the
+ * rank formulation disappears. The branchless bit-assembly loops below
+ * auto-vectorize under C2's SuperWord.
  *
  * Null semantics (same as before): {@code nulls} may be null (no null
  * in the batch); a null row fails every rule here (NotNull has its own

@@ -55,22 +55,22 @@ object Bench {
     * throws returns -1, never a time. */
   def timedRep(spark: SparkSession, sfDir: String, q: graft.core.QueryDef): Double = {
     spark.sparkContext.setJobDescription(q.name) // guide §1.5: label cells
-    val t0 = System.nanoTime()
-    val ok =
-      try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); false }
-    val sec = (System.nanoTime() - t0) / 1e9
-    // drop persist barriers a query left behind: cached partitions
-    // otherwise accumulate across the suite and steal executor memory
-    // from every later cell
-    spark.catalog.clearCache()
+    // the query's scope releases everything it kept when the block
+    // ends, after the timer has stopped
+    val sec = graft.core.CacheScope {
+      val t0 = System.nanoTime()
+      try {
+        q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] ${q.name} failed: ${e.getMessage}"); -1.0 }
+    }
     // reclaim the cell's scratch fixtures NOW (outside the timed
     // region): a full sweep otherwise accumulates every fixture dir
     // in the tmpdir, competing for the page cache later cells run on
     graft.core.Scratch.reclaim()
     spark.sparkContext.setJobDescription(null)
-    if (ok) sec else -1.0
+    sec
   }
 
   def main(args: Array[String]): Unit = {
@@ -163,7 +163,6 @@ object Bench {
     // reps of codegen classes, broadcast blocks, temp rows); collect
     // it before the sustained cells so their steady-state isn't paying
     // the sweep's debt
-    spark.catalog.clearCache()
     System.gc()
 
     // ------------------------------------------------- derived cells

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{CacheScope, QueryDef, Tables}
 import graft.operators.Dedup
 
 /** Additional verified analytics surface: join forms (semi/anti), set
@@ -850,26 +850,25 @@ object AnalyticsQueries {
     (s, d) =>
       val dec = org.apache.spark.sql.types.DecimalType(12, 2)
       // ONE decode of the fact columns feeds everything downstream: m1's
-      // two passes (the operator's spread-gate sees it already wide and
-      // caches nothing twice), dev's build, m2's two passes, and the
-      // final aggregate. Spread it when the source exposes fewer splits
-      // than cores (the single-row-group testdata shape; at real scale
-      // splits >> cores and the gate stays cold).
+      // two passes (the operator's spread-gate sees it already wide),
+      // dev's build, m2's two passes, and the final aggregate. Spread it
+      // when the source exposes fewer splits than cores (the
+      // single-row-group testdata shape; at real scale splits >> cores
+      // and the gate stays cold).
       val par = s.sparkContext.defaultParallelism
       val base0 = t(s, d, "lineitem")
         .select(col("l_returnflag").as("flag"),
           col("l_extendedprice").cast(dec).as("v"))
-      val base =
-        (if (base0.rdd.getNumPartitions < par) base0.repartition(par) else base0)
-          .persist()
+      val base = CacheScope.persisted(
+        if (base0.rdd.getNumPartitions < par) base0.repartition(par) else base0)
       // each median is the 2-pass fused quantile path (sizes+sketch, then
       // histogram) — 4 data passes for the chained pair plus the final agg
       val m1 = graft.operators.DistributedSelect.quantilesByGroup(
         base, Seq("flag"), "v", Seq("med" -> 0.5))
       // persist: dev embeds m1's whole plan, and m2's two passes plus the
       // final aggregate would otherwise re-execute it per pass
-      val dev = base.join(broadcast(m1), "flag")
-        .withColumn("d", abs(col("v") - col("med"))).persist()
+      val dev = CacheScope.persisted(base.join(broadcast(m1), "flag")
+        .withColumn("d", abs(col("v") - col("med"))))
       val m2 = graft.operators.DistributedSelect.quantilesByGroup(
         dev, Seq("flag"), "d", Seq("mad" -> 0.5))
       val isOut = lit(2) * col("d") > lit(3) * col("mad")

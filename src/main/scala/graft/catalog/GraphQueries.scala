@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{CacheScope, QueryDef, Tables}
 
 /** Graph / entity-linkage surface: link analysis over an event-derived
   * transition graph and similarity joins over near-identical strings —
@@ -191,14 +191,12 @@ object GraphQueries {
         greatest(col("src"), col("dst")).as("v"))
       .groupBy("u", "v").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select("u", "v")
-      .persist()
     val e1 = e.select(col("u").as("a"), col("v").as("b"))
     val e2 = e.select(col("u").as("b2"), col("v").as("c"))
     val e3 = e.select(col("u").as("a3"), col("v").as("c3"))
     val tri = e1.join(e2, col("b") === col("b2"))
       .join(e3, col("a") === col("a3") && col("c") === col("c3"))
       .select("a", "b", "c")
-      .persist() // wedge join runs once; three aggregates read it
     // combine the three scalar counts by union+pivot, not crossJoin —
     // a crossJoin of 1-row frames plans as a (harmless but audited)
     // nested-loop node; the union keeps the whole query join-free
@@ -211,14 +209,10 @@ object GraphQueries {
         .union(tri.select(col("c").as("n")))
         .distinct().agg(count(lit(1)).as("v"))
         .select(lit("n_tri_nodes").as("m"), col("v")))
-    val out = metrics.groupBy()
+    metrics.groupBy()
       .pivot("m", Seq("n_edges", "n_triangles", "n_tri_nodes"))
       .agg(first("v"))
       .select("n_edges", "n_triangles", "n_tri_nodes")
-    val materialized = out.cache()
-    materialized.count() // force before unpersisting the intermediates
-    e.unpersist(); tri.unpersist()
-    materialized
   }
 
   /** Single-source shortest paths (hop count) by iterative frontier
@@ -277,22 +271,20 @@ object GraphQueries {
       col("user_id"), col("event_id"), col("ts_us"),
       get_json_object(col("props"), "$.k").cast("int").as("k"))
     val w = Window.partitionBy("user_id").orderBy("ts_us", "event_id")
-    val p = ev
+    val p = CacheScope.persisted(ev
       .select(col("k").as("dst"), lag("k", 1).over(w).as("src"))
       .filter(col("src").isNotNull && col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("u"),
         greatest(col("src"), col("dst")).as("v"))
-      .groupBy("u", "v").agg(count(lit(1)).as("c"))
-      .persist()
+      .groupBy("u", "v").agg(count(lit(1)).as("c")))
     val nNodes = p.select(col("u").as("x")).union(p.select(col("v").as("x")))
       .distinct().count()
     val kept = p
       .withColumn("rn", row_number().over(
         Window.orderBy(col("c").desc, col("u"), col("v"))))
       .filter(col("rn") <= 2 * nNodes).select("u", "v")
-    val adj = kept.select(col("u").as("a"), col("v").as("b"))
-      .union(kept.select(col("v").as("a"), col("u").as("b")))
-      .persist()
+    val adj = CacheScope.persisted(kept.select(col("u").as("a"), col("v").as("b"))
+      .union(kept.select(col("v").as("a"), col("u").as("b"))))
     val source = adj.agg(min("a")).head().getInt(0)
     var settled = Seq((source, 0)).toDF("node", "dist")
     var frontier = settled
@@ -314,20 +306,18 @@ object GraphQueries {
     while (hop < 8 && frontierRows > 0) {
       hop += 1
       val fr = if (frontierRows <= bcastMaxRows) broadcast(frontier) else frontier
-      frontier = fr
+      // truncate the per-round lineage, like CC
+      frontier = CacheScope.localCheckpointed(fr
         .join(adj, col("node") === col("a"))
         .select(col("b").as("node")).distinct()
         .join(settled, Seq("node"), "left_anti")
-        .withColumn("dist", lit(hop))
-        .localCheckpoint() // truncate the per-round lineage, like CC
+        .withColumn("dist", lit(hop)))
       frontierRows = frontier.count() // materialized by the checkpoint
       settled = settled.union(frontier)
     }
-    val out = settled.groupBy("dist")
+    settled.groupBy("dist")
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy("dist")
-    p.unpersist(); adj.unpersist()
-    out
   }
 
   val all: Seq[QueryDef] = Seq(pagerank, fuzzyJoin, triangleCount, shortestPaths)

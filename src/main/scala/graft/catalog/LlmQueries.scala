@@ -319,13 +319,13 @@ object LlmQueries {
       |ORDER BY doc_id, term""".stripMargin,
     doc = "TF-IDF per (doc, term): per-row double arithmetic (no cross-row FP sums), " +
       "document-frequency join broadcastable (vocab ≪ corpus). One tokenize pass: " +
-      "len, df AND the corpus size n all derive from the persisted tf aggregate " +
+      "len, df AND the corpus size n all derive from the tf aggregate " +
       "(tf already holds distinct (doc, term) rows), so the explode runs exactly " +
       "once and no driver-side count job is scheduled — n joins in as a broadcast " +
       "1-row frame (the scalar-subquery shape).") { (s, d) =>
     val tok = docsFanout(s, d)
       .select(col("doc_id"), explode(TextAnalysis.wsTokens(trim(lower(col("text"))))).as("w"))
-    val tf = tok.groupBy("doc_id", "w").agg(count(lit(1)).as("cnt")).persist()
+    val tf = tok.groupBy("doc_id", "w").agg(count(lit(1)).as("cnt"))
     val len = tf.groupBy("doc_id").agg(sum("cnt").as("len"))
     val dfreq = tf.groupBy("w").agg(count(lit(1)).as("df"))
     val n = tf.agg(countDistinct("doc_id").cast("double").as("__n"))
@@ -1660,7 +1660,7 @@ object LlmQueries {
       "shuffle, never text; marking is an aggregate + co-partitioned join on the hash key " +
       "(llm/SubstringDedup; the cut itself is spec-gated — token-count conservation law).") {
     (s, d) =>
-      val w = SubstringDedup.windows(docsFanout(s, d), 20).persist()
+      val w = SubstringDedup.windows(docsFanout(s, d), 20)
       val nw = w.groupBy("doc_id").agg(count(lit(1)).as("n_windows"))
       val cov = SubstringDedup.dupCoverage(SubstringDedup.duplicateSpans(w), 20)
       nw.join(cov, "doc_id")
@@ -1690,7 +1690,6 @@ object LlmQueries {
     val terms = Seq("data", "join", "spark")
     val tok = docsFanout(s, d)
       .select(col("doc_id"), explode(TextAnalysis.wsTokens(trim(lower(col("text"))))).as("w"))
-      .persist()
     val len = tok.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val stats = len.agg(count(lit(1)).as("__n"), sum("dl").as("__total"))
     val tf = tok.filter(col("w").isin(terms: _*))
@@ -1747,7 +1746,6 @@ object LlmQueries {
       "the answer is exact regardless of sketch error (functions/MisraGries).") { (s, d) =>
     val tok = docsFanout(s, d)
       .select(explode(TextAnalysis.wsTokens(trim(lower(col("text"))))).as("w"))
-      .persist()
     val mg = udaf(new graft.functions.MisraGries(400))
     val head = tok.agg(count(lit(1)).as("total"), mg(col("w")).as("sketch")).head
     val total = head.getLong(0)
@@ -1787,7 +1785,7 @@ object LlmQueries {
     * surrogate importance — this implementation uses the additive
     * unigram form score = Σ target_freq / Σ raw_freq in EXACT integer
     * ppm, so both engines agree to the bit. One tokenize pass: the
-    * (doc, word, cnt) tf aggregate persists once and supplies the
+    * (doc, word, cnt) tf aggregate supplies the
     * target vocabulary, the raw vocabulary AND the per-doc sums; the
     * vocab tables are aggregate-sized (broadcastable at 100 TB, where
     * the doc side is the fact). Selection = top-k by score, planned as
@@ -1813,13 +1811,13 @@ object LlmQueries {
       |SELECT doc_id, n_words, CAST(sum_t * 1000000 // sum_r AS BIGINT) AS score_ppm
       |FROM ds ORDER BY score_ppm DESC, doc_id LIMIT 50""".stripMargin,
     doc = "DSIR-style importance scoring vs a target corpus (lang='de'): per-doc " +
-      "Σ target-freq / Σ raw-freq in exact integer ppm from ONE persisted tokenize " +
+      "Σ target-freq / Σ raw-freq in exact integer ppm from ONE tokenize " +
       "pass; vocab tables broadcast; top-k selection as TakeOrderedAndProject.") {
     (s, d) =>
       val tok = docsFanout(s, d).select(col("doc_id"), col("lang"),
         explode(graft.llm.TextAnalysis.wsTokens(lower(col("text")))).as("w"))
       val tf = tok.groupBy("doc_id", "lang", "w")
-        .agg(count(lit(1)).as("cnt")).persist()
+        .agg(count(lit(1)).as("cnt"))
       val tcnt = tf.filter(col("lang") === "de")
         .groupBy("w").agg(sum("cnt").as("tc"))
       val rcnt = tf.groupBy("w").agg(sum("cnt").as("rc"))

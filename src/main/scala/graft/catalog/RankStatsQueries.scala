@@ -597,17 +597,16 @@ object RankStatsQueries {
     * measured A/B of every combination (OPTIMIZATION_r16.md item 6).
     *
     * The one-row result is computed here and returned as a local
-    * frame, so everything the computation persists (the fact
-    * projection, the y histogram, RunningTotals' sorted histograms) is
-    * released before the call returns, also when it throws. */
+    * frame, so what the computation persists (RunningTotals' sorted
+    * histograms) is released before the call returns, also when it
+    * throws. */
   private[graft] def spearmanDf(s: SparkSession, d: String): DataFrame = graft.core.CacheScope {
     // no spread: r15's round-robin exchange on the fact projection cost
     // more than the 1-task map side saved (2.92 with vs 2.45 without; at
-    // real scale splits >= cores and the spread is a no-op anyway); the
-    // projection is persisted for its 3 consumers
-    val pts = graft.core.CacheScope.persist(t(s, d, "lineitem").select(
+    // real scale splits >= cores and the spread is a no-op anyway)
+    val pts = t(s, d, "lineitem").select(
       (col("l_quantity").cast(DecimalType(12, 2)) * 100).cast("long").as("x"),
-      (col("l_extendedprice").cast(DecimalType(12, 2)) * 100).cast("long").as("y")))
+      (col("l_extendedprice").cast(DecimalType(12, 2)) * 100).cast("long").as("y"))
     def midranks(vCol: String, out: String): DataFrame = {
       val hist = pts.groupBy(vCol).agg(count(lit(1)).as("c"))
       graft.operators.RunningTotals
@@ -625,9 +624,9 @@ object RankStatsQueries {
     // bounded: 1..50 cents-scale); y only while its actual cardinality
     // stays under a 4 Mi-row gate (distinct prices grow with part count,
     // so "value-bounded" is not scale-safe for y; past the gate the join
-    // falls back to the shuffle form) — the count runs on the persisted
-    // histogram, one tiny extra job.
-    val yh = graft.core.CacheScope.persist(midranks("y", "ry"))
+    // falls back to the shuffle form) — the count is one small extra
+    // job over the histogram.
+    val yh = midranks("y", "ry")
     val xh = midranks("x", "rx")
     val yJ = if (yh.count() <= (4L << 20)) broadcast(yh) else yh
     val ranked = pts.join(broadcast(xh), "x").join(yJ, "y")

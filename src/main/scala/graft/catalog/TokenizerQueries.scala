@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{CacheScope, QueryDef, Tables}
 
 /** Tokenizer-vocabulary induction over the corpus — the step a training
   * pipeline runs between curation and tokenization (Sennrich et al.
@@ -85,37 +85,35 @@ object TokenizerQueries {
   /** The 3-round induction loop (shared by q_bpe_merges and the encode
     * side): one corpus-wide word count, then per round a pair-count
     * aggregate over O(vocab) rows + a 1-row argmax to the driver. */
-  private def learnMerges(s: SparkSession, d: String): Seq[(Int, String, String, Long)] = {
-    val words = Tables(s, d, "documents")
+  private def learnMerges(s: SparkSession, d: String): Seq[(Int, String, String, Long)] = CacheScope {
+    // the ONLY corpus-wide pass; every round below is O(vocab)
+    val words = CacheScope.persisted(Tables(s, d, "documents")
       .select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) >= 2)
-      .groupBy("word").agg(count(lit(1)).as("freq"))
-      .persist() // the ONLY corpus-wide pass; every round below is O(vocab)
-    try {
-      var w = words.select(
-        concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 ")).as("sym"),
+      .groupBy("word").agg(count(lit(1)).as("freq")))
+    var w = words.select(
+      concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 ")).as("sym"),
+      col("freq"))
+    val merges = mutable.Buffer.empty[(Int, String, String, Long)]
+    for (it <- 1 to 3) {
+      val top = w
+        .withColumn("a", split(trim(col("sym")), " "))
+        .filter(size(col("a")) >= 2)
+        .select(explode(expr(
+          "transform(sequence(0, size(a) - 2), i -> concat(a[i], ' ', a[i + 1]))"))
+          .as("pair"), col("freq"))
+        .groupBy("pair").agg(sum("freq").as("cnt"))
+        .orderBy(desc("cnt"), asc("pair"))
+        .limit(1).head() // 1 row to the driver per round, by construction
+      val (pair, cnt) = (top.getString(0), top.getLong(1))
+      val merged = pair.replace(" ", "")
+      merges += ((it, pair, merged, cnt))
+      w = w.select(
+        call_function("replace", col("sym"),
+          lit(s" $pair "), lit(s" $merged ")).as("sym"),
         col("freq"))
-      val merges = mutable.Buffer.empty[(Int, String, String, Long)]
-      for (it <- 1 to 3) {
-        val top = w
-          .withColumn("a", split(trim(col("sym")), " "))
-          .filter(size(col("a")) >= 2)
-          .select(explode(expr(
-            "transform(sequence(0, size(a) - 2), i -> concat(a[i], ' ', a[i + 1]))"))
-            .as("pair"), col("freq"))
-          .groupBy("pair").agg(sum("freq").as("cnt"))
-          .orderBy(desc("cnt"), asc("pair"))
-          .limit(1).head() // 1 row to the driver per round, by construction
-        val (pair, cnt) = (top.getString(0), top.getLong(1))
-        val merged = pair.replace(" ", "")
-        merges += ((it, pair, merged, cnt))
-        w = w.select(
-          call_function("replace", col("sym"),
-            lit(s" $pair "), lit(s" $merged ")).as("sym"),
-          col("freq"))
-      }
-      merges.toSeq
-    } finally words.unpersist()
+    }
+    merges.toSeq
   }
 
   /** The learned tokenizer as an executor-shippable merge table —

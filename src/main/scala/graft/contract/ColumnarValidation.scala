@@ -74,9 +74,8 @@ object ColumnarValidation {
     * the pass count. Verdict ranks are reconstructed afterwards by
     * word algebra + popcount in [[evalBatches]] — no kernel touches a
     * rank array, which removed the data-mask→byte-rank bridge that
-    * dominated the rank formulation (tools/BitProbe: geLong
-    * 6.4 → 0.9 ns/row). Nulls fail every rule except NotNull (Kleene
-    * null→fail, as the Column pipeline). */
+    * dominated the rank formulation. Nulls fail every rule except
+    * NotNull (Kleene null→fail, as the Column pipeline). */
   sealed trait VecTest extends Serializable {
     def pass(v: ColumnVector, i: Int): Boolean
     def runBits(v: ColumnVector, n: Int, bits: Array[Long]): Long =
@@ -828,8 +827,7 @@ object ColumnarValidation {
     * the MAX failRank over its failing rules, so ranks are assigned
     * descending (fail word = OR of the rank's rules' complemented
     * bits, minus rows already claimed by a higher rank) and counted
-    * with popcount — ~0.1 ns/row for the whole verdict join
-    * (tools/BitProbe), where the byte-rank formulation paid a
+    * with popcount, where the byte-rank formulation paid a
     * per-rule read-modify-write lane plus a scalar histogram pass.
     * Shared by the distributed path above and kernel-only
     * microbenchmarks. */

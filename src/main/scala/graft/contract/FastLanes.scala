@@ -12,9 +12,8 @@ import org.apache.spark.sql.vectorized.ColumnVector
   * 64 rows per long word) and returns the pass count; verdict ranks are
   * reconstructed by word algebra + popcount in
   * `ColumnarValidation.evalBatches`. The previous per-rule byte-rank
-  * merge is gone: measurement (tools/BitProbe) showed the branchless
-  * bit-assembly loops auto-vectorize (geLong 6.4 → 0.9 ns/row) while
-  * every rank formulation paid a data-mask→byte bridge.
+  * merge is gone: the branchless bit-assembly loops auto-vectorize,
+  * while every rank formulation paid a data-mask→byte bridge.
   *
   * Dispatch remains MEASUREMENT-driven:
   *  1. Numeric range/threshold rules and general string rules route to

@@ -3,36 +3,58 @@ package graft.core
 import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Persists released by the call that made them. Inside
-  * `CacheScope { ... }`, every frame persisted through [[persist]] on
-  * the same thread is unpersisted when the block ends, also when it
-  * throws, newest first (a dependent before what it reads). Outside a
-  * scope, [[persist]] is a plain `Dataset.persist()`, released by its
-  * caller or by a harness's `clearCache()`.
+/** The one owner of cached data. Main code keeps data only through
+  * [[persisted]] and [[localCheckpointed]], and each registers its release
+  * with the innermost open `CacheScope { ... }`. When that block ends,
+  * also when it throws, the scope releases what it holds, newest first
+  * (a dependent before what it reads).
   *
-  * For operators whose result is a lazy frame over a persist they
-  * cannot release themselves (`RunningTotals`): a caller that computes
-  * its result eagerly wraps the computation in a scope and leaves
-  * nothing cached. */
+  * An operator keeps what its lazy result reads and never releases it:
+  * the caller's scope does, after the result has run. Every entry point
+  * that runs catalog queries (`Bench.timedRep`, `Verify`, `tools.Probe`)
+  * opens one scope per query; a caller that computes its result eagerly
+  * opens its own (`q_spearman`, the BPE merge loop). Outside any scope a
+  * persist stays until the session stops.
+  *
+  * The scope stack is inherited by threads created inside a scope, so
+  * the workers of `Par.awaitAll` (a pool created per call from the
+  * calling thread) register with the caller's scope. */
 object CacheScope {
-  private val open = new ThreadLocal[List[mutable.Buffer[DataFrame]]] {
-    override def initialValue(): List[mutable.Buffer[DataFrame]] = Nil
+  private type Releases = mutable.Buffer[() => Unit]
+  private val open = new InheritableThreadLocal[List[Releases]] {
+    override def initialValue(): List[Releases] = Nil
   }
 
-  def persist(df: DataFrame): DataFrame = {
+  private def hold(release: () => Unit): Unit =
+    open.get.headOption.foreach(s => s.synchronized(s += release))
+
+  def persisted(df: DataFrame): DataFrame = {
     val p = df.persist()
-    open.get.headOption.foreach(_ += p)
+    hold(() => p.unpersist())
     p
   }
 
+  /** `df.localCheckpoint()`, whose checkpointed RDD the scope
+    * unpersists: `clearCache()` never reaches it. */
+  def localCheckpointed(df: DataFrame): DataFrame = {
+    val cp = df.localCheckpoint()
+    cp.queryExecution.logical.foreach {
+      case r: LogicalRDD => hold(() => r.rdd.unpersist())
+      case _ =>
+    }
+    cp
+  }
+
   def apply[A](body: => A): A = {
-    val mine = mutable.ArrayBuffer.empty[DataFrame]
-    open.set(mine :: open.get)
+    val outer = open.get
+    val mine: Releases = mutable.ArrayBuffer.empty
+    open.set(mine :: outer)
     try body
     finally {
-      open.set(open.get.tail)
-      mine.reverseIterator.foreach(_.unpersist())
+      open.set(outer)
+      mine.synchronized(mine.toList).reverseIterator.foreach(_())
     }
   }
 }

@@ -387,16 +387,14 @@ object Similarity {
     * single exact-cosine verification join. */
   def cosineNearDupPairs(df: DataFrame, idCol: String, embCol: String,
       numBands: Int, planesPerBand: Int, threshold: Double): DataFrame = {
-    // precompute norm + band keys once per row behind a persist barrier;
-    // the verification join then evaluates one dot product per pair.
+    // precompute the norm once per row; the verification join then
+    // evaluates one dot product per pair.
     val b = df.repartition(df.sparkSession.sparkContext.defaultParallelism,
         col(idCol))
       .select(col(idCol).as("id"), col(embCol).as("emb"))
       .withColumn("nrm", norm(col("emb")))
-      .persist()
     val banded = b
       .select(col("id"), explode(lshBandKeys(col("emb"), numBands, planesPerBand)).as("band"))
-      .persist()
     val cand = banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -456,7 +454,6 @@ object Similarity {
         norm(col("emb")).as("nrm"),
         round(dot(col("emb"), col("_cemb")) /
           (norm(col("emb")) * norm(col("_cemb"))), 4).as("cent_cos"))
-      .persist()
     // within-cluster dominance pairs: shuffle on cluster, never all-pairs
     val l = a.select(col("id").as("id_a"), col("emb").as("emb_a"),
       col("nrm").as("nrm_a"), col("cluster"), col("cent_cos").as("cc_a"))
@@ -481,10 +478,8 @@ object Similarity {
     val banded = df
       .select(col(idCol).as("id"),
         explode(lshBandKeys(col(embCol), numBands, planesPerBand)).as("band"))
-      .persist()
-    try banded.as("a").join(banded.as("b"),
+    banded.as("a").join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.id") < col("b.id"))
       .select(col("a.id"), col("b.id")).distinct().count()
-    finally { banded.unpersist(); () }
   }
 }

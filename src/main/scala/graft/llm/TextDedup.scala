@@ -3,6 +3,8 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Document deduplication at corpus scale: exact (content-hash),
   * exact-Jaccard n-gram near-dup, MinHash+LSH, and SimHash.
   *
@@ -51,10 +53,9 @@ object TextDedup {
         graft.functions.TextHashFunctions.register(df.sparkSession)
         call_function("graft_ngrams5", col(textCol))
       } else TextAnalysis.wordNgrams(col(textCol), n)
-    val grams = df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+    val grams = CacheScope.persisted(df.repartition(df.sparkSession.sparkContext.defaultParallelism,
         col(idCol))
-      .select(col(idCol).as("doc_id"), gramCol.as("ngrams"))
-      .persist()
+      .select(col(idCol).as("doc_id"), gramCol.as("ngrams")))
     val sizes = grams.select(col("doc_id"), size(col("ngrams")).as("sz"))
     // join on the 64-bit gram hash, not the gram text: candidate
     // generation shuffles 8-byte keys instead of ~n-word strings (the
@@ -104,11 +105,10 @@ object TextDedup {
         graft.functions.TextHashFunctions.register(df.sparkSession)
         call_function("graft_ngrams5", col(textCol))
       } else TextAnalysis.wordNgrams(col(textCol), n)
-    val grams = df.repartition(df.sparkSession.sparkContext.defaultParallelism,
+    val grams = CacheScope.persisted(df.repartition(df.sparkSession.sparkContext.defaultParallelism,
         col(idCol))
       .select(col(idCol).as("doc_id"), gramCol.as("ngrams"))
-      .filter(size(col("ngrams")) > 0)
-      .persist()
+      .filter(size(col("ngrams")) > 0))
     // native one-pass signature kernel when available for k, else the
     // HOF reference implementation (k passes, interpreted)
     val sigCol =
@@ -116,11 +116,10 @@ object TextDedup {
         graft.functions.TextHashFunctions.register(df.sparkSession)
         call_function("graft_minhash16", col("ngrams"))
       } else minhashSignature(col("ngrams"), numHashes)
-    val banded = grams
+    val banded = CacheScope.persisted(grams
       .withColumn("sig", sigCol)
       .withColumn("band", explode(lshBandKeys(col("sig"), numHashes, rowsPerBand)))
-      .select("doc_id", "band")
-      .persist()
+      .select("doc_id", "band"))
     val cand = banded.as("a")
       .join(banded.as("b"), col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
@@ -186,7 +185,7 @@ object TextDedup {
       portableHash: Boolean = false): DataFrame = {
     // native codegen'd one-pass simhash (bit-identical to the HOF
     // reference implementation — LlmSpec asserts it);
-    // repartition+persist as in the other pair generators.
+    // repartition as in the other pair generators.
     // portableHash swaps the signature's token hash for the md5-derived
     // one so a SQL oracle can replay the pipeline; band/hamming/verify
     // stages are IDENTICAL in both modes.
@@ -197,7 +196,6 @@ object TextDedup {
     val sigs = df.repartition(df.sparkSession.sparkContext.defaultParallelism,
         col(idCol))
       .select(col(idCol).as("doc_id"), sigExpr.as("sig"))
-      .persist()
     val banded = sigs.withColumn("band_idx", explode(sequence(lit(0), lit(3))))
       .withColumn("band",
         concat_ws(":", col("band_idx").cast("string"),
@@ -259,15 +257,14 @@ object TextDedup {
     // barrier first: the union scans `e` twice, and pair generators are
     // typically the expensive stage (LSH + verification) — without it
     // the whole pair pipeline runs twice inside one job
-    val e = pairs.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-      .persist()
+    val e = CacheScope.persisted(
+      pairs.select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v")))
     // symmetric closure; distinct so parallel edges don't multiply the
-    // propagation join (pair generators can emit dup pairs)
-    val sym = e.union(e.select(col("v").as("u"), col("u").as("v"))).distinct()
-      .persist()
-    var labels = sym.select(col("u").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint()
+    // propagation join (pair generators can emit dup pairs); every
+    // round reads it
+    val sym = CacheScope.persisted(e.union(e.select(col("v").as("u"), col("u").as("v"))).distinct())
+    var labels = CacheScope.localCheckpointed(sym.select(col("u").as("node")).distinct()
+      .withColumn("lbl", col("node")))
     // convergence via monotonicity: each round takes a per-node MIN
     // over a set containing the old label, so labels never increase —
     // the label SUM (exact decimal: long sums overflow) is strictly
@@ -282,17 +279,14 @@ object TextDedup {
     while (!converged && it < maxIters) {
       val prop = sym.join(labels, sym("u") === labels("node"))
         .select(col("v").as("node"), col("lbl"))
-      val next = labels.union(prop)
-        .groupBy("node").agg(min("lbl").as("lbl"))
-        .localCheckpoint()
+      val next = CacheScope.localCheckpointed(labels.union(prop)
+        .groupBy("node").agg(min("lbl").as("lbl")))
       val s = lblSum(next)
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       labels = next
       it += 1
     }
-    sym.unpersist()
-    e.unpersist()
     if (!converged)
       throw graft.core.GraftError.Plan(
         s"connectedComponents did not converge in $maxIters rounds — " +
@@ -343,7 +337,7 @@ object TextDedup {
       k: Int = 5, window: Int = 4, minShared: Int = 2): DataFrame = {
     // the fingerprint table feeds BOTH sides of the self-join — without
     // a barrier the split/md5/winnow pipeline runs twice
-    val fps = winnowFingerprints(df, idCol, textCol, k, window).persist()
+    val fps = CacheScope.persisted(winnowFingerprints(df, idCol, textCol, k, window))
     fps.as("a").join(fps.as("b"),
         col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
+import graft.core.CacheScope
+
 /** Exact k-th-smallest (order statistic) per group WITHOUT sorting the
   * group — the scale-true replacement for
   * `row_number() OVER (PARTITION BY g ORDER BY v)` rank selection,
@@ -66,8 +68,8 @@ object DistributedSelect {
       kExpr: Column, out: String,
       sampleTarget: Int = 4096, sizes: Option[DataFrame] = None): DataFrame = {
     val g = groupCols.map(col)
-    val base = df.select(g :+ col(valueCol).as("__v"): _*)
-      .filter(col("__v").isNotNull).persist()
+    val base = CacheScope.persisted(df.select(g :+ col(valueCol).as("__v"): _*)
+      .filter(col("__v").isNotNull))
 
     // pass 1: group sizes → rank targets (shared when the caller provides them)
     val sized = sizes.getOrElse(sizesOf(base, groupCols, "__v"))
@@ -95,14 +97,13 @@ object DistributedSelect {
     // direct hits: the k-th value IS an endpoint (ties make this common)
     val hitA = col("__nlt_a") < col("__k") && col("__k") <= col("__nle_a")
     val bracketOk = col("__nle_a") < col("__k") && col("__k") <= col("__nle_b")
-    val resolved = counted.withColumn("__hit",
+    val resolved = CacheScope.persisted(counted.withColumn("__hit",
         when(hitA, col("__a")).otherwise(lit(null)))
       // effective bracket: verified (a, b]; provably-wrong samples widen
       // to the whole group — loud in the plan, never silently wrong
       .withColumn("__lo", when(bracketOk, col("__a")).otherwise(lit(null)))
       .withColumn("__hi", when(bracketOk, col("__b")).otherwise(col("__max")))
-      .withColumn("__base", when(bracketOk, col("__nle_a")).otherwise(lit(0L)))
-      .persist()
+      .withColumn("__base", when(bracketOk, col("__nle_a")).otherwise(lit(0L))))
 
     val hits = resolved.filter(col("__hit").isNotNull)
       .select(g :+ col("__hit").as(out): _*)
@@ -225,13 +226,12 @@ object DistributedSelect {
     // build is CPU-bound — if the source exposes fewer splits than the
     // cluster has cores (a single-row-group file; never true of real
     // 100 TB inputs, where splits >> cores and this gate stays cold),
-    // spread it once and cache the projection across the two passes.
+    // spread it once; both passes read the one exchange.
     // Partitioning cannot change the answer: the sketch is only a
     // bracket, the exact counts decide (partition-count invariance law).
     val par = df.sparkSession.sparkContext.defaultParallelism
     val base =
-      if (base0.rdd.getNumPartitions < par) base0.repartition(par).persist()
-      else base0
+      if (base0.rdd.getNumPartitions < par) base0.repartition(par) else base0
 
     // pass 1: sizes + sketch brackets in ONE aggregation
     val fracs: Seq[Double] = qs.flatMap { case (_, q) =>

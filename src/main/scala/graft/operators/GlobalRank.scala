@@ -31,15 +31,14 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 object GlobalRank {
 
   /** Append a 1-based global `rankCol` ordered by `order` (must be a
-    * total order). Caller must `unpersist()` the result when done, or
-    * use `withGlobalRowNumber(...)(f)` below. */
+    * total order). The sorted input it persists is released by the
+    * caller's `core.CacheScope`. */
   def withGlobalRowNumber(df: DataFrame, order: Seq[Column],
       rankCol: String = "rn", numPartitions: Int = 0): DataFrame = {
     val parts = if (numPartitions > 0) numPartitions
       else df.sparkSession.sessionState.conf.numShufflePartitions
-    val sorted = df.repartitionByRange(parts, order: _*)
-      .sortWithinPartitions(order: _*)
-      .persist()
+    val sorted = graft.core.CacheScope.persisted(df.repartitionByRange(parts, order: _*)
+      .sortWithinPartitions(order: _*))
     // BOTH jobs run over this one RDD instance: same lineage ⇒ same
     // partition layout for the count pass and the stamp pass (a second
     // Dataset plan could be AQE-re-planned to a different layout, and

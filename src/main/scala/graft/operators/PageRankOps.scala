@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.CacheScope
+
 /** Iterate-to-convergence PageRank in integer fixed-point — the
   * operator form of the catalog's q_pagerank demo (GraphQueries), which
   * unrolls exactly 3 rounds so its DuckDB oracle stays expressible.
@@ -34,15 +36,13 @@ object PageRankOps {
     * @return (node, rank) for every node appearing as src or dst. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
       maxIters: Int = 50): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+    val e = CacheScope.persisted(edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-      .groupBy("src", "dst").agg(count(lit(1)).as("wgt"))
-      .persist()
+      .groupBy("src", "dst").agg(count(lit(1)).as("wgt")))
     val outd = e.groupBy("src").agg(sum("wgt").as("outw"))
-    val ew = e.join(outd, "src").persist()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .persist()
+    val ew = CacheScope.persisted(e.join(outd, "src"))
+    val nodes = CacheScope.persisted(e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct())
 
     def fingerprint(r: DataFrame): (java.math.BigDecimal, Long) = {
       val row = r.agg(
@@ -52,7 +52,7 @@ object PageRankOps {
         if (row.isNullAt(1)) 0L else row.getLong(1))
     }
 
-    var rank = nodes.withColumn("r", lit(1000000L)).localCheckpoint()
+    var rank = CacheScope.localCheckpointed(nodes.withColumn("r", lit(1000000L)))
     var prev = fingerprint(rank)
     var it = 0
     var converged = false
@@ -60,17 +60,15 @@ object PageRankOps {
       val sums = ew.join(rank.withColumnRenamed("node", "src"), "src")
         .select(col("dst"), expr("(r * wgt) div outw").as("c"))
         .groupBy("dst").agg(sum("c").as("s"))
-      val next = nodes.join(sums, nodes("node") === sums("dst"), "left")
+      val next = CacheScope.localCheckpointed(nodes.join(sums, nodes("node") === sums("dst"), "left")
         .select(col("node"),
-          (lit(150000L) + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
-        .localCheckpoint()
+          (lit(150000L) + expr("(85 * coalesce(s, 0L)) div 100")).as("r")))
       val fp = fingerprint(next)
       converged = fp == prev
       prev = fp
       rank = next
       it += 1
     }
-    nodes.unpersist(); ew.unpersist(); e.unpersist()
     if (!converged)
       throw graft.core.GraftError.Plan(
         s"pageRank did not converge in $maxIters rounds; integer " +

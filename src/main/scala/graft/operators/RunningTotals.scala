@@ -36,12 +36,10 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   * Cache lifecycle: the range-sorted input is persisted so the
   * boundary-collect job and the stamping job see IDENTICAL partition
   * contents (re-sampling the range exchange between jobs could shift
-  * boundaries). The persist is scoped to the enclosing query: a caller
-  * that computes its result eagerly releases it with `core.CacheScope`
-  * (q_spearman does), and every harness main (Verify, Bench,
-  * tools.Probe) calls `spark.catalog.clearCache()` after each query, so
-  * these plans never accumulate across the catalog sweep — any NEW
-  * entry point running many queries in one session must do the same.
+  * boundaries). The result is lazy over that persist, so the operator
+  * does not release it: the caller's `core.CacheScope` does once the
+  * result has run (one scope per query in Verify, Bench and
+  * tools.Probe; q_spearman opens its own around its eager computation).
   */
 object RunningTotals {
 
@@ -73,7 +71,7 @@ object RunningTotals {
         s"${df.schema(i).name} must be LongType (pre-scale decimals to exact longs)")
     }
     val keyCols = groupCols.map(org.apache.spark.sql.functions.col) ++ order
-    val sorted = graft.core.CacheScope.persist(df.repartitionByRange(parts, keyCols: _*)
+    val sorted = graft.core.CacheScope.persisted(df.repartitionByRange(parts, keyCols: _*)
       .sortWithinPartitions(keyCols: _*))
     // one pass collecting boundary subtotals; the same RDD instance is
     // reused for stamping so range boundaries cannot shift between the

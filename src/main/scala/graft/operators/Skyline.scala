@@ -76,12 +76,12 @@ object Skyline {
     }
 
     val sp = df.sparkSession
-    val local0 = sp.createDataFrame(
-      df.rdd.mapPartitions(localSkyline), schema).persist()
+    val local0 = graft.core.CacheScope.persisted(sp.createDataFrame(
+      df.rdd.mapPartitions(localSkyline), schema))
     // merge-contract gate: the single merge task must see a BOUNDED
     // union. One count job over the (persisted, tiny) survivor set —
-    // metadata-priced next to the full-data local pass. The persists
-    // are scoped per query by the harness mains' clearCache.
+    // metadata-priced next to the full-data local pass. The caller's
+    // CacheScope releases the persists once the result has run.
     val n0 = local0.count()
     val local =
       if (n0 <= mergeBound) local0
@@ -92,9 +92,9 @@ object Skyline {
         // its same-first-dim dominators collocate deterministically
         // (any partitioning is a safe filter; this one actually shrinks)
         val parts = math.max(1, math.sqrt(local0.rdd.getNumPartitions.toDouble).toInt)
-        val second = sp.createDataFrame(
+        val second = graft.core.CacheScope.persisted(sp.createDataFrame(
           local0.repartitionByRange(parts, col(dimCols.head).desc, col(dimCols.last))
-            .rdd.mapPartitions(localSkyline), schema).persist()
+            .rdd.mapPartitions(localSkyline), schema))
         val n1 = second.count()
         if (n1 > mergeBound)
           throw graft.core.GraftError.Plan(

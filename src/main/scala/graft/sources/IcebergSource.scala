@@ -2451,7 +2451,7 @@ object IcebergSource {
     // positions are merged into the new blobs, and the old entries are
     // retired from the carried-forward manifests below)
     var supersededDvRefs: Set[String] = Set.empty
-    dvDeletes.foreach { ddf =>
+    dvDeletes.foreach(ddf => graft.core.CacheScope {
       // DV construction is per referenced data file: positions group
       // by file (each group is one file's deleted rows — bounded by
       // rows-per-file, and roaring-compressed on write). The builder
@@ -2462,17 +2462,14 @@ object IcebergSource {
       val budget = 50_000_000L // positions ≈ 400 MB of longs
       // persisted across the probe + collect: the budget gate must not
       // re-execute an expensive upstream plan a second time
-      val cached = ddf
+      val cached = graft.core.CacheScope.persisted(ddf
         .select(normPath(col("file_path").cast("string")).as("f"),
-          col("pos").cast("long").as("p"))
-        .persist()
-      def refuseBudget(n: Long): Nothing = {
-        cached.unpersist()
+          col("pos").cast("long").as("p")))
+      def refuseBudget(n: Long): Nothing =
         throw graft.core.GraftError.Plan(
           s"iceberg fidelity: DV commit carries $n delete positions (> $budget budget) — " +
             "split the delete set into multiple commits (one DV per data file is rewritten " +
             "wholesale anyway)")
-      }
       val nPos = cached.count()
       if (nPos > budget) refuseBudget(nPos)
       // v3 merge law: a data file carries AT MOST ONE deletion vector,
@@ -2511,14 +2508,12 @@ object IcebergSource {
       val mergedCached =
         if (oldDvPos.isEmpty && oldPqPos.isEmpty) cached
         else {
-          val m = merged0.distinct().persist()
+          val m = graft.core.CacheScope.persisted(merged0.distinct())
           val nAll = m.count()
-          if (nAll > budget) { m.unpersist(); refuseBudget(nAll) }
+          if (nAll > budget) refuseBudget(nAll)
           m
         }
-      val rows =
-        try mergedCached.groupBy("f").agg(collect_list("p").as("ps")).collect()
-        finally { mergedCached.unpersist(); cached.unpersist() }
+      val rows = mergedCached.groupBy("f").agg(collect_list("p").as("ps")).collect()
       val perFile = rows
         .map(r => Puffin.Dv(r.getString(0), r.getSeq[Long](1)))
         .sortBy(_.referencedDataFile)
@@ -2529,7 +2524,7 @@ object IcebergSource {
           written += Written(puffinPath, r.cardinality, 1, Nil, "PUFFIN",
             Some(r.referencedDataFile), Some(r.offset), Some(r.length))
         }
-    }
+    })
     posDeletes.foreach { pdf =>
       val dir = s"$tableDir/data/snap-$snapshotId-pos-deletes"
       pdf.select(col("file_path").cast("string").as("file_path"),

@@ -176,19 +176,19 @@ object CdcLogRunner {
       (agg, dataCols)
     }
     val (fused, dataCols) = groupedCountHashStats(withStats = true)
-    val fusedRows = fused.persist().collect()
+    val fusedRows = fused.collect()
     val perUnit = fusedRows
       .map(r => r.getInt(0) -> (r.getLong(1), PackageWriter.hashAt(r, 2)))
       .toMap
-    // segment-stats manifest from the same pass: tiny cached write,
-    // partitioned by segment so a resumed delivery adds its units
-    // without clobbering committed ones
-    fused.withColumnRenamed("__unit", "segment_id")
+    // segment-stats manifest from the same pass: the collected rows,
+    // written partitioned by segment so a resumed delivery adds its
+    // units without clobbering committed ones
+    spark.createDataFrame(java.util.Arrays.asList(fusedRows: _*), fused.schema)
+      .withColumnRenamed("__unit", "segment_id")
       .drop("__rows", "__hash_sum")
       .coalesce(1).write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("segment_id").parquet(s"$outDir/stats")
-    fused.unpersist()
 
     // independent receipt probe: ONE re-read of the delivered files
     // verifies every unit (same fidelity as per-unit probes, U−1 fewer

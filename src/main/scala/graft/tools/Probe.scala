@@ -88,12 +88,12 @@ object Probe {
     val sides = if (confs.isEmpty) Seq("") else Seq("", SideB)
     if (confs.nonEmpty) println(s"[probe] side B: ${confs.map { case (k, v) => s"$k=$v" }.mkString(" ")}")
 
-    for (dir <- opts.get("--plan"); q <- queries) try {
+    for (dir <- opts.get("--plan"); q <- queries) try graft.core.CacheScope {
       Files.createDirectories(Paths.get(dir))
       val plan = q.run(spark, sfDir).queryExecution.explainString(ExplainMode.fromString("formatted"))
       Files.writeString(Paths.get(dir, s"${q.name}.txt"), plan)
     } catch { case NonFatal(e) => fail(q.name, e.toString) }
-    finally { spark.catalog.clearCache(); graft.core.Scratch.reclaim() }
+    finally graft.core.Scratch.reclaim()
 
     val log = new JobLog
     if (jobs) spark.sparkContext.addSparkListener(log)

@@ -519,6 +519,32 @@ class PlanAuditSpec extends SparkSpec {
       DeliveryGuarantee.ExactlyOnceEffective)
   }
 
+  test("main code keeps data only through core.CacheScope") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val bare = """\.persist\(|\.cache\(\)|\.localCheckpoint\(|clearCache\(""".r
+    // comments aside: scaladoc and block-comment lines, inline blocks,
+    // and `//` tails (not the `//` of a URL scheme)
+    def code(line: String): String = {
+      val t = line.trim
+      if (t.startsWith("*") || t.startsWith("/*")) ""
+      else line.replaceAll("""/\*.*?\*/""", "").replaceAll("""(?<!:)//.*""", "")
+    }
+    val root = Paths.get("src/main")
+    val st = Files.walk(root)
+    val sources: Vector[Path] =
+      try st.iterator().asScala.filter(p => p.toString.endsWith(".scala") ||
+        p.toString.endsWith(".java")).toVector
+      finally st.close()
+    assert(sources.exists(_.endsWith(Paths.get("core", "CacheScope.scala"))))
+    val hits = for {
+      f <- sources if !f.endsWith(Paths.get("core", "CacheScope.scala"))
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if bare.findFirstIn(code(line)).isDefined
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
   test("expression lints flag provable tautologies") {
     import Expr._
     assert(lint(Binary(BinOp.Eq, Col("x"), Col("x")))

@@ -6,8 +6,8 @@ import graft.core.CanonicalJson._
 import graft.tools.Probe
 
 /** `tools.Probe` on the shared session: the artifact's shape, failing
-  * loudly, plan-only runs, and a conf A/B that leaves the session as it
-  * found it. */
+  * loudly, plan-only runs, and a conf A/B and cached data that leave
+  * the session as it found it. */
 class ProbeSpec extends SparkSpec {
 
   /** Runs the probe, returning its exit code and what it printed. */
@@ -70,5 +70,13 @@ class ProbeSpec extends SparkSpec {
     assert(cells(artifact(out)).keySet == Set("q1_agg", "q1_agg:B"))
     Seq("[probe] q1_agg min=", "[probe] q1_agg:B min=").foreach(l => assert(printed.contains(l), printed))
     assert(spark.conf.getOption(key) == before)
+  }
+
+  test("queries that keep data leave nothing cached once the probe returns") {
+    dropCached()
+    val (code, printed) = probe("--sf", sf(), "--query", "q_mad_outliers,q_dup_clusters",
+      "--reps", "1", "--plan", tmpDir())
+    assert(code == 0, printed)
+    assert(nothingCached)
   }
 }

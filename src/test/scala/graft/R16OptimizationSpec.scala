@@ -102,21 +102,28 @@ class R16OptimizationSpec extends SparkSpec {
   test("CacheScope releases what it persisted, newest first, also when the block throws") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.storage.StorageLevel
-    spark.catalog.clearCache()
-    val outside = graft.core.CacheScope.persist(spark.range(10).toDF("id"))
+    import graft.core.{CacheScope, Par}
+    dropCached()
+    val outside = CacheScope.persisted(spark.range(10).toDF("id"))
     var inside = Seq.empty[DataFrame]
-    intercept[IllegalStateException](graft.core.CacheScope {
-      val a = graft.core.CacheScope.persist(spark.range(100).toDF("id"))
-      val b = graft.core.CacheScope.persist(a.filter("id > 5"))
+    intercept[IllegalStateException](CacheScope {
+      val a = CacheScope.persisted(spark.range(100).toDF("id"))
+      val b = CacheScope.persisted(a.filter("id > 5"))
       inside = Seq(a, b)
       assert(b.count() == 94L && inside.forall(_.storageLevel != StorageLevel.NONE))
+      // local checkpoints, and what Par.awaitAll's workers keep, are the scope's too
+      assert(CacheScope.localCheckpointed(b.filter("id % 2 = 0")).count() == 47L)
+      assert(Par.awaitAll(Seq(
+        () => CacheScope.persisted(spark.range(7).toDF("w")).count(),
+        () => CacheScope.localCheckpointed(spark.range(9).toDF("w")).count())) == Seq(7L, 9L))
       throw new IllegalStateException("planted")
     })
     assert(inside.size == 2 && inside.forall(_.storageLevel == StorageLevel.NONE))
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
     // the persist made outside any scope is left to its caller
     assert(outside.storageLevel != StorageLevel.NONE)
     outside.unpersist()
-    assert(spark.sharedState.cacheManager.isEmpty)
+    assert(nothingCached)
   }
 
   test("Bench testdata fingerprint walks the tree and marks an empty or unreadable one") {
