@@ -129,9 +129,8 @@ object Bench {
     }
 
     // ------------------------------------------------------ query sweep
-    // SPARK_GRAFT_ONLY=q_a,q_b (or arg 2) restricts the run (local iteration aid)
-    val only = argOnly.orElse(sys.env.get("SPARK_GRAFT_ONLY"))
-      .map(_.split(",").map(_.trim).toSet)
+    // arg 2 (q_a,q_b) restricts the run (local iteration aid)
+    val only = argOnly.map(_.split(",").map(_.trim).toSet)
     val selected = graft.catalog.Catalog.all.filter(q => only.forall(_.contains(q.name)))
     // Three timed runs per cell, headline = min (the engine's steady-state
     // cost; this shared host lands random multi-second co-tenant/GC spikes

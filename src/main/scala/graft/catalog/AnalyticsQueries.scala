@@ -195,9 +195,6 @@ object AnalyticsQueries {
   private def eventsUs(s: SparkSession, d: String): DataFrame =
     graft.core.Tables.eventsUs(s, d)
 
-  private def withStreamingShuffle[T](s: SparkSession)(body: => T): T =
-    graft.core.Sessions.withStreamingShuffle(s)(body)
-
   val asofJoin: QueryDef = QueryDef.sqlBacked(
     "q_asof_join",
     """WITH clicks AS (
@@ -267,7 +264,7 @@ object AnalyticsQueries {
       "merge law is pinned by StreamingSessionizeSpec (exact-gap merges, >gap splits — " +
       "identical to the batch split), so the two agree row-for-row with no offset fudge; " +
       "state is per OPEN session, watermark-evicted (streaming/StreamingSessionize).") { (s, d) =>
-    withStreamingShuffle(s) {
+    graft.core.Sessions.withStreamingShuffle(s) {
     import s.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
     val rows = graft.core.Tables.eventsUs(s, d).select("user_id", "ts_us")
@@ -364,7 +361,7 @@ object AnalyticsQueries {
       "bounded by construction, and inner matches emit the moment the later row arrives — " +
       "cross-epoch pairs included. Must hash-match the batch bucketed RangeJoin oracle " +
       "(streaming/StreamingIntervalJoin).") { (s, d) =>
-    withStreamingShuffle(s) {
+    graft.core.Sessions.withStreamingShuffle(s) {
     import s.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = eventsUs(s, d)
@@ -450,7 +447,7 @@ object AnalyticsQueries {
     doc = "STREAM-STREAM LEFT-OUTER interval join: unmatched clicks emit null-padded only " +
       "when both watermarks prove absence; end-of-stream flush via sentinel rows. " +
       "Hash-matches the batch LEFT JOIN oracle.") { (s, d) =>
-    withStreamingShuffle(s) {
+    graft.core.Sessions.withStreamingShuffle(s) {
     import s.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
     val ev = eventsUs(s, d)
@@ -867,6 +864,7 @@ object AnalyticsQueries {
         base, Seq("flag"), "v", Seq("med" -> 0.5))
       // persist: dev embeds m1's whole plan, and m2's two passes plus the
       // final aggregate would otherwise re-execute it per pass
+      // bounded: one median row per l_returnflag value (m1 and m2)
       val dev = CacheScope.persisted(base.join(broadcast(m1), "flag")
         .withColumn("d", abs(col("v") - col("med"))))
       val m2 = graft.operators.DistributedSelect.quantilesByGroup(
@@ -951,7 +949,7 @@ object AnalyticsQueries {
       "window and watermark-evicted. Two far-future sentinel batches close the tail windows; " +
       "the emitted set must hash-match the batch 4-windows-per-event fan-out oracle — the " +
       "same plan, batch or stream (streaming twin of q_sliding_window).") { (s, d) =>
-    withStreamingShuffle(s) {
+    graft.core.Sessions.withStreamingShuffle(s) {
     import s.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = s.sqlContext
     val rows = eventsUs(s, d).select("ts_us", "user_id")
@@ -1013,8 +1011,8 @@ object AnalyticsQueries {
       |GROUP BY 1 ORDER BY 1""".stripMargin,
     doc = "STREAM-STATIC enrichment join, oracle-gated: the live half of the events fixture " +
       "arrives as three micro-batches and each event is enriched with a STATIC per-user " +
-      "history profile (built from the first half) via a broadcast left join — no state, " +
-      "no watermark, the static side broadcast once per micro-batch; cold-start users " +
+      "history profile (built from the first half) via a stream-static left join — no " +
+      "state, no watermark; cold-start users " +
       "null-join and are counted. The emitted aggregate must hash-match the batch " +
       "formulation over the same cutoff.") { (s, d) =>
     graft.core.Sessions.withStreamingShuffle(s) {
@@ -1029,7 +1027,7 @@ object AnalyticsQueries {
       .as[(Long, String, Long)].collect().toSeq.sortBy(_._3)
     val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, Long)]
     val enriched = input.toDF().toDF("user_id", "event_type", "ts_us")
-      .join(broadcast(profile), Seq("user_id"), "left")
+      .join(profile, Seq("user_id"), "left")
     val sink = s"stream_enrich_${streamEnrichSink.incrementAndGet()}"
     val ckpt = graft.core.Scratch.ckptDir("graft_stream_enrich").toString
     val q = enriched.writeStream.format("memory").queryName(sink)

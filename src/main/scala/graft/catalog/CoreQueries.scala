@@ -158,14 +158,14 @@ object CoreQueries {
       |GROUP BY o_orderkey, o_orderdate
       |ORDER BY revenue DESC, o_orderkey
       |LIMIT 10""".stripMargin,
-    doc = "TPC-H Q3 shape: small dims broadcast (no shuffle for customer side), fact-fact equi-join.") {
+    doc = "TPC-H Q3 shape: the filtered customer dim joins by size, fact-fact equi-join.") {
     (s, d) =>
       val pivot = java.sql.Timestamp.from(Instant.parse("1998-07-01T00:00:00Z"))
       val c = t(s, d, "customer").filter(col("c_mktsegment") === "BUILDING")
       val o = t(s, d, "orders").filter(col("o_orderdate") < lit(pivot))
       val l = t(s, d, "lineitem").filter(col("l_shipdate") > lit(pivot))
       l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
+        .join(c, col("o_custkey") === col("c_custkey"))
         .groupBy("o_orderkey", "o_orderdate")
         .agg(decSum(dec2(col("l_extendedprice")) * fac2(lit(1.0) - col("l_discount"))).as("revenue"))
         .select("o_orderkey", "o_orderdate", "revenue")

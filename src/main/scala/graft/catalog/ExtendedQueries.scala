@@ -140,10 +140,10 @@ object ExtendedQueries {
       |  CAST(COUNT(*) AS BIGINT) AS n_lines
       |FROM lineitem JOIN part ON l_partkey = p_partkey
       |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    doc = "Dimension join: part is broadcast (no shuffle of the 100 TB fact side), then one hash " +
-      "aggregation on a low-cardinality key.") { (s, d) =>
+    doc = "Dimension join (the planner sizes the part side), then one hash aggregation on a " +
+      "low-cardinality key.") { (s, d) =>
     t(s, d, "lineitem")
-      .join(broadcast(t(s, d, "part")), col("l_partkey") === col("p_partkey"))
+      .join(t(s, d, "part"), col("l_partkey") === col("p_partkey"))
       .groupBy("p_brand")
       .agg(
         decSum(dec2(col("l_extendedprice")) * fac2(lit(1.0) - col("l_discount"))).as("revenue"),
@@ -194,6 +194,7 @@ object ExtendedQueries {
     doc = "Snowflake-dim chain join (both dims broadcast) + rollup aggregate — the ops/metadata " +
       "SQL surface (SURVEY §3.2) strictly supersedes cdf sql's SQLite.") { (s, d) =>
     t(s, d, "customer")
+      // bounded: the nation and region dims
       .join(broadcast(t(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
       .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
       .groupBy("r_name", "n_name")

@@ -133,7 +133,7 @@ object GraphQueries {
         explode(expr(variants("p_name"))).as("v"))
       val probeVars = probes.select(col("probe_key"), col("typo"),
         explode(expr(variants("typo"))).as("v"))
-      nameVars.join(broadcast(probeVars), "v")
+      nameVars.join(probeVars, "v")
         .select("probe_key", "match_key", "typo", "p_name").distinct()
         .filter(levenshtein(col("typo"), col("p_name")) <= 1)
         .orderBy("probe_key", "match_key")
@@ -229,11 +229,11 @@ object GraphQueries {
     * stays sparse at every scale factor — at sf0.1 the raw thresholded
     * graph saturates to the complete graph and every BFS would be
     * depth 1. Scale shape: per round one equi-join keyed on the int
-    * node id + one anti-join against the settled set (both broadcastable
-    * — frontier and settled are O(V), the data-derived adjacency is the
-    * big side at real scale); rounds bounded by the 8-hop cap, and the
-    * convergence probe is an aggregate emptiness check, never rows to
-    * the driver.
+    * node id + one anti-join against the settled set (frontier and
+    * settled are O(V), the data-derived adjacency is the big side at
+    * real scale; the planner sizes both joins); rounds bounded by the
+    * 8-hop cap, and the convergence probe is an aggregate emptiness
+    * check, never rows to the driver.
     */
   val shortestPaths: QueryDef = QueryDef.sqlBacked(
     "q_shortest_paths",
@@ -290,24 +290,10 @@ object GraphQueries {
     var frontier = settled
     var hop = 0
     var frontierRows = 1L
-    // FRONTIER-ONLY broadcast behind a row-count gate (guide §3.1; r15
-    // VERDICT item 5 / ADVICE): the checkpointed RDD-backed frontier has
-    // unknown size, so without a hint the planner shuffles the
-    // data-derived adjacency every hop — but a FORCED hint bypasses the
-    // autoBroadcast guard, so it applies only while the frontier is
-    // provably small (the per-hop count is materialized anyway to drive
-    // the loop). `settled` accumulates every visited vertex (O(V)) and
-    // is NEVER hinted: r15 forced it per hop — an unbounded, growing
-    // driver collect that bought nothing locally (3.89→4.06 flat) and
-    // OOMs at a 100 TB graph. The anti-join side is two narrow node
-    // lists; the shuffle form is safe at any scale. 4M narrow rows
-    // ≈ 64 MB built — well inside any executor/driver budget.
-    val bcastMaxRows = 4L << 20
     while (hop < 8 && frontierRows > 0) {
       hop += 1
-      val fr = if (frontierRows <= bcastMaxRows) broadcast(frontier) else frontier
       // truncate the per-round lineage, like CC
-      frontier = CacheScope.localCheckpointed(fr
+      frontier = CacheScope.localCheckpointed(frontier
         .join(adj, col("node") === col("a"))
         .select(col("b").as("node")).distinct()
         .join(settled, Seq("node"), "left_anti")

@@ -198,8 +198,8 @@ object LlmQueries {
       "perplexity filter): a char-trigram model is the >= 5-count trigrams of a reference " +
       "slice; every document scores the fraction of its trigram OCCURRENCES the model " +
       "knows, and low-coverage (out-of-distribution) documents are dropped. 100 TB shape: " +
-      "the model is a bounded broadcast vocabulary; scoring is explode + broadcast " +
-      "semi-probe + per-doc partial counts — no corpus self-join, all-integer counts so " +
+      "the model is a trigram vocabulary; scoring is explode + left " +
+      "probe + per-doc partial counts — no corpus self-join, all-integer counts so " +
       "the score is bit-identical in any engine.") { (s, d) =>
     def tris(c: org.apache.spark.sql.Column) =
       when(length(c) >= 3,
@@ -210,7 +210,7 @@ object LlmQueries {
     val model = t(s, d, "documents").filter(col("doc_id") % 10 === 0)
       .select(explode(tris(lower(col("text")))).as("g"))
       .groupBy("g").count().filter(col("count") >= 5).select("g")
-    val sc = dt.join(broadcast(model.withColumn("_known", lit(1))), Seq("g"), "left")
+    val sc = dt.join(model.withColumn("_known", lit(1)), Seq("g"), "left")
       .groupBy("doc_id").agg(
         count(lit(1)).cast("int").as("n_tri"),
         sum(coalesce(col("_known"), lit(0))).cast("int").as("n_known"))
@@ -318,10 +318,10 @@ object LlmQueries {
       |WHERE tf.doc_id < 20
       |ORDER BY doc_id, term""".stripMargin,
     doc = "TF-IDF per (doc, term): per-row double arithmetic (no cross-row FP sums), " +
-      "document-frequency join broadcastable (vocab ≪ corpus). One tokenize pass: " +
+      "document-frequency join against the vocabulary (vocab ≪ corpus). One tokenize pass: " +
       "len, df AND the corpus size n all derive from the tf aggregate " +
       "(tf already holds distinct (doc, term) rows), so the explode runs exactly " +
-      "once and no driver-side count job is scheduled — n joins in as a broadcast " +
+      "once and no driver-side count job is scheduled — n joins in as a " +
       "1-row frame (the scalar-subquery shape).") { (s, d) =>
     val tok = docsFanout(s, d)
       .select(col("doc_id"), explode(TextAnalysis.wsTokens(trim(lower(col("text"))))).as("w"))
@@ -330,8 +330,8 @@ object LlmQueries {
     val dfreq = tf.groupBy("w").agg(count(lit(1)).as("df"))
     val n = tf.agg(countDistinct("doc_id").cast("double").as("__n"))
     tf.join(len, "doc_id")
-      .join(broadcast(dfreq), "w")
-      .crossJoin(broadcast(n))
+      .join(dfreq, "w")
+      .crossJoin(n)
       .filter(col("doc_id") < 20)
       .select(col("doc_id"), col("w").as("term"), col("cnt"), col("df"),
         round((col("cnt").cast("double") / col("len")) * log(col("__n") / col("df")), 6).as("tfidf"))
@@ -1480,7 +1480,7 @@ object LlmQueries {
     doc = "Benchmark decontamination (GPT-3/Pile style): flag training documents sharing " +
       "any word n-gram with the held-out eval set (doc_id%100==7 stands in for the " +
       "benchmark; n=3 at demo grain, production uses 8-13 with the identical plan). " +
-      "At scale the eval gram set is broadcast (eval sets are MBs) and only " +
+      "The eval gram set is MBs, so the planner broadcasts it and only " +
       "(doc_id, gram-hash) pairs shuffle.") { (s, d) =>
     val words = docsFanout(s, d).select(col("doc_id"), split(col("text"), " ").as("words"))
     val grams = words.select(col("doc_id"),
@@ -1490,7 +1490,7 @@ object LlmQueries {
           "element_at(words, i + 2)))"))).as("gram"))
     val bench = grams.filter(col("doc_id") % 100 === 7).select("gram").distinct()
     val train = grams.filter(col("doc_id") % 100 =!= 7).select("doc_id", "gram").distinct()
-    train.join(broadcast(bench), "gram")
+    train.join(bench, "gram")
       .groupBy("doc_id").agg(count(lit(1)).cast("long").as("n_shared_grams"))
       .orderBy("doc_id")
   }
@@ -1621,8 +1621,8 @@ object LlmQueries {
       "proportional to sqrt(count) — the multilingual rebalancing rule that up-weights " +
       "low-resource slices — applied by a deterministic id-derived coin against a " +
       "floor'd per-10000 threshold. Weights round to 6 decimals and accumulate as exact " +
-      "DECIMAL so the threshold is bit-identical in any engine; the rate table is " +
-      "bounded (one row per language) and broadcasts.") { (s, d) =>
+      "DECIMAL so the threshold is bit-identical in any engine; the rate table has " +
+      "one row per language.") { (s, d) =>
     CorpusOps.temperatureMix(docs(s, d), "lang", "doc_id", targetFrac = 0.5)
       .orderBy("lang")
   }
@@ -1685,7 +1685,7 @@ object LlmQueries {
       |ORDER BY doc_id, term""".stripMargin,
     doc = "BM25 relevance per (doc, query term), k1=1.2 b=0.75: corpus stats (N, avgdl) derive " +
       "from EXACT integer aggregates so the only floats are per-row (no cross-row FP sums — " +
-      "the determinism law); df table and the 1-row stats frame broadcast into the probe. " +
+      "the determinism law); df table and the 1-row stats frame join into the probe. " +
       "One tokenize pass feeds lengths and term frequencies.") { (s, d) =>
     val terms = Seq("data", "join", "spark")
     val tok = docsFanout(s, d)
@@ -1697,8 +1697,8 @@ object LlmQueries {
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val avgdl = col("__total").cast("double") / col("__n")
     tf.join(len, "doc_id")
-      .join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
+      .join(dfreq, "term")
+      .crossJoin(stats)
       .select(col("doc_id"), col("term"), col("tf"), col("df"),
         round(
           log(lit(1) + (col("__n") - col("df") + 0.5) / (col("df") + 0.5)) *
@@ -1787,8 +1787,8 @@ object LlmQueries {
     * ppm, so both engines agree to the bit. One tokenize pass: the
     * (doc, word, cnt) tf aggregate supplies the
     * target vocabulary, the raw vocabulary AND the per-doc sums; the
-    * vocab tables are aggregate-sized (broadcastable at 100 TB, where
-    * the doc side is the fact). Selection = top-k by score, planned as
+    * vocab tables are aggregate-sized (the doc side is the fact).
+    * Selection = top-k by score, planned as
     * TakeOrderedAndProject.
     */
   val dsirScore: QueryDef = QueryDef.sqlBacked(
@@ -1812,7 +1812,7 @@ object LlmQueries {
       |FROM ds ORDER BY score_ppm DESC, doc_id LIMIT 50""".stripMargin,
     doc = "DSIR-style importance scoring vs a target corpus (lang='de'): per-doc " +
       "Σ target-freq / Σ raw-freq in exact integer ppm from ONE tokenize " +
-      "pass; vocab tables broadcast; top-k selection as TakeOrderedAndProject.") {
+      "pass; vocab tables joined by size; top-k selection as TakeOrderedAndProject.") {
     (s, d) =>
       val tok = docsFanout(s, d).select(col("doc_id"), col("lang"),
         explode(graft.llm.TextAnalysis.wsTokens(lower(col("text")))).as("w"))
@@ -1822,8 +1822,8 @@ object LlmQueries {
         .groupBy("w").agg(sum("cnt").as("tc"))
       val rcnt = tf.groupBy("w").agg(sum("cnt").as("rc"))
       val ds = tf
-        .join(broadcast(tcnt), Seq("w"), "left")
-        .join(broadcast(rcnt), Seq("w"))
+        .join(tcnt, Seq("w"), "left")
+        .join(rcnt, Seq("w"))
         .groupBy("doc_id")
         .agg(sum("cnt").as("n_words"),
           sum(col("cnt") * coalesce(col("tc"), lit(0L))).as("sum_t"),

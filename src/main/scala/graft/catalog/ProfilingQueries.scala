@@ -207,7 +207,7 @@ object ProfilingQueries {
       val lookup = benfordPpm.foldLeft(lit(null).cast("long")) { case (acc, (k, v)) =>
         when(col("digit") === k, lit(v.toLong)).otherwise(acc)
       }
-      counts.crossJoin(broadcast(total))
+      counts.crossJoin(total)
         .select(col("digit"), col("cnt"),
           expr("cnt * 1000000 div total").as("obs_ppm"),
           lookup.as("benford_ppm"))
@@ -404,8 +404,7 @@ object ProfilingQueries {
         .select(((col("o_custkey") * 48271L) % m).as("h")).distinct()
         .orderBy("h").limit(k)
       val row = mins.agg(count(lit(1)).as("k_held"), max("h").as("kth"))
-        .crossJoin(broadcast(
-          orders.agg(countDistinct("o_custkey").as("exact_distinct"))))
+        .crossJoin(orders.agg(countDistinct("o_custkey").as("exact_distinct")))
         .select(col("k_held"), col("kth"), col("exact_distinct"),
           when(col("k_held") < k, col("k_held"))
             .otherwise(expr(s"(k_held - 1) * ${m}L div kth")).as("est_distinct"))
@@ -606,7 +605,7 @@ object ProfilingQueries {
         .select((weekday(col("o_orderdate")) + 1).as("dow"))
         .groupBy("dow").agg(count(lit(1)).as("cnt"))
       val total = dd.agg(sum("cnt").cast("long").as("total"))
-      dd.crossJoin(broadcast(total))
+      dd.crossJoin(total)
         .select(col("dow"), col("cnt"),
           expr("cnt * 7 * 1000000 div total").as("seasonal_index_ppm"))
         .orderBy("dow")
@@ -670,7 +669,7 @@ object ProfilingQueries {
             countDistinct(when(col("o_orderpriority") === "5-LOW",
               col("o_custkey"))) -
             countDistinct("o_custkey")).as("exact_inter"))
-      sketch.crossJoin(broadcast(exact))
+      sketch.crossJoin(exact)
         .select(col("k_held"), col("kth").cast("long").as("kth"), col("n_both"),
           col("exact_union"), col("exact_inter"),
           when(col("k_held") < k, col("k_held"))

@@ -150,6 +150,7 @@ object RankStatsQueries {
       .groupBy("day").agg(sum(col("c")).as("x"))
     val lags = (1 to 3).map { lag =>
       daily.as("a")
+        // bounded: one row per calendar day
         .join(broadcast(daily.as("b")),
           col("b.day") === col("a.day") + lag)
         .select(lit(lag).as("lag"), col("a.x").as("xa"), col("b.x").as("xb"))
@@ -202,7 +203,8 @@ object RankStatsQueries {
     val p = col("n").cast("double") / col("total").cast("double")
     val pf = col("nf").cast("double") / col("total").cast("double")
     val ps = col("ns").cast("double") / col("total").cast("double")
-    j.crossJoin(broadcast(tot))
+    j.crossJoin(tot)
+      // bounded: one row per l_returnflag and per l_linestatus value
       .join(broadcast(mf), "flag")
       .join(broadcast(ms), "status")
       .select(col("flag"), col("status"), col("n"),
@@ -251,13 +253,13 @@ object RankStatsQueries {
       |ORDER BY ba, bb""".stripMargin,
     doc = "Association rules over order baskets (brand co-occurrence): support, " +
       "confidence, lift — the A-Priori first two passes. Scale shape: the part " +
-      "dimension BROADCASTS into the fact scan, baskets dedupe on (order, brand) with " +
+      "dimension joins the fact scan, baskets dedupe on (order, brand) with " +
       "partial aggregation, and the pair join co-partitions on the order key — " +
       "per-basket pair fan-out is bounded by basket size, never all-pairs across " +
       "baskets. Singleton counts broadcast back into the pair table; measures are " +
       "identical-IEEE epilogues over exact counts.") { (s, d) =>
     val bk = t(s, d, "lineitem")
-      .join(broadcast(t(s, d, "part")),
+      .join(t(s, d, "part"),
         col("p_partkey") === col("l_partkey"))
       .select(col("l_orderkey").as("o"), col("p_brand").as("b"))
       .distinct()
@@ -268,7 +270,8 @@ object RankStatsQueries {
       .groupBy(col("a.b").as("ba"), col("c.b").as("bb"))
       .agg(count(lit(1)).as("nab"))
       .filter(col("nab") >= 5)
-    pairs.crossJoin(broadcast(n))
+    pairs.crossJoin(n)
+      // bounded: one row per brand
       .join(broadcast(singles.select(col("b").as("ba"), col("n1").as("n1a"))), "ba")
       .join(broadcast(singles.select(col("b").as("bb"), col("n1").as("n1b"))), "bb")
       .select(col("ba"), col("bb"), col("nab"),
@@ -471,7 +474,7 @@ object RankStatsQueries {
         lit(10000)).as("a"),
       count(lit(1)).as("n"))
       .select(col("a").getItem(0).as("a50"), col("a").getItem(1).as("a99"), col("n"))
-    val ranks = base.crossJoin(broadcast(appr))
+    val ranks = base.crossJoin(appr)
       .agg(
         sum(when(col("x").cast("double") < col("a50"), 1L).otherwise(0L)).as("lt50"),
         sum(when(col("x").cast("double") <= col("a50"), 1L).otherwise(0L)).as("le50"),
@@ -483,7 +486,7 @@ object RankStatsQueries {
       val k = ceil(col("n") * q).cast("long")
       (col(lt) <= k - 1 + err) && (col(le) >= k - err)
     }
-    ranks.crossJoin(broadcast(exact))
+    ranks.crossJoin(exact)
       .select(
         col("p50").cast("double").as("exact_p50"),
         col("p99").cast("double").as("exact_p99"),
@@ -504,12 +507,12 @@ object RankStatsQueries {
       |FROM tot""".stripMargin,
     doc = "Herfindahl–Hirschman concentration index of revenue across brands: " +
       "HHI = Σ shareᵢ² computed EXACTLY as Σcentsᵢ² / (Σcents)² — both sums are exact " +
-      "integers (HUGEINT/DECIMAL(38,0)) from one aggregation over the broadcast-joined " +
+      "integers (HUGEINT/DECIMAL(38,0)) from one aggregation over the part-joined " +
       "fact table, so no per-share double ever sums across rows; the single division " +
       "runs on two identical exact operands. 1/25 = 0.04 is perfect competition here, " +
       "1.0 a monopoly.") { (s, d) =>
     val b = t(s, d, "lineitem")
-      .join(broadcast(t(s, d, "part")), col("p_partkey") === col("l_partkey"))
+      .join(t(s, d, "part"), col("p_partkey") === col("l_partkey"))
       .groupBy("p_brand")
       .agg(sum((col("l_extendedprice").cast(DecimalType(12, 2)) * 100)
         .cast("long")).as("cents"))
@@ -544,10 +547,10 @@ object RankStatsQueries {
       "in pure INTEGERS (cum·10 ≤ tot·8), so there is no floating point anywhere. The " +
       "brand dimension is bounded (dictionary-sized), so the cumulative window runs " +
       "over a tiny aggregate; the only full-data pass is the map-combined revenue " +
-      "aggregation with the part dim broadcast.") { (s, d) =>
+      "aggregation joined to the part dim.") { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     val b = t(s, d, "lineitem")
-      .join(broadcast(t(s, d, "part")), col("p_partkey") === col("l_partkey"))
+      .join(t(s, d, "part"), col("p_partkey") === col("l_partkey"))
       .groupBy("p_brand")
       .agg(sum((col("l_extendedprice").cast(DecimalType(12, 2)) * 100)
         .cast("long")).as("cents"))
@@ -585,63 +588,43 @@ object RankStatsQueries {
       |FROM s""".stripMargin,
     doc = "Spearman rank correlation (quantity vs extendedprice), EXACT with midranks for " +
       "ties: ρ = Pearson over the integer 2·midranks, which come from one VALUE " +
-      "HISTOGRAM per variable + RunningTotals' distributed prefix sum — the oracle's " +
-      "two global rank() windows are each one task at scale; here no row-level global " +
-      "sort exists. Per-row ranks rejoin the fact rows by VALUE (two co-keyed joins " +
-      "against tie-collapsed histograms), and all six Pearson terms accumulate in " +
-      "DECIMAL(38,0)/HUGEINT with one double cast each.") { (s, d) =>
+      "HISTOGRAM per variable + a running count over it — the oracle's two global " +
+      "rank() windows each sort every row in one task; here the window sorts distinct " +
+      "values, and no row-level global sort exists. Per-row ranks rejoin the fact rows " +
+      "by VALUE (two co-keyed joins against tie-collapsed histograms), and all six " +
+      "Pearson terms accumulate in DECIMAL(38,0)/HUGEINT with one double cast each.") { (s, d) =>
     spearmanDf(s, d)
   }
 
-  /** q_spearman's dataflow. Each choice below was selected by a
-    * measured A/B of every combination (OPTIMIZATION_r16.md item 6).
-    *
-    * The one-row result is computed here and returned as a local
-    * frame, so what the computation persists (RunningTotals' sorted
-    * histograms) is released before the call returns, also when it
-    * throws. */
-  private[graft] def spearmanDf(s: SparkSession, d: String): DataFrame = graft.core.CacheScope {
+  /** q_spearman's dataflow, lazy: building it starts no Spark job. */
+  private[graft] def spearmanDf(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     // no spread: r15's round-robin exchange on the fact projection cost
     // more than the 1-task map side saved (2.92 with vs 2.45 without; at
     // real scale splits >= cores and the spread is a no-op anyway)
     val pts = t(s, d, "lineitem").select(
       (col("l_quantity").cast(DecimalType(12, 2)) * 100).cast("long").as("x"),
       (col("l_extendedprice").cast(DecimalType(12, 2)) * 100).cast("long").as("y"))
-    def midranks(vCol: String, out: String): DataFrame = {
-      val hist = pts.groupBy(vCol).agg(count(lit(1)).as("c"))
-      graft.operators.RunningTotals
-        .perGroup(hist, Seq.empty, Seq(col(vCol)), "c",
-          outCol = "__cum", rankOut = "__rn")
-        // 2·midrank = 2·cum_lt + c + 1
-        .select(col(vCol), (lit(2) * (col("__cum") - col("c")) + col("c") + 1).as(out))
-    }
-    // broadcast the tie-collapsed value histograms: without a hint
-    // Catalyst sees the ExistingRDD side as unknown-size and either
-    // broadcasts the FACT side (plan-audited r15: BuildLeft over the
-    // whole lineitem projection — an OOM at real scale) or falls back
-    // to two SortMergeJoins that shuffle every fact row by value.
-    // x is hinted unconditionally (l_quantity's domain is genuinely
-    // bounded: 1..50 cents-scale); y only while its actual cardinality
-    // stays under a 4 Mi-row gate (distinct prices grow with part count,
-    // so "value-bounded" is not scale-safe for y; past the gate the join
-    // falls back to the shuffle form) — the count is one small extra
-    // job over the histogram.
-    val yh = midranks("y", "ry")
-    val xh = midranks("x", "rx")
-    val yJ = if (yh.count() <= (4L << 20)) broadcast(yh) else yh
-    val ranked = pts.join(broadcast(xh), "x").join(yJ, "y")
+    // 2·midrank = 2·cum_lt + c + 1 = 2·cum_le − c + 1, with cum_le the
+    // running count over the tie-collapsed histogram: the window sorts
+    // one row per distinct value, never the fact rows
+    def midranks(vCol: String, out: String): DataFrame =
+      pts.groupBy(vCol).agg(count(lit(1)).as("c"))
+        .select(col(vCol),
+          (lit(2) * sum(col("c")).over(Window.orderBy(vCol)) - col("c") + 1).as(out))
+    // bounded: one row per l_quantity value (50)
+    val ranked = pts.join(broadcast(midranks("x", "rx")), "x").join(midranks("y", "ry"), "y")
     val s6 = ranked.agg(
       count(lit(1)).cast(dec38).as("n"),
       sum(col("rx").cast(dec38)).as("sx"), sum(col("ry").cast(dec38)).as("sy"),
       sum(col("rx").cast(dec38) * col("rx").cast(dec38)).as("sxx"),
       sum(col("ry").cast(dec38) * col("ry").cast(dec38)).as("syy"),
       sum(col("rx").cast(dec38) * col("ry").cast(dec38)).as("sxy"))
-    val rho = s6.select(
+    s6.select(
       round((col("n") * col("sxy") - col("sx") * col("sy")).cast("double")
         / (sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double"))
           * sqrt((col("n") * col("syy") - col("sy") * col("sy")).cast("double"))), 6)
         .as("spearman_rho"))
-    s.createDataFrame(java.util.List.of(rho.head()), rho.schema)
   }
 
   val topkPerGroup: QueryDef = QueryDef.sqlBacked(
@@ -705,6 +688,7 @@ object RankStatsQueries {
         (col("l_quantity").cast(DecimalType(12, 2)) * 100).cast("long").as("x"),
         (col("l_discount").cast(DecimalType(12, 2)) * 100).cast("long").as("y"))
       .agg(count(lit(1)).as("c"))
+    // bounded: one row per (l_quantity, l_discount) value pair
     val p = j.as("a").join(broadcast(j.as("b")), col("b.x") > col("a.x"))
       .agg(
         sum(when(col("b.y") > col("a.y"),
@@ -716,7 +700,7 @@ object RankStatsQueries {
       .agg(sum(col("cx").cast(dec38) * col("cx").cast(dec38)).as("sxx"))
     val syy = j.groupBy("y").agg(sum(col("c")).as("cy"))
       .agg(sum(col("cy").cast(dec38) * col("cy").cast(dec38)).as("syy"))
-    p.crossJoin(broadcast(tot)).crossJoin(broadcast(sxx)).crossJoin(broadcast(syy))
+    p.crossJoin(tot).crossJoin(sxx).crossJoin(syy)
       .select(round((lit(2) * col("nc") - lit(2) * col("nd")).cast("double")
         / (sqrt((col("n") * col("n") - col("sxx")).cast("double"))
           * sqrt((col("n") * col("n") - col("syy")).cast("double"))), 6)
@@ -756,7 +740,7 @@ object RankStatsQueries {
     val cum = graft.operators.RunningTotals.perGroupMulti(
       hist, Seq.empty, Seq(col("cents")), Seq("n1c", "n2c"), Seq("__c1", "__c2"))
     val tot = hist.agg(sum(col("n1c")).as("n1"), sum(col("n2c")).as("n2"))
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .select(
         abs(col("__c1").cast(dec38) * col("n2").cast(dec38)
           - col("__c2").cast(dec38) * col("n1").cast(dec38)).as("__num"),
@@ -800,7 +784,8 @@ object RankStatsQueries {
     val ms = j.groupBy("status").agg(sum(col("n")).cast(dec38).as("ns"))
     val delta = (col("n").cast(dec38) * col("total") - col("nf") * col("ns"))
       .cast("double")
-    j.crossJoin(broadcast(tot))
+    j.crossJoin(tot)
+      // bounded: one row per l_returnflag and per l_linestatus value
       .join(broadcast(mf), "flag")
       .join(broadcast(ms), "status")
       .select(col("flag"), col("status"), col("n"),

@@ -117,7 +117,7 @@ object RobustStatsQueries {
       // summing g would replay byPri's fact pass as a second subtree
       val tot = cum.agg(max("__cum").cast("long").as("n"))
       val nD = col("n").cast("double")
-      g.crossJoin(broadcast(tot))
+      g.crossJoin(tot)
         .select(col("pri"),
           col("__ng").cast("long").as("n_g"),
           col("__r2").cast("long").as("rank_sum2"),
@@ -156,7 +156,7 @@ object RobustStatsQueries {
     val e = o.select(col("o_custkey"), Tables.tsUs(o, "o_orderdate").as("us"))
     val u0 = e.groupBy("o_custkey").agg(min("us").as("mn"), max("us").as("mx"))
     val gmax = u0.agg(max("mx").as("gmax"))
-    val u = u0.crossJoin(broadcast(gmax)).select(
+    val u = u0.crossJoin(gmax).select(
       expr("(mx - mn) div 604800000000").as("dur"),
       when(col("mx") > col("gmax") - 7776000000000L, 1L).otherwise(0L).as("cens"))
     val h = u.groupBy("dur").agg(
@@ -167,7 +167,7 @@ object RobustStatsQueries {
     // re-aggregating h would replay the per-customer fact pass
     val tot = cum.agg(max("__cum").cast("long").as("n"))
     val nRisk = col("n") - (col("__cum") - col("c"))
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .filter(col("d") > 0)
       .select(col("dur").as("t_weeks"),
         nRisk.cast("long").as("n_risk"),
@@ -215,7 +215,7 @@ object RobustStatsQueries {
     val tot = b.agg(sum("n1").cast("long").as("t1"), sum("n2").cast("long").as("t2"))
     val p1 = col("n1").cast("double") / col("t1").cast("double")
     val p2 = col("n2").cast("double") / col("t2").cast("double")
-    b.crossJoin(broadcast(tot))
+    b.crossJoin(tot)
       .select(col("bin"), col("n1"), col("n2"),
         when(col("n1") > 0 && col("n2") > 0,
           round((p1 - p2) * log(p1 / p2), 6)).as("psi_term"))
@@ -248,7 +248,7 @@ object RobustStatsQueries {
         .select(expr("us div 86400000000").as("day"), col("c"))
         .groupBy("day").agg(sum(col("c")).as("x"))
       val tot = daily.agg(sum(col("x")).as("tot"), count(lit(1)).as("k"))
-      val centered = daily.crossJoin(broadcast(tot))
+      val centered = daily.crossJoin(tot)
         .select(col("day"), (col("x") * col("k") - col("tot")).as("v"), col("tot"))
       val cum = graft.operators.RunningTotals.perGroup(
         centered, Seq.empty, Seq(col("day")), "v", outCol = "__cusum")
@@ -291,7 +291,7 @@ object RobustStatsQueries {
       import s.implicits._
       (1 to 10).map(_.toLong).toDF("k")
     }
-    r.join(broadcast(deciles.crossJoin(tot)),
+    r.join(deciles.crossJoin(tot),
         col("__rn") === expr("(n * k + 9) div 10"))
       .select(col("k").as("decile"),
         col("__cum").cast("long").as("cum_cents"),
@@ -321,7 +321,7 @@ object RobustStatsQueries {
     // total weight = max running sum over the persisted frame (no
     // second lineitem pass through h)
     val tot = cum.agg(max("__cum").as("tw"))
-    cum.crossJoin(broadcast(tot))
+    cum.crossJoin(tot)
       .filter(col("__cum") * 2 >= col("tw"))
       .groupBy("tw")
       .agg(min(col("cents")).as("wmedian"))
@@ -360,6 +360,7 @@ object RobustStatsQueries {
       .withColumn("g", expr("n div 10"))
       .withColumn("kLo", col("g") + 1)
       .withColumn("kHi", col("n") - col("g"))
+    // bounded: one row per l_returnflag value (here and in `bounds`)
     val j = cum.join(broadcast(sized), "flag")
     // Both trim boundaries from ONE conditional aggregation over the
     // joined frame (they were two separate filter+groupBy subtrees):
@@ -411,7 +412,7 @@ object RobustStatsQueries {
       sum(col("c").cast(dec38)).as("s"),
       sum(col("c").cast(dec38) * col("c").cast(dec38)).as("q"))
     val nD = col("n").cast("double")
-    v.crossJoin(broadcast(tot))
+    v.crossJoin(tot)
       .select(col("o_orderkey"),
         abs(col("c").cast(dec38) * col("n") - col("s")).as("dev"),
         col("n"), col("s"), col("q"))
@@ -460,6 +461,7 @@ object RobustStatsQueries {
     }
     val targets = sized.crossJoin(deciles)
       .select(col("g"), col("k"), expr("(n * k + 9) div 10").as("t"))
+    // bounded: two priorities × 9 deciles
     val picked = cum.join(broadcast(targets), Seq("g"))
       .filter(col("__cum") >= col("t"))
       .groupBy("g", "k").agg(min(col("c")).as("v"))
@@ -494,12 +496,13 @@ object RobustStatsQueries {
       .select(Tables.tsUs(ord, "o_orderdate").as("us"), cents("o_totalprice").as("c"))
       .select(expr("us div 86400000000").as("day"), col("c"))
       .groupBy("day").agg(sum(col("c")).as("x"))
+    // bounded: one row per calendar day
     val p = daily.as("a").join(broadcast(daily.as("b")), col("b.day") > col("a.day"))
       .select(when(col("b.x") > col("a.x"), 1L)
         .when(col("b.x") < col("a.x"), -1L).otherwise(0L).as("sg"))
     val tot = daily.agg(count(lit(1)).cast("long").as("k"))
     val kD = col("k").cast("double")
-    p.crossJoin(broadcast(tot))
+    p.crossJoin(tot)
       .groupBy("k")
       .agg(sum(col("sg")).as("__s"))
       .select(col("k").as("n_days"),

@@ -155,6 +155,7 @@ object TimeSeriesQueries {
     val cum = graft.operators.RunningTotals.perGroup(
       hist, Seq("dow"), Seq(col("det")), "c", outCol = "__cum")
     val sized = cum.groupBy("dow").agg(max("__cum").as("n"))
+    // bounded: one row per day of week
     cum.join(broadcast(sized), "dow")
       .filter(col("__cum") >= expr("(n + 1) div 2"))
       .groupBy("dow", "n").agg(min("det").as("seasonal_cents"))

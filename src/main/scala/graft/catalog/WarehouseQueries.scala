@@ -345,7 +345,7 @@ object WarehouseQueries {
     t(s, d, "lineitem")
       .select(col("l_partkey"), col("l_extendedprice"))
       .filter(call_function("graft_bloom_might_contain", lit(bytes), col("l_partkey")))
-      .join(broadcast(dim), col("l_partkey") === col("p_partkey"))
+      .join(dim, col("l_partkey") === col("p_partkey"))
       .groupBy("p_name")
       .agg(count(lit(1)).as("n"), decSum(dec2(col("l_extendedprice"))).as("revenue"))
       .orderBy("p_name")
@@ -818,7 +818,7 @@ object WarehouseQueries {
     val g = o.groupBy("dow").agg(count(lit(1)).as("n"),
       sum(col("cents").cast(dec38)).as("c"))
     val tot = g.agg(sum(col("c")).as("tot"))
-    g.crossJoin(broadcast(tot))
+    g.crossJoin(tot)
       .select(col("dow").cast("long").as("dow"), col("n"),
         col("c").cast("long").as("cents"),
         expr("(c * 1000000) div tot").cast("long").as("share_ppm"))

@@ -15,8 +15,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * the caller's scope does, after the result has run. Every entry point
   * that runs catalog queries (`Bench.timedRep`, `Verify`, `tools.Probe`)
   * opens one scope per query; a caller that computes its result eagerly
-  * opens its own (`q_spearman`, the BPE merge loop). Outside any scope a
-  * persist stays until the session stops.
+  * opens its own (the BPE merge loop). Outside any scope a persist
+  * stays until the session stops.
   *
   * The scope stack is inherited by threads created inside a scope, so
   * the workers of `Par.awaitAll` (a pool created per call from the

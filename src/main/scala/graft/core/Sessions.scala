@@ -42,8 +42,7 @@ object Sessions {
     *   state genuinely distributed (and the results are partition-
     *   count invariant — the oracle gate reruns at several core
     *   counts; only the wall changes). On a real cluster, size state
-    *   partitions to executor count through this same env/conf —
-    *   SPARK_GRAFT_STREAM_SHUFFLE overrides.
+    *   partitions to executor count.
     * - noDataMicroBatches off: Spark schedules an EXTRA empty batch
     *   after every data batch to advance the watermark eagerly; these
     *   fixtures drive watermark movement with their own feed (sentinel
@@ -57,8 +56,7 @@ object Sessions {
     *   deployment tunes retention to its recovery SLA. */
   def withStreamingShuffle[T](s: SparkSession)(body: => T): T =
     withConfs(s, Seq(
-      "spark.sql.shuffle.partitions" ->
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4"),
+      "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
       "spark.sql.streaming.minBatchesToRetain" -> "2"))(body)
 

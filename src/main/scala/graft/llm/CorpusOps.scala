@@ -50,8 +50,8 @@ object CorpusOps {
         concat_ws(" ", slice(col("w"), col("chunk_idx") * width + 1, lit(width)))
           .as("chunk"))
     // Frequency pass shuffles ONLY (16-byte chunk digest, doc id); the
-    // resulting boilerplate set is small (>= minDocs occurrences each)
-    // and broadcasts back as bare digests. The key is the FULL 128-bit
+    // resulting boilerplate set (>= minDocs occurrences each) joins
+    // back as bare digests. The key is the FULL 128-bit
     // md5 — digest equality stands in for chunk identity, and at the
     // 128-bit width the birthday bound keeps the collision probability
     // negligible even at trillion-chunk scale (~10^-15 at 10^12 chunks),
@@ -64,7 +64,7 @@ object CorpusOps {
       .filter(col("nd") >= minDocs)
       .select(col("ck"), lit(1).as("_rep"))
     chunks
-      .join(broadcast(frequent), ck === col("ck"), "left")
+      .join(frequent, ck === col("ck"), "left")
       .groupBy(col(idCol))
       .agg(
         count(lit(1)).cast("int").as("n_chunks"),
@@ -128,10 +128,9 @@ object CorpusOps {
       .agg(count(lit(1)).as("n"))
       .withColumn("wt",
         round(sqrt(col("n").cast("double")), 6).cast("decimal(18,6)"))
-    // group cardinality is bounded (languages / sources), so the rate
-    // table is a broadcast scalar join — the data pays one narrow pass
+    // one rate row per group, joined back: the data pays one narrow pass
     val tot = counts.agg(sum("n").as("total"), sum("wt").as("sumw"))
-    val rates = counts.crossJoin(broadcast(tot))
+    val rates = counts.crossJoin(tot)
       .withColumn("thr",
         least(lit(10000.0),
           floor(lit(10000.0)
@@ -139,7 +138,7 @@ object CorpusOps {
                * col("wt").cast("double") / col("sumw").cast("double"))
             / col("n").cast("double"))).cast("int"))
       .select(col(groupCol), col("n"), col("thr"))
-    df.join(broadcast(rates), Seq(groupCol))
+    df.join(rates, Seq(groupCol))
       .groupBy(col(groupCol), col("n"), col("thr"))
       .agg(sum(when(pmod(col(idCol), lit(10000)) < col("thr"), 1L).otherwise(0L))
         .as("n_sampled"))

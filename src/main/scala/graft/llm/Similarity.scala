@@ -78,7 +78,7 @@ object Similarity {
     val r = df.filter(!isQuery)
       .select(col(idCol).as("rid"), col(embCol).as("r_emb"),
         col(labelCol).as("label"))
-    val scored = r.crossJoin(broadcast(q))
+    val scored = r.crossJoin(q)
       .select(col("qid"), col("rid"), col("label"),
         round(dot(col("q_emb"), col("r_emb")) /
           (norm(col("q_emb")) * norm(col("r_emb"))), 4).as("cos"))
@@ -447,9 +447,9 @@ object Similarity {
       new java.util.ArrayList[org.apache.spark.sql.Row](
         java.util.Arrays.asList(centRows: _*)), centSchema)
     // one narrow pass: cluster assignment + norm, then the tiny
-    // codebook joins back in (broadcast) for the cosine-to-centroid
+    // codebook joins back in for the cosine-to-centroid
     val a = ivfAssign(df.select(col(idCol).as("id"), col(embCol).as("emb")), "emb", centroids)
-      .join(broadcast(centDf), col("_ivf_cluster") === col("_c"))
+      .join(centDf, col("_ivf_cluster") === col("_c"))
       .select(col("id"), col("emb"), col("_ivf_cluster").as("cluster"),
         norm(col("emb")).as("nrm"),
         round(dot(col("emb"), col("_cemb")) /

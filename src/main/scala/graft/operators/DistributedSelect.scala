@@ -248,13 +248,12 @@ object DistributedSelect {
         .withColumn(s"__hi$i", when(col("__n") <= smallN,
           lit(Double.PositiveInfinity)).otherwise(col("__c").getItem(2 * i + 1)))
     }.drop("__c", "__n")
-    val bc = broadcast(p1k)
 
     // pass 2: slice value-histogram + strict below-bracket counts, exact
     val inSlice = qs.indices.map(i =>
       col("__vd") >= col(s"__lo$i") && col("__vd") <= col(s"__hi$i"))
       .reduce(_ || _)
-    val p2 = base.join(bc, groupCols)
+    val p2 = base.join(p1k, groupCols)
       .groupBy(g :+ when(inSlice, col("__v")).as("__sv"): _*)
       .agg(count(lit(1)).as("__cnt"),
         qs.indices.map(i =>
@@ -274,7 +273,7 @@ object DistributedSelect {
         struct(col("__sv").cast("double").as("d"), col("__sv").as("v"),
           col("__cnt").as("c"))))).as("__hist"),
       qs.indices.map(i => sum(col(s"__plt$i")).as(s"__nlt$i")): _*)
-    val withAns = qs.zipWithIndex.foldLeft(folded.join(bc, groupCols)) {
+    val withAns = qs.zipWithIndex.foldLeft(folded.join(p1k, groupCols)) {
       case (acc, ((out, _), i)) =>
         // running fold over the ascending histogram: cum counts all
         // slice rows ≤ v; cumlt freezes at the last value below lo, so

@@ -39,7 +39,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
   * boundaries). The result is lazy over that persist, so the operator
   * does not release it: the caller's `core.CacheScope` does once the
   * result has run (one scope per query in Verify, Bench and
-  * tools.Probe; q_spearman opens its own around its eager computation).
+  * tools.Probe).
   */
 object RunningTotals {
 

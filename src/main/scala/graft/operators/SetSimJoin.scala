@@ -28,9 +28,9 @@ object SetSimJoin {
   def jaccardPairs(df: DataFrame, idCol: String, tokensCol: String,
       threshold: Double): DataFrame = {
     require(threshold > 0 && threshold <= 1)
-    val toks = graft.core.CacheScope.persisted(df
+    val toks = df
       .select(col(idCol).as("__id"), array_distinct(col(tokensCol)).as("__tk"))
-      .filter(size(col("__tk")) > 0)) // feeds ranking AND both verify sides
+      .filter(size(col("__tk")) > 0)
     val sizes = toks.select(col("__id"), size(col("__tk")).as("__sz"))
     val exploded = toks
       .select(col("__id"), size(col("__tk")).as("__sz"),

@@ -421,9 +421,8 @@ object Runner {
           bucketedApply(keys, last.select(keys.map(col): _*),
               last.filter(col(opCol) =!= "delete").drop(opCol), priorIntact) { scope =>
             // the probe's SAME scan also counts surviving rows whose key
-            // this package deleted (broadcast mark of the stage-sized
-            // delete set) — must be zero
-            val r = scope.join(broadcast(deleted.withColumn("__gdel", lit(1L))), keys, "left")
+            // this package deleted — must be zero
+            val r = scope.join(deleted.withColumn("__gdel", lit(1L)), keys, "left")
               .agg(count(lit(1)), sum(PackageWriter.rowHash(scope.columns.toSeq)),
                 sum(coalesce(col("__gdel"), lit(0L)))).head()
             ((r.getLong(0), PackageWriter.hashAt(r, 1)), r.isNullAt(2) || r.getLong(2) == 0L)

@@ -609,7 +609,7 @@ object DeltaLog {
     val del = spark.createDataFrame(rows.asJava, delSchema)
     scanWithPath
       .withColumn("__g_pos", col("_metadata.row_index"))
-      .join(broadcast(del), Seq("__g_path", "__g_pos"), "left_anti")
+      .join(del, Seq("__g_path", "__g_pos"), "left_anti")
       .drop("__g_pos")
   }
 
@@ -646,7 +646,7 @@ object DeltaLog {
         meta.partitionColumns.map(c => StructField(c, byName(c))).toArray.toSeq)
     val partDf = spark.createDataFrame(partRows.asJava, partSchema)
     scan
-      .join(broadcast(partDf), "__g_path")
+      .join(partDf, "__g_path")
       .select(meta.schema.fieldNames.map(logicalCol).toSeq: _*)
   }
 
@@ -1017,7 +1017,7 @@ object DeltaLog {
       val partSchema = StructType(
         StructField("__g_path", StringType) +:
           meta.partitionColumns.map(c => StructField(c, byName(c))).toArray.toSeq)
-      scan.join(broadcast(spark.createDataFrame(partRows.asJava, partSchema)), "__g_path")
+      scan.join(spark.createDataFrame(partRows.asJava, partSchema), "__g_path")
         .select((meta.schema.fieldNames.map(logicalCol) :+ col("__g_path")).toSeq: _*)
     }
   }

@@ -1531,7 +1531,7 @@ object IcebergSource {
     val data = resolvedData(spark, files, meta, targetSchemaId, withPos = true)
     val seqDf = files.map(f => (f.path.replaceFirst("^file:/+", "/"), f.seq))
       .toDF("__g_seqfile", "__g_dataseq")
-    val withSeq = data.join(broadcast(seqDf), data("__g_file") === seqDf("__g_seqfile"))
+    val withSeq = data.join(seqDf, data("__g_file") === seqDf("__g_seqfile"))
       .drop("__g_seqfile")
 
     val (dvFiles, pqPosFiles) = deletes.filter(_.content == 1).partition(_.isDv)
@@ -1568,7 +1568,7 @@ object IcebergSource {
         if (dvRefs.isEmpty) Some(raw)
         else {
           val refsDf = dvRefs.toDF("__dv_ref")
-          Some(raw.join(broadcast(refsDf),
+          Some(raw.join(refsDf,
             raw("__d_file") === refsDf("__dv_ref"), "left_anti"))
         }
       }
@@ -2501,7 +2501,7 @@ object IcebergSource {
           val refsDf = refs.toSeq.toDF("__ref")
           Some(spark.read.parquet(oldPqFiles.map(_.path): _*)
             .select(normPath(col("file_path")).as("f"), col("pos").cast("long").as("p"))
-            .join(broadcast(refsDf), col("f") === col("__ref"), "left_semi"))
+            .join(refsDf, col("f") === col("__ref"), "left_semi"))
         }
       val merged0 = (Seq(cached.toDF()) ++ oldDvPos.toSeq ++ oldPqPos.toSeq)
         .reduce(_ unionByName _)

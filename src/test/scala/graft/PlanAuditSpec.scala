@@ -1,7 +1,13 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+
 import graft.catalog.Catalog
-import graft.core.Descriptor
+import graft.core.{CacheScope, Descriptor}
 import graft.expr.Expr
 
 /** Plan-quality regression tests: the `.explain` discipline encoded as
@@ -10,8 +16,70 @@ import graft.expr.Expr
   * of shipping a 100 TB regression. */
 class PlanAuditSpec extends SparkSpec {
 
-  private def planOf(name: String): String =
-    Catalog.byName(name).run(spark, sf("sf0.01")).queryExecution.executedPlan.toString
+  /** The final adaptive plan of a catalog query at sf0.01, read after
+    * the query has run to a noop sink. */
+  private def planOf(name: String): String = CacheScope {
+    finalPlan(Catalog.byName(name).run(spark, sf("sf0.01"))).toString
+  }
+
+  /** Runs `df`'s own plan, dropping every row (the noop sink's work),
+    * and returns the plan that ran: for an adaptive plan, its final
+    * plan (`isFinalPlan=true`, without the initial plan), with the
+    * query stages, reused exchanges and metrics of the run. */
+  private def finalPlan(df: DataFrame): SparkPlan = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("plan audit")) {
+      qe.executedPlan.execute().foreach(_ => ())
+    }
+    qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+  }
+
+  /** Every broadcast exchange in `p` (an executed plan): through
+    * adaptive plans, query stages, cached relations and subqueries. A
+    * reused exchange counts where it was built. */
+  private def broadcasts(p: SparkPlan): Seq[BroadcastExchangeExec] = {
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _: ReusedExchangeExec => Nil
+      case _ => p.children ++ p.subqueries
+    }
+    (p match { case b: BroadcastExchangeExec => Seq(b); case _ => Nil }) ++ inner.flatMap(broadcasts)
+  }
+
+  test("every forced broadcast is over a bounded side") {
+    // with the planner's size guard off, only forced hints broadcast
+    def noAuto[A](body: => A): A =
+      try graft.core.Sessions.withConfs(spark,
+        Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"))(CacheScope(body))
+      finally graft.core.Scratch.reclaim()
+    // rows built per broadcast, keyed by the built side's columns (and
+    // their rank among exchanges with the same columns)
+    def builtRows(q: graft.core.QueryDef, dir: String): Map[String, Long] = noAuto {
+      broadcasts(finalPlan(q.run(spark, dir))).groupBy(_.output.map(_.name).mkString(","))
+        .toSeq.flatMap { case (cols, bs) =>
+          bs.zipWithIndex.map { case (b, i) => s"[$cols]#$i" -> b.metrics("numOutputRows").value }
+        }.toMap
+    }
+    val hinted = Catalog.all.filter(q =>
+      noAuto(broadcasts(q.run(spark, sf()).queryExecution.executedPlan).nonEmpty))
+    assert(hinted.nonEmpty, "no catalog query forces a broadcast")
+    info(s"${hinted.size} queries force a broadcast: ${hinted.map(_.name).mkString(", ")}")
+    val tier = java.nio.file.Files.createTempDirectory("graft_tier_x10").toFile
+    try {
+      graft.tools.ScaleStage.stage(spark, sf("sf0.01"), tier.toString, 10)
+      val grown = for {
+        q <- hinted
+        x1 = builtRows(q, sf("sf0.01"))
+        (side, rows) <- builtRows(q, tier.toString) if rows > 2 * x1.getOrElse(side, 0L)
+      } yield s"${q.name} $side: ${x1.getOrElse(side, 0L)} rows at 1x, $rows at 10x"
+      assert(grown.isEmpty, grown.mkString("\n"))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tier)
+  }
 
   test("scan queries push filters and prune columns at the parquet scan") {
     val p = planOf("q_scan_project_filter")

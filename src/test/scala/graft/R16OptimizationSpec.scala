@@ -24,6 +24,38 @@ class R16OptimizationSpec extends SparkSpec {
     assert(math.abs(rho - ref) < 1e-6, s"rho $rho vs rank-window reference $ref")
   }
 
+  test("spearman: building the frame starts no Spark job") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val (build, flush) = ("spearman-spec-build", "spearman-spec-flush")
+    val built = new AtomicInteger
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.job.description")) match {
+          case Some(`build`) => built.incrementAndGet()
+          case Some(`flush`) => flushed.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription(build)
+      graft.catalog.RankStatsQueries.spearmanDf(spark, sf())
+      // listener events arrive in order: once the marker job is seen,
+      // every job the build started has been counted
+      sc.setJobDescription(flush)
+      sc.parallelize(Seq(1), 1).count()
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener events did not arrive")
+      assert(built.get == 0, s"${built.get} Spark jobs started while building")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("Par.awaitAll: results keep submission order and jobs inherit the label") {
     spark.sparkContext.setJobDescription("awaitall-spec")
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -89,7 +121,7 @@ class R16OptimizationSpec extends SparkSpec {
     before.foreach { case (k, v) => assert(s.conf.getOption(k) == v, k) }
   }
 
-  test("shortest_paths: gated-broadcast BFS matches the recursive-CTE result shape") {
+  test("shortest_paths: BFS matches the recursive-CTE result shape") {
     // the oracle gate proves value equality; this guards the loop's
     // counting rewrite (count()-driven termination vs isEmpty)
     val rows = graft.catalog.GraphQueries.shortestPaths
