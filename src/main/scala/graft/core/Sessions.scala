@@ -14,6 +14,16 @@ import org.apache.spark.sql.SparkSession
   *   reference's plan-visible coercion discipline (SURVEY §1.2).
   * - AQE on: runtime shuffle coalescing + skew-join handling are the
   *   100 TB story for every shuffle we emit.
+  * - `file:` is [[NioLocalFileSystem]] (FileSystem API) and
+  *   [[NioLocalFs]] (FileContext, which Structured Streaming's
+  *   checkpoint files use). Hadoop has no native IO library here, so the
+  *   stock local file system forks `chmod` for every file and directory
+  *   a write creates and `readlink` for every FileContext rename; these
+  *   do both through java.nio, so the mkdirs, creates and renames of a
+  *   package write, a landing or a checkpoint commit start no process
+  *   (`LocalFsSpec` guards it). The implicit `file:` class was
+  *   Hive's `ProxyLocalFileSystem` (registered by `hive-exec`'s service
+  *   file), a stock `LocalFileSystem` underneath.
   */
 object Sessions {
   def local(cores: String, shufflePartitions: String): SparkSession = {
@@ -26,6 +36,8 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -134,8 +134,9 @@ object PackageWriter {
     * the drain's recaptured carryover: one write partitioned by
     * destination into `<dir>/_routed`, whose two partition directories
     * are then renamed to `<dir>/quarantine` and the carryover's
-    * directory. A write job has a fixed cost in directories, files and
-    * (on a local file system without native IO) forked `chmod`s; one
+    * directory. A write job has a fixed cost in the directories and
+    * files it creates and sets modes on (through java.nio on a local
+    * path, see [[graft.core.NioLocalFileSystem]], so none forks); one
     * job for both outputs pays it once. Its count and content hash are
     * observed on that write and returned in `carried`. */
   def write(df: DataFrame, quarantine: Option[DataFrame], dir: String,

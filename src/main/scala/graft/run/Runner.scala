@@ -158,7 +158,9 @@ object Runner {
     * directory, never the destination itself: the staged files are
     * probed there and renamed into the destination only on a verified
     * receipt. The destination receives exactly the bytes the package's
-    * evidence describes, with no Spark job. */
+    * evidence describes, with no Spark job. On a local path the copies'
+    * file modes are set through java.nio ([[graft.core.NioLocalFileSystem]]),
+    * so landing starts no process. */
   def land(spark: SparkSession, pkg: PackageWriter.PackageResult, targetDir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val data = new Path(s"${pkg.dir}/data")

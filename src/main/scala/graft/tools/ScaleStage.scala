@@ -21,7 +21,9 @@ import org.apache.spark.sql.functions._
   *    the dedup/shingle/vocabulary universes grow K× and cross-replica
   *    documents are NOT near-duplicates (a real 10× corpus is not ten
   *    copies of itself); supplier/part names get the same suffix so
-  *    edit-distance neighborhoods stay per-replica;
+  *    edit-distance neighborhoods stay per-replica, except a part name's
+  *    first token (its colour, a bounded domain that q_bloom_join's
+  *    `p_name LIKE 'red %'` dim filters on, so that dim grows K×);
   *  - embeddings perturb one coordinate by i·2⁻¹⁰ so LSH/ANN bucket
   *    structures grow K× rather than stacking identical vectors.
   *
@@ -57,11 +59,12 @@ object ScaleStage {
     val vMax = maxOf(t("embeddings"), "vec_id")
 
     def off(c: String, base: Long, i: Int): Column = col(c) + lit(base * i)
-    // per-replica token suffix; empty tokens (consecutive spaces) kept
-    def suffixText(c: String, i: Int): Column =
+    // per-replica suffix on tokens `from` onwards; empty tokens
+    // (consecutive spaces) kept
+    def suffixText(c: String, i: Int, from: Int = 0): Column =
       if (i == 0) col(c)
-      else array_join(transform(split(col(c), " "),
-        tk => when(tk === "", tk).otherwise(concat(tk, lit(s"_$i")))), " ")
+      else array_join(transform(split(col(c), " "), (tk, j) =>
+        when(tk === "" || j < from, tk).otherwise(concat(tk, lit(s"_$i")))), " ")
 
     def replicate(name: String)(f: (DataFrame, Int) => DataFrame): Unit = {
       val base = t(name)
@@ -80,7 +83,7 @@ object ScaleStage {
           if (i == 0) col("s_name") else concat(col("s_name"), lit(s"_$i"))))
     replicate("part")((df, i) =>
       df.withColumn("p_partkey", off("p_partkey", pMax, i))
-        .withColumn("p_name", suffixText("p_name", i)))
+        .withColumn("p_name", suffixText("p_name", i, from = 1)))
     replicate("orders")((df, i) =>
       df.withColumn("o_orderkey", off("o_orderkey", oMax, i))
         .withColumn("o_custkey", off("o_custkey", cMax, i)))
