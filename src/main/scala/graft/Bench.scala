@@ -196,8 +196,7 @@ object Bench {
     // than on tmpfs (OPTIMIZATION_r15.md batch 3: sink med 7.2M vs
     // 5.1M rows/s) — the r9 shm choice was measured on a different
     // host and is reversed here, explicitly, as a measurement-
-    // environment fix (same timed work, same methodology;
-    // SPARK_GRAFT_SCRATCH overrides for A/B).
+    // environment fix (same timed work, same methodology).
     val sinkDir = java.nio.file.Files.createTempDirectory(
       graft.core.Scratch.root, "graft_bench").toString
 

@@ -54,8 +54,6 @@ private[graft] object FastLanes {
   @volatile private[graft] var forceOff: Boolean =
     java.lang.Boolean.getBoolean("graft.simd.disabled")
 
-  def simdOn: Boolean = simdStatus.isRight && !forceOff
-
   /** One-line status for bench artifacts / logs. */
   def describe: String = simdStatus match {
     case Right(lanes) if !forceOff => s"vector-api on ($lanes), bitset lanes"

@@ -23,9 +23,4 @@ object QueryDef {
   def sqlBacked(name: String, oracle: String, doc: String = "")(
       run: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, run, Some(oracle), doc)
-
-  /** Non-SQL-expressible op → driver records a weaker rows-only check. */
-  def rowsOnly(name: String, doc: String = "")(
-      run: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, run, None, doc)
 }

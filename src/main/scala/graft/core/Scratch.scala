@@ -17,21 +17,14 @@ package graft.core
   *    (q_stream_sliding 4.3s shm vs 5.3s tmp) — `ckptDir()` stays
   *    shm-backed.
   *
-  * `SPARK_GRAFT_SCRATCH` overrides the bulk root for A/B probes.
-  *
   * This is NOT cross-run caching: each invocation creates a fresh
   * directory, writes its fixture from the parquet inputs, reads it back
   * within the same query, and the JVM-exit hook deletes it.
   */
 object Scratch {
-  private val tmpdir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-
-  /** Bulk-write scratch root (disk tmpdir by default — see above). */
-  val root: java.nio.file.Path = {
-    val pick = sys.env.get("SPARK_GRAFT_SCRATCH")
-      .map(java.nio.file.Paths.get(_)).getOrElse(tmpdir)
-    if (java.nio.file.Files.isWritable(pick)) pick else tmpdir
-  }
+  /** Bulk-write scratch root: the disk tmpdir (see above);
+    * `-Djava.io.tmpdir` moves it. */
+  val root: java.nio.file.Path = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
 
   /** Streaming-checkpoint root (RAM-backed when available). */
   val ckptRoot: java.nio.file.Path = {

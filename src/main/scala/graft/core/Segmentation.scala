@@ -1,7 +1,5 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
-
 import graft.core.CanonicalJson._
 
 /** Segment sizing + recording (cdf: crates/cdf-engine/src/
@@ -9,10 +7,11 @@ import graft.core.CanonicalJson._
   * target 4 Mi rows / 256 MiB; sizes are RECORDED and replay uses the
   * recordings, VISION.md:362-364).
   *
-  * Spark-first: segment count maps to output partitions. The recording
-  * lives beside the package (`segments.json`), deliberately OUTSIDE
-  * the identity manifest — partition layout is an execution detail and
-  * must not perturb the package hash (jobs invariance).
+  * Spark-first: a segment is a written part file, capped per file by
+  * [[maxRecordsPerFile]]. The recording lives beside the package
+  * (`segments.json`), deliberately OUTSIDE the identity manifest —
+  * file layout is an execution detail and must not perturb the
+  * package hash (jobs invariance).
   */
 object Segmentation {
 
@@ -21,21 +20,6 @@ object Segmentation {
 
   final case class Recording(segments: Int, rowCount: Long,
       approxBytes: Long, targets: Targets)
-
-  /** Plan segment count from row count + estimated width. */
-  def plan(rowCount: Long, approxRowBytes: Long, t: Targets = Targets()): Int = {
-    val byRows = math.ceil(rowCount.toDouble / t.maxRowsPerSegment).toLong
-    val byBytes = math.ceil(rowCount.toDouble * approxRowBytes / t.maxBytesPerSegment).toLong
-    math.max(1L, math.max(byRows, byBytes)).toInt
-  }
-
-  /** Apply planned segmentation to a write (repartition to N). */
-  def segmented(df: DataFrame, rowCount: Long, approxRowBytes: Long,
-      t: Targets = Targets()): (DataFrame, Recording) = {
-    val n = plan(rowCount, approxRowBytes, t)
-    (df.repartition(n),
-      Recording(n, rowCount, rowCount * approxRowBytes, t))
-  }
 
   /** Per-file row cap that enforces BOTH targets without knowing the
     * row count up front: the bytes target divided by the estimated row

@@ -22,9 +22,7 @@ import org.apache.spark.sql.functions._
   *    confirm join bounds correctness either way). The mostly-novel
   *    incoming majority is admitted by the broadcast sketch WITHOUT
   *    any shuffle; only bloom-positive candidates (true dups + fpp
-  *    false alarms) pay the exact anti-join against corpus keys. For
-  *    recurring ingestion the corpus key index is the bucketed-table
-  *    shape (pkg/Bucketing) so even the confirm join is exchange-free.
+  *    false alarms) pay the exact anti-join against corpus keys.
   */
 object CorpusOps {
 

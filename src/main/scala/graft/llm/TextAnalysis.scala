@@ -94,11 +94,8 @@ object TextAnalysis {
 
   /** Quality metrics + a bounded [0,1] score (length, lexical
     * diversity, punctuation density) — the usual pre-training corpus
-    * filters, exactly reproducible in any engine. */
-  def qualityColumns(text: Column): Seq[(String, Column)] =
-    qualityFromTokens(wsTokens(text), text)
-
-  /** Metrics from a pre-computed token array (stage the split once). */
+    * filters, exactly reproducible in any engine — from a pre-computed
+    * token array `w` of `text` (stage the split once). */
   def qualityFromTokens(w: Column, text: Column): Seq[(String, Column)] = {
     val nWords = size(w)
     val nUniq = size(array_distinct(w))

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Per-column batch/segment statistics (cdf: crates/cdf-kernel/src/
   * statistics.rs:32-69 `BatchStats`/`ColumnStats`, compute :517-560,
@@ -15,13 +14,6 @@ import org.apache.spark.sql.types._
   * the pruning manifest.
   */
 object StatsOps {
-
-  /** Exact-sum helper: doubles are accumulated as DECIMAL so the result
-    * is independent of Spark's partition/summation order, then cast
-    * back to DOUBLE (bit-stable across engines — SURVEY §7.4.1
-    * determinism under parallelism). */
-  def exactSum(c: Column, precision: Int = 28, scale: Int = 10): Column =
-    sum(c.cast(DecimalType(precision, scale))).cast(DoubleType)
 
   /** The full stats aggregate list (row_count + per-column
     * nulls/min/max) — public so callers can FUSE these into an

@@ -10,11 +10,10 @@ import graft.core.GraftError
   * `plan_commit → begin → write → finalize(→Receipt) | abort`
   * (cdf: VISION.md:901-915; destination crates cdf-dest-*).
   *
-  * Local formats (Parquet/CSV/NDJSON) are implemented; JDBC-backed
-  * destinations (Postgres/SQLite/ClickHouse in the reference) follow
-  * the same trait with `df.write.jdbc` + staging-table merge — not
-  * constructible in this zero-egress container, so the seam is the
-  * deliverable (SURVEY §2.2 mapping column).
+  * Local formats (Parquet/CSV/NDJSON/ORC) are implemented here. The
+  * JDBC destination (Postgres/SQLite/ClickHouse in the reference) is
+  * [[graft.sources.Jdbc.mergeInto]]: a stage-table write plus one SQL
+  * MERGE, run against embedded Derby (SURVEY §2.2 mapping column).
   *
   * Every change to a destination is stage → verify → publish
   * ([[staged]]): the output is written to a sibling stage directory,
@@ -83,10 +82,6 @@ object Destinations {
       require(fs.rename(tmp, dest), s"swap failed: could not move $tmp into place")
       if (hadPrior) fs.delete(old, true)
     }
-
-  /** Atomic replace of the table at `path` with `df`, through [[swap]]. */
-  def replaceBySwap(df: DataFrame, path: String, fmt: Format): Unit =
-    swap(df.sparkSession, path) { tmp => fmt.write(df, tmp); ((), true) }
 
   /** Replace the table at `path` with `df` through [[swap]] and return
     * its receipt: ONE count + content-hash probe of the staged output

@@ -68,8 +68,9 @@ object Runner {
     * runtime_chaos/ injects faults between pipeline stages).
     * `beforeReceiptProbe` receives the run's stage dir between the
     * staged write and the receipt probe, so a spec can prove a staged
-    * output that lost rows is refused and never published. Never set in
-    * production paths. */
+    * output that lost rows is refused and never published;
+    * `CdcLogRunner.drainBulk` passes its `units/` root at the same point.
+    * Never set in production paths. */
   object ChaosHooks {
     @volatile var beforeReceiptProbe: Option[String => Unit] = None
   }

@@ -98,21 +98,6 @@ object Decompress {
     }.count(): Unit
   }
 
-  /** Compress every part file under `srcDir` into `dstDir`, one task
-    * per file — the parallel write-side mirror of the one-task-per-
-    * archive read path (driver-side loops serialize what a cluster
-    * would fan out). */
-  def compressDir(spark: SparkSession, srcDir: String, dstDir: String,
-      codec: String): Unit = {
-    new java.io.File(dstDir).mkdirs()
-    val files = new java.io.File(srcDir).listFiles()
-      .filter(_.getName.startsWith("part-")).map(_.getPath).toSeq
-    spark.sparkContext.parallelize(files, math.max(1, files.length)).foreach { p =>
-      val name = new java.io.File(p).getName
-      compressFile(p, s"$dstDir/$name.$codec", codec)
-    }
-  }
-
   /** Compress a local file with `codec` (test/fixture helper — the
     * write path; executors use the same streams). */
   def compressFile(src: String, dst: String, codec: String): Unit = {

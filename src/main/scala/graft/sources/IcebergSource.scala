@@ -213,8 +213,6 @@ object IcebergSource {
               (if (refs.isEmpty) "(none)" else refs.keys.toSeq.sorted.mkString(", "))))
     /** true once more than one schema exists (any rename/add/drop). */
     def schemaEvolved: Boolean = schemasById.size > 1
-    def sequenceOf(snapshotId: Long): Long =
-      snapshots.find(_.id == snapshotId).map(_.sequenceNumber).getOrElse(0L)
     /** identity-transform source columns — the subset the WRITER can
       * lay out (commitAppend inherits these). */
     def partitionFields: Seq[String] =

@@ -219,10 +219,6 @@ final class PgWireClient(host: String, port: Int, user: String, database: String
     }
   }
 
-  /** whole-payload convenience over [[copyOutStream]] (tests; bounded
-    * results). Scans go through the streaming form. */
-  def copyOutBinary(sql: String): Array[Byte] = copyOutStream(sql).readAllBytes()
-
   override def close(): Unit = {
     try {
       out.writeByte('X') // Terminate

@@ -1,11 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Ledger, Position}
 import graft.operators.MergeOps
 import graft.pkg.PackageWriter
+import graft.run.Runner
 
 /** End-to-end CDC drain over a durable (parquet-backed) change log:
   * plan settlement units from per-transaction summaries, deliver each
@@ -18,9 +19,10 @@ import graft.pkg.PackageWriter
   * 100 TB shape: only the per-transaction SUMMARIES (txId, ops, bytes)
   * are collected to the driver to run the packing rule — a bounded
   * metadata stream, thousands of structs per settlement window, never
-  * payload. Each unit then reads the log with a contiguous `txCol`
-  * range predicate, which reaches the parquet scan (row-group pruning
-  * on txCol min/max; on a time/tx-partitioned log, partition pruning).
+  * payload. The drain then reads the log with the contiguous `txCol`
+  * range of the undelivered units, a predicate that reaches the parquet
+  * scan (row-group pruning on txCol min/max; on a time/tx-partitioned
+  * log, partition pruning).
   */
 object CdcLogRunner {
 
@@ -76,11 +78,6 @@ object CdcLogRunner {
     }
   }
 
-  def planUnits(log: DataFrame, txCol: String, policy: Settlement.Policy,
-      bytesCol: Option[String] = None, fallbackBytesPerOp: Long = 64L,
-      budget: PlanBudget = PlanBudget()): Seq[UnitPlan] =
-    packPlans(txnSummaries(log, txCol, bytesCol, fallbackBytesPerOp, budget), policy)
-
   /** Policy that yields ~`targetUnits` units for this log (op-ceiling
     * split of the observed total; byte ceiling effectively off). Used
     * by the catalog query so unit count stays flat across scale
@@ -100,44 +97,21 @@ object CdcLogRunner {
       case None => Long.MinValue
     }
 
-  /** Deliver every unit past the committed cursor. `killAfterUnits`
-    * simulates a crash for the chaos spec: the runner stops cold after
-    * N successful unit commits. Returns results for units delivered in
-    * THIS call. */
-  def drain(log: DataFrame, txCol: String, outDir: String, ledger: Ledger,
-      resource: String, plans: Seq[UnitPlan],
-      killAfterUnits: Option[Int] = None): Seq[UnitResult] = {
-    val spark = log.sparkSession
-    val resumeTx = committedTx(ledger, resource, txCol)
-    val results = Seq.newBuilder[UnitResult]
-    var delivered = 0
-    plans.iterator
-      .filter(_.toTx > resumeTx) // exactly-once: committed units never re-deliver
-      .takeWhile(_ => killAfterUnits.forall(delivered < _))
-      .foreach { u =>
-        val slice = log.filter(col(txCol) >= u.fromTx && col(txCol) <= u.toTx)
-        val pkgDir = s"$outDir/unit_${u.unitId}"
-        val pkg = PackageWriter.write(slice, None, pkgDir, resource,
-          planHash = s"cdc-unit-${u.unitId}:${u.fromTx}-${u.toTx}")
-        DrainEpoch.settle(spark, ledger, resource, scope(resource), pkg,
-          Some(Position.Cursor(txCol, u.toTx)))
-        results += UnitResult(u.unitId, u.fromTx, u.toTx, pkg.rows, pkg.packageHash)
-        delivered += 1
-      }
-    results.result()
-  }
-
-  /** Bounded-backfill drain: ONE pass over the log (the repo's
-    * one-source-scan law) instead of one filtered scan per unit. A
-    * single dynamic-partition write lands every undelivered unit's
-    * data; ONE grouped aggregation computes every unit's row count +
-    * content hash + stats (the segment-stats manifest); then units
-    * settle through the ledger in commit order, each verified by an
-    * independent probe of its (tiny) package dir. Committed units'
-    * directories are untouched (dynamic overwrite only rewrites
-    * partitions present in the write). The sequential [[drain]] stays
-    * for true streaming delivery; this is the shape a 100 TB backfill
-    * wants. */
+  /** Deliver every unit past the committed cursor in ONE pass over the
+    * log (the repo's one-source-scan law), not one filtered scan per
+    * unit. A single dynamic-partition write lands every undelivered
+    * unit's data in `units/__unit=K`; ONE grouped aggregation of the
+    * source slice that write consumed gives every unit's expected row
+    * count + content hash + stats (the segment-stats manifest); ONE
+    * probe of the written `units/`, read with the written schema, counts
+    * and hashes what landed. Units then settle through the ledger in
+    * commit order, each committed only when its probe matches its
+    * expectation; a mismatch throws [[graft.core.GraftError.Destination]]
+    * and commits nothing from that unit on. Committed units' directories
+    * are untouched (dynamic overwrite only rewrites partitions present in
+    * the write). `killAfterUnits` simulates a crash for the chaos spec:
+    * the runner stops cold after N unit commits. Returns results for
+    * units delivered in THIS call. */
   def drainBulk(log: DataFrame, txCol: String, outDir: String, ledger: Ledger,
       resource: String, plans: Seq[UnitPlan],
       killAfterUnits: Option[Int] = None): Seq[UnitResult] = {
@@ -153,33 +127,26 @@ object CdcLogRunner {
       acc.when(col(txCol) <= u.toTx, lit(u.unitId))
     }
     val unitsRoot = s"$outDir/units"
-    log.filter(col(txCol) >= todo.head.fromTx && col(txCol) <= todo.last.toTx)
+    val slice = log.filter(col(txCol) >= todo.head.fromTx && col(txCol) <= todo.last.toTx)
       .withColumn("__unit", unitCol)
-      .write.mode("overwrite")
+    slice.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("__unit")
       .parquet(unitsRoot)
 
-    // ONE grouped aggregation: per-unit row count + content hash + the
-    // full column-stats profile (receipt inputs and the segment-stats
-    // manifest come out of the same pass)
-    def groupedCountHashStats(withStats: Boolean) = {
-      val written = spark.read.parquet(unitsRoot)
-        .filter(col("__unit").isin(todo.map(_.unitId): _*))
-      val dataCols = written.columns.filterNot(_ == "__unit").toSeq
-      val statAggs =
-        if (withStats) graft.operators.StatsOps.statsAggs(dataCols) else Seq.empty
-      val agg = written
-        .groupBy("__unit")
-        .agg(count(lit(1)).as("__rows"),
-          (sum(PackageWriter.rowHash(dataCols)).as("__hash_sum") +: statAggs): _*)
-      (agg, dataCols)
-    }
-    val (fused, dataCols) = groupedCountHashStats(withStats = true)
+    val dataCols = slice.columns.filterNot(_ == "__unit").toSeq
+    def countAndHashByUnit(df: DataFrame, more: Seq[Column]): DataFrame =
+      df.groupBy("__unit").agg(count(lit(1)).as("__rows"),
+        (sum(PackageWriter.rowHash(dataCols)).as("__hash_sum") +: more): _*)
+    def byUnit(rows: Array[Row]): Map[Int, (Long, String)] =
+      rows.map(r => r.getInt(0) -> (r.getLong(1), PackageWriter.hashAt(r, 2))).toMap
+
+    // ONE grouped aggregation of the source slice: per-unit row count +
+    // content hash + the full column-stats profile (receipt expectations
+    // and the segment-stats manifest come out of the same pass)
+    val fused = countAndHashByUnit(slice, graft.operators.StatsOps.statsAggs(dataCols))
     val fusedRows = fused.collect()
-    val perUnit = fusedRows
-      .map(r => r.getInt(0) -> (r.getLong(1), PackageWriter.hashAt(r, 2)))
-      .toMap
+    val perUnit = byUnit(fusedRows)
     // segment-stats manifest from the same pass: the collected rows,
     // written partitioned by segment so a resumed delivery adds its
     // units without clobbering committed ones
@@ -193,10 +160,10 @@ object CdcLogRunner {
     // independent receipt probe: ONE re-read of the delivered files
     // verifies every unit (same fidelity as per-unit probes, U−1 fewer
     // jobs)
-    val (probe, _) = groupedCountHashStats(withStats = false)
-    val probed = probe.collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), PackageWriter.hashAt(r, 2)))
-      .toMap
+    Runner.ChaosHooks.beforeReceiptProbe.foreach(_(unitsRoot))
+    val probed = byUnit(countAndHashByUnit(
+      spark.read.schema(slice.schema).parquet(unitsRoot)
+        .filter(col("__unit").isin(todo.map(_.unitId): _*)), Nil).collect())
 
     val results = Seq.newBuilder[UnitResult]
     var delivered = 0
@@ -218,16 +185,9 @@ object CdcLogRunner {
     results.result()
   }
 
-  /** Materialized view after ordered apply of all delivered units:
-    * last op per key in (tx, order-cols) order; terminal delete
-    * removes. */
-  def applied(spark: SparkSession, outDir: String, keys: Seq[String], opCol: String,
-      txCol: String, orderCols: Seq[String]): DataFrame = {
-    val units = spark.read.parquet(s"$outDir/unit_*/data")
-    MergeOps.cdcApply(units, keys, opCol, txCol +: orderCols)
-  }
-
-  /** `applied` for the bulk layout (`units/__unit=K`). */
+  /** Materialized view after ordered apply of all delivered units
+    * (`units/__unit=K`): last op per key in (tx, order-cols) order;
+    * terminal delete removes. */
   def appliedBulk(spark: SparkSession, outDir: String, keys: Seq[String], opCol: String,
       txCol: String, orderCols: Seq[String]): DataFrame = {
     val units = spark.read.parquet(s"$outDir/units").drop("__unit")

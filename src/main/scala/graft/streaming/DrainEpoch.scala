@@ -104,7 +104,7 @@ object DrainEpoch {
     * settle step; its receipt is the package's read-back, plus the
     * epoch's carryover record if it has one. Returns the committed
     * entry: this call's, or the earlier one of a replayed package. */
-  private[streaming] def settle(spark: SparkSession, ledger: Ledger, resource: String,
+  private def settle(spark: SparkSession, ledger: Ledger, resource: String,
       scope: String, pkg: PackageWriter.PackageResult, position: Option[Position],
       carryover: Option[Carryover] = None): ledger.Entry =
     ledger.settle(resource, scope, pkg.packageHash, position) { _ =>

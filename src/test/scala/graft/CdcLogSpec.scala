@@ -10,8 +10,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
-import graft.core.{Ledger, Position}
+import graft.core.{GraftError, Ledger, Position}
 import graft.operators.MergeOps
+import graft.pkg.PackageWriter
+import graft.run.Runner
 import graft.sources.dsv2.{CdcLogRegistry, TxnOffset}
 import graft.streaming.{CdcLogRunner, Settlement}
 
@@ -125,37 +127,47 @@ class CdcLogSpec extends SparkSpec {
     }
   }
 
-  test("ledger drain: kill between units, resume from typed cursor, applied state identical") {
+  /** The log written as 4 parquet files and read back, with its
+    * settlement plans. */
+  private def parquetLog(): (DataFrame, Seq[CdcLogRunner.UnitPlan]) = {
     val logDir = s"${tmpDir()}/log"
     spark.createDataFrame(logRows.asJava, schema)
       .repartition(4).write.parquet(logDir)
     val log = spark.read.parquet(logDir)
+    (log, CdcLogRunner.packPlans(
+      CdcLogRunner.txnSummaries(log, "tx_id", fallbackBytesPerOp = 10L), policy))
+  }
+
+  /** Every delivered unit's rows (`units/__unit=K`), unit column dropped. */
+  private def delivered(outDir: String): DataFrame =
+    spark.read.parquet(s"$outDir/units").drop("__unit")
+
+  test("ledger drain: kill between units, resume from typed cursor, applied state identical") {
+    val (log, plans) = parquetLog()
     val outDir = tmpDir()
     val ledger = Ledger.at(outDir)
-    val plans = CdcLogRunner.planUnits(log, "tx_id", policy, fallbackBytesPerOp = 10L)
     assert(plans.map(p => (p.fromTx to p.toTx).toSet.intersect(txnSizes.map(_._1.toLong).toSet))
       == expectedUnits, "parquet-backed planning matches the packing rule")
 
-    val first = CdcLogRunner.drain(log, "tx_id", outDir, ledger, "chaos_res", plans,
+    val first = CdcLogRunner.drainBulk(log, "tx_id", outDir, ledger, "chaos_res", plans,
       killAfterUnits = Some(2))
     assert(first.size == 2)
     assert(ledger.resumePosition("chaos_res", "cdc:chaos_res")
       == Some(Position.Cursor("tx_id", plans(1).toTx)), "cursor parks at a unit boundary")
 
-    val second = CdcLogRunner.drain(log, "tx_id", outDir, ledger, "chaos_res", plans)
+    val second = CdcLogRunner.drainBulk(log, "tx_id", outDir, ledger, "chaos_res", plans)
     assert(first.map(_.unitId).toSet.intersect(second.map(_.unitId).toSet).isEmpty)
     assert((first ++ second).map(_.unitId) == plans.map(_.unitId), "all units delivered once")
-    assert(CdcLogRunner.drain(log, "tx_id", outDir, ledger, "chaos_res", plans).isEmpty,
+    assert(CdcLogRunner.drainBulk(log, "tx_id", outDir, ledger, "chaos_res", plans).isEmpty,
       "replay delivers nothing (exactly-once)")
 
     // delivered packages union == the log, exactly
-    val unioned = spark.read.parquet(s"$outDir/unit_*/data")
+    val unioned = delivered(outDir)
     assert(unioned.count() == logRows.size)
-    assert(graft.pkg.PackageWriter.contentHash(unioned)
-      == graft.pkg.PackageWriter.contentHash(log))
+    assert(PackageWriter.contentHash(unioned) == PackageWriter.contentHash(log))
 
     // ordered apply over delivered units == one-shot apply over the log
-    val viaUnits = CdcLogRunner.applied(spark, outDir, Seq("key"), "op", "tx_id", Seq("v"))
+    val viaUnits = CdcLogRunner.appliedBulk(spark, outDir, Seq("key"), "op", "tx_id", Seq("v"))
       .orderBy("key").collect().toSeq
     val oneShot = MergeOps.cdcApply(log, Seq("key"), "op", Seq("tx_id", "v"))
       .orderBy("key").collect().toSeq
@@ -163,36 +175,45 @@ class CdcLogSpec extends SparkSpec {
   }
 
   test("bulk drain: one source pass, same packages, same chaos law as sequential") {
-    val logDir = s"${tmpDir()}/log"
-    spark.createDataFrame(logRows.asJava, schema)
-      .repartition(4).write.parquet(logDir)
-    val log = spark.read.parquet(logDir)
+    val (log, plans) = parquetLog()
     val outDir = tmpDir()
     val ledger = Ledger.at(outDir)
-    val plans = CdcLogRunner.planUnits(log, "tx_id", policy, fallbackBytesPerOp = 10L)
+    val results = CdcLogRunner.drainBulk(log, "tx_id", outDir, ledger, "bulk_res", plans)
+    assert(results.map(_.unitId) == plans.map(_.unitId))
 
-    val first = CdcLogRunner.drainBulk(log, "tx_id", outDir, ledger, "bulk_res", plans,
-      killAfterUnits = Some(2))
-    assert(first.size == 2)
-    assert(ledger.resumePosition("bulk_res", "cdc:bulk_res")
-      == Some(Position.Cursor("tx_id", plans(1).toTx)))
-    val second = CdcLogRunner.drainBulk(log, "tx_id", outDir, ledger, "bulk_res", plans)
-    assert((first ++ second).map(_.unitId) == plans.map(_.unitId))
-    assert(CdcLogRunner.drainBulk(log, "tx_id", outDir, ledger, "bulk_res", plans).isEmpty)
-
-    // bulk layout delivers the identical content and receipts as the
-    // sequential drain: same per-unit rows and content hashes
-    val seqOut = tmpDir()
-    val seqLedger = Ledger.at(seqOut)
-    val seqResults = CdcLogRunner.drain(log, "tx_id", seqOut, seqLedger, "seq_res", plans)
-    val bulkByUnit = (first ++ second).map(r => r.unitId -> r.rows).toMap
-    assert(seqResults.map(r => r.unitId -> r.rows).toMap == bulkByUnit)
-    val bulkApplied = CdcLogRunner.appliedBulk(spark, outDir, Seq("key"), "op", "tx_id", Seq("v"))
-      .orderBy("key").collect().toSeq
-    val seqApplied = CdcLogRunner.applied(spark, seqOut, Seq("key"), "op", "tx_id", Seq("v"))
-      .orderBy("key").collect().toSeq
-    assert(bulkApplied == seqApplied)
+    // each unit holds exactly its tx range of the log: same rows, same
+    // content hash, and its committed package is the one returned
+    plans.zip(results).foreach { case (p, r) =>
+      val (rows, hash) = PackageWriter.countAndHash(
+        log.filter(col("tx_id").between(p.fromTx, p.toTx)))
+      assert(r.rows == rows && rows == p.ops, s"unit ${p.unitId}")
+      assert(PackageWriter.countAndHash(
+        spark.read.parquet(s"$outDir/units/__unit=${p.unitId}")) == (rows, hash), s"unit ${p.unitId}")
+    }
+    assert(ledger.entries().filter(e => e.resource == "bulk_res" && e.state == "committed")
+      .map(_.packageHash) == results.map(_.packageHash))
     // segment-stats manifest has one row per unit
     assert(spark.read.parquet(s"$outDir/stats").count() == plans.size)
+  }
+
+  test("bulk drain: a unit whose written files lost rows is refused; a clean re-run delivers every unit once") {
+    val (log, plans) = parquetLog()
+    val outDir = tmpDir()
+    val ledger = Ledger.at(outDir)
+    // between the write and the probe, one part file of the first unit goes
+    Runner.ChaosHooks.beforeReceiptProbe = Some { unitsRoot =>
+      val part = Files.list(Paths.get(unitsRoot, s"__unit=${plans.head.unitId}"))
+        .iterator().asScala.find(_.getFileName.toString.startsWith("part-")).get
+      Files.delete(part)
+    }
+    try intercept[GraftError.Destination](
+      CdcLogRunner.drainBulk(log, "tx_id", outDir, ledger, "lost_res", plans))
+    finally Runner.ChaosHooks.beforeReceiptProbe = None
+    assert(ledger.resumePosition("lost_res", "cdc:lost_res").isEmpty)
+    assert(!ledger.entries().exists(_.state == "committed"), "nothing committed for the unit")
+
+    val rerun = CdcLogRunner.drainBulk(log, "tx_id", outDir, ledger, "lost_res", plans)
+    assert(rerun.map(_.unitId) == plans.map(_.unitId), "every unit delivered once")
+    assert(PackageWriter.countAndHash(delivered(outDir)) == PackageWriter.countAndHash(log))
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import graft.contract.{ContractPolicy, DepthController, RowRule}
 import graft.core.{Descriptor, Ledger, SystemTables}
-import graft.operators.Reconciliation
 import graft.run.Runner
 
 /** The reference's conformance spine re-expressed (SURVEY §5): chaos
@@ -74,16 +73,6 @@ class ConformanceSpec extends SparkSpec {
     val a = validationInput(df, Sampled(0.3), cfg).count()
     val b = validationInput(df, Sampled(0.3), cfg).count()
     assert(a == b && a > 0 && a < df.count())
-  }
-
-  test("reconciliation counts explain the merged destination exactly") {
-    val base = graft.core.Tables(spark, sf(), "orders")
-    val stage = base.filter(org.apache.spark.sql.functions.col("o_orderkey") % 10 === 0)
-    val counts = Reconciliation.mergeCounts(base, stage, Seq("o_orderkey"))
-    assert(counts.inserted == 0) // all stage keys exist in base
-    assert(counts.updated == stage.count())
-    val merged = graft.operators.MergeOps.upsert(base, stage, Seq("o_orderkey"))
-    assert(counts.explains(merged.count()))
   }
 
   test("system tables: checkpoints + packages mount; drift report is clean after a run") {

@@ -9,12 +9,13 @@ class DestinationsSpec extends SparkSpec {
     val dir = tmpDir()
     val path = s"$dir/t"
     val v1 = graft.core.Tables(spark, sf(), "region")
-    Destinations.replaceBySwap(v1, path, Format.Parquet)
-    assert(spark.read.parquet(path).count() == v1.count())
+    val r1 = Destinations.commitWithReceipt(v1, path, Format.Parquet)
+    assert(spark.read.parquet(path).count() == v1.count() && r1.rows == v1.count())
     // second replace fully swaps content
     val v2 = v1.limit(2)
-    Destinations.replaceBySwap(v2, path, Format.Parquet)
-    assert(spark.read.parquet(path).count() == 2)
+    val r2 = Destinations.commitWithReceipt(v2, path, Format.Parquet)
+    assert(spark.read.parquet(path).count() == 2 && r2.rows == 2)
+    assert(r2.contentHash == graft.pkg.PackageWriter.contentHash(spark.read.parquet(path)))
     // no leftover swap dir
     assert(!new java.io.File(s"$path.__swap").exists())
   }

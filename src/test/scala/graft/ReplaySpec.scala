@@ -31,21 +31,23 @@ class ReplaySpec extends SparkSpec {
 
   test("segmentation: planned from targets, recorded beside the package, outside identity") {
     import Segmentation._
-    assert(plan(1000, 100) == 1)
-    assert(plan(10L * 1024 * 1024, 10) == 3) // rows-bound: 10Mi/4Mi
-    assert(plan(1024 * 1024, 1024) == 4) // bytes-bound: 1GiB/256MiB
+    assert(maxRecordsPerFile(10) == 4L * 1024 * 1024) // rows-bound: 256MiB/10 B > 4Mi rows
+    assert(maxRecordsPerFile(1024) == 256L * 1024) // bytes-bound: 256MiB/1KiB
+    assert(maxRecordsPerFile(1L << 40) == 1) // never below one row
+    val targets = Targets(maxRowsPerSegment = 500, maxBytesPerSegment = 1L << 40)
+    val cap = maxRecordsPerFile(64, targets)
+    assert(cap == 500)
     val dir = tmpDir()
-    val li = graft.core.Tables(spark, sf(), "orders")
-    val n = li.count()
-    val (seg, rec) = segmented(li, n, approxRowBytes = 64,
-      Targets(maxRowsPerSegment = 500, maxBytesPerSegment = 1L << 40))
-    assert(rec.segments == math.ceil(n / 500.0).toInt)
-    assert(seg.rdd.getNumPartitions == rec.segments)
+    val orders = graft.core.Tables(spark, sf(), "orders")
+    val capped = PackageWriter.write(orders, None, s"$dir/b", "r", "p", maxRecordsPerFile = cap)
+    val parts = new java.io.File(s"$dir/b/data").listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length > 1)
+    parts.foreach(f => assert(spark.read.parquet(f.getPath).count() <= 500, f.getName))
+    assert(capped.segments == parts.length)
+    val rec = Recording(capped.segments, capped.rows, capped.rows * 64, targets)
     writeRecording(dir, rec)
-    assert(readRecording(dir).contains(rec.segments))
-    // identity invariance: package hash same with and without segmentation
-    val h1 = PackageWriter.write(li, None, s"$dir/a", "r", "p").packageHash
-    val h2 = PackageWriter.write(seg, None, s"$dir/b", "r", "p").packageHash
-    assert(h1 == h2)
+    assert(readRecording(dir).contains(parts.length))
+    // identity invariance: package hash same with and without the cap
+    assert(PackageWriter.write(orders, None, s"$dir/a", "r", "p").packageHash == capped.packageHash)
   }
 }
